@@ -260,8 +260,6 @@ def _encode_blocks_vec(zz: np.ndarray) -> bytes:
     # DC: diff chain -> (symbol item, value-bits item) per block
     dc = zz[:, 0].astype(np.int64)
     diff = np.diff(dc, prepend=np.int64(0))
-    dsize = _BITLEN_LUT[np.abs(diff)]
-    dbits = np.where(diff > 0, diff, diff + (1 << dsize) - 1)
     # AC: nonzero positions; run/ZRL/EOB structure
     nz_b, nz_k = np.nonzero(zz[:, 1:])
     pos1 = nz_k.astype(np.int64) + 1          # 1-based zigzag index
@@ -274,6 +272,13 @@ def _encode_blocks_vec(zz: np.ndarray) -> bytes:
     run = pos1 - prev - 1
     zrl_n = run >> 4
     v = zz[nz_b, pos1].astype(np.int64)
+    peak = max(np.abs(diff).max(initial=0), np.abs(v).max(initial=0))
+    if peak >= len(_BITLEN_LUT):
+        raise ValueError(
+            f"JPEG coefficient or DC difference magnitude {peak} is outside"
+            f" the 16-bit baseline range (< {len(_BITLEN_LUT)})")
+    dsize = _BITLEN_LUT[np.abs(diff)]
+    dbits = np.where(diff > 0, diff, diff + (1 << dsize) - 1)
     asize = _BITLEN_LUT[np.abs(v)]
     abits = np.where(v > 0, v, v + (1 << asize) - 1)
     asym = ((run & 15) << 4) | asize

@@ -1,7 +1,15 @@
 """Similarity search over embeddings (SURVEY §2.4 D18, north-star):
-exact brute-force cosine top-k, IVF-bucketed ANN, sign-LSH ANN,
-PQ-compressed ANN (ADC + exact re-rank), cosine near-dup pairs, and
-SemDeDup-style semantic dedup.
+exact brute-force cosine top-k, the approximate (ANN) family, cosine
+near-dup pairs, and SemDeDup-style semantic dedup.
+
+Every ANN variant is filter-and-refine. Its candidate generator
+returns a _Cand: either (q_id, c_id) pairs with the query itself
+excluded, or a (q_id, cell) probe whose cells select every vector
+assigned to them. Generators never score. _rerank is the one
+refinement: the exact grid cosine of each candidate against its query,
+then the per-query top TOP_K (_topk). ann_recall_dashboard loops over
+the same generators (ANN_RECALL_VARIANTS), joining their candidates to
+one shared scored base instead of re-scoring per variant.
 
 Numeric discipline: the dot product and squared norms are accumulated
 in decimal(28,12) over bitwise-identical per-element double products,
@@ -10,19 +18,17 @@ so both engines compute the SAME number regardless of summation order
 Ranking uses the full-precision value; only display values are
 rounded.
 
-Design for 100 TB:
-- brute force: query set is broadcast; each partition scores its local
-  shard and emits only (query, candidate, score) — top-k via
-  window-filter, no global materialization of the score matrix.
-- IVF path (ann_ivf_topk): candidates restricted to the query's
-  partition cell (here the `label` column as the cell id); at real
-  scale the cell id comes from a trained coarse quantizer and the
-  table is partitioned/bucketed by it, turning ANN into a co-located
-  per-cell scan. The query semantic (exact top-k WITHIN the cell) is
-  itself exactly oracle-checkable.
+Design for 100 TB: the query set is broadcast; each partition scores
+its local shard and emits only (query, candidate, score) — top-k via
+window-filter, no global materialization of the score matrix. Cell
+probes join on the cell id, so with the table partitioned by cell each
+probe is a co-located, partition-pruned scan.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache, partial, reduce
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -78,104 +84,138 @@ def _cosine(qe: Column, ce: Column, qn: Column, cn: Column) -> Column:
     """NULL when either norm is zero: 0/0 would be NaN, which Spark
     ORDERS ABOVE every real cosine (a zero vector would become every
     query's rank-1 neighbor) and which ANSI mode then refuses to cast
-    to decimal in the display projection — killing all seven cosine
-    queries on the first all-zero embedding (review r10). NULL sorts
-    last under DESC in both engines, so zero vectors simply never
-    rank; every oracle carries the matching CASE WHEN guard."""
+    to decimal in the display projection. NULL sorts last under DESC
+    in both engines, so zero vectors simply never rank; every oracle
+    carries the matching CASE WHEN guard."""
     return F.when(qn * cn > 0, grid_dot(qe, ce) / (qn * cn))
 
 
-def _topk(scored: DataFrame) -> DataFrame:
-    """Shared top-k tail: rank candidates per query by exact cosine
-    (desc, c_id tie-break), keep TOP_K, round for display — the one
-    copy of the block that appeared verbatim in all six top-k queries
-    (review r10; a tie-break or rounding change now lands once).
-
-    Built as selectExpr strings (r16): the Window/withColumn/select
-    form cost ~14 py4j round-trips per call and this tail is built
-    12+ times per dashboard construction; the string form parses
-    JVM-side in 3 calls and analyzes to the IDENTICAL plan
-    (WindowGroupLimit still fires off the rk filter — plan-diffed
-    before landing)."""
+def _top_n(df: DataFrame, n: int, order: str, rank: str,
+           *keep: str) -> DataFrame:
+    """Per-query top-n: the rows whose row_number() over (PARTITION BY
+    q_id ORDER BY `order`) is <= n, projected to the `keep`
+    expressions. The rank filter is a constant, so Catalyst bounds
+    each partition with WindowGroupLimit before the q_id exchange.
+    SQL strings: three py4j calls however wide the order, where the
+    Window/Column form cost ~14."""
     return (
-        scored.selectExpr(
-            "q_id", "c_id",
-            "row_number() OVER (PARTITION BY q_id"
-            " ORDER BY cos DESC, c_id) AS rk",
-            "cos")
-        .where(f"rk <= {TOP_K}")
-        .selectExpr("q_id", "c_id", "rk",
-                    f"cast(round(cast(cos AS {_DEC}), 6)"
-                    " AS double) AS cos")
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY q_id"
+                           f" ORDER BY {order}) AS {rank}")
+        .where(f"{rank} <= {n}")
+        .selectExpr(*keep)
     )
+
+
+def _topk(scored: DataFrame) -> DataFrame:
+    """The refinement's tail: rank (q_id, c_id, cos) candidates by
+    exact cosine (desc, c_id tie-break), keep TOP_K, round for
+    display."""
+    return _top_n(scored, TOP_K, "cos DESC, c_id", "rk",
+                  "q_id", "c_id", "rk",
+                  f"cast(round(cast(cos AS {_DEC}), 6) AS double) AS cos")
+
+
+def _side(embn: DataFrame, id_: str, e: str, n: str,
+          *extra: str) -> DataFrame:
+    """One side of a pair join over a normed embeddings relation:
+    vec_id, embedding and norm renamed to `id_`, `e`, `n`, plus any
+    `extra` passthrough columns such as the cell id."""
+    return embn.selectExpr(f"vec_id AS {id_}", *extra,
+                           f"embedding AS {e}", f"norm AS {n}")
 
 
 def _qc_frames(embn: DataFrame, *c_extra: str
                ) -> tuple[DataFrame, DataFrame]:
-    """(q, c): the query-side (vec_id < N_QUERIES -> q_id/qe/qn) and
-    candidate-side (c_id/ce/cn, plus any `c_extra` passthrough
-    columns such as the cell id) projections over a normed embeddings
-    relation — the shared HEAD of every cosine variant, factored for
-    the same reason the shared TAIL became _topk (r14 review: the
-    8-line pair was restated in ten functions). selectExpr strings
-    for the same py4j reason as _topk."""
-    q = embn.where(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS q_id", "embedding AS qe", "norm AS qn")
-    c = embn.selectExpr(
-        "vec_id AS c_id", *c_extra, "embedding AS ce", "norm AS cn")
-    return q, c
+    """(q, c): the query side (vec_id < N_QUERIES -> q_id/qe/qn) and
+    the candidate side (c_id/ce/cn plus `c_extra`)."""
+    return (_side(embn.where(f"vec_id < {N_QUERIES}"), "q_id", "qe", "qn"),
+            _side(embn, "c_id", "ce", "cn", *c_extra))
+
+
+def _all_pairs(embn: DataFrame, *c_extra: str) -> DataFrame:
+    """(q_id, c_id, *c_extra, cos) for every query against every other
+    vector: the brute-force scored relation behind knn_cosine_topk,
+    hybrid_rrf_topk's dense pool and the dashboard's shared base."""
+    q, c = _qc_frames(embn, *c_extra)
+    return (
+        F.broadcast(q)
+        .crossJoin(c)
+        .where(F.col("q_id") != F.col("c_id"))
+        .select("q_id", "c_id", *c_extra,
+                _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
+                .alias("cos"))
+    )
+
+
+class _Cand(NamedTuple):
+    """A candidate generator's output.
+
+    `rel` is either (q_id, c_id) pairs with the query excluded
+    (on="c_id"), or a (q_id, <on>) probe selecting every vector whose
+    `on` cell it lists. `src` is the normed embeddings relation the
+    re-rank projects q and c from; it carries the `on` column. `cells`
+    builds the (c_id, <on>) assignment when `on` is not a column of
+    the embeddings table (only the dashboard calls it). `probe` is the
+    (q_id, cell) relation whose rows the dashboard reports as
+    n_probed_cells."""
+    rel: DataFrame
+    src: DataFrame
+    on: str = "c_id"
+    cells: Callable[[], DataFrame] | None = None
+    probe: DataFrame | None = None
+
+
+def _inline(_key: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """A standalone query's `share`: every sub-relation is built where
+    it is used. The dashboard passes a memoizing, checkpointing one."""
+    return build()
+
+
+def _score(g: _Cand) -> DataFrame:
+    """(q_id, c_id, cos): the exact grid cosine of every candidate.
+    One join order for every generator: candidates join the c side on
+    `on`, then the broadcast query side on q_id. A caller wanting a
+    broadcast candidate side passes F.broadcast(rel). Self-exclusion
+    is needed for probes; for pairs the generator already applied it
+    and Catalyst prunes the repeat from the child's constraints."""
+    q, c = _qc_frames(g.src, *(() if g.on == "c_id" else (g.on,)))
+    return (
+        g.rel.join(c, g.on)
+        .join(F.broadcast(q), "q_id")
+        .where("q_id != c_id")
+        .select("q_id", "c_id",
+                _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
+                .alias("cos"))
+    )
+
+
+def _rerank(g: _Cand) -> DataFrame:
+    """Exact top-k over a generator's candidates."""
+    return _topk(_score(g))
 
 
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for each query vector
     (vec_id < 8) over the whole table, self excluded."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    return _topk(_all_pairs(_with_norm(emb)))
 
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q, c = _qc_frames(emb)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+
+def _gen_ivf(spark: SparkSession, sf_dir: str,
+             share=_inline) -> _Cand:
+    """Probe: each query's own `label` cell."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    probe = emb.where(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id AS q_id", "label")
+    return _Cand(F.broadcast(probe), _with_norm(emb), "label",
+                 probe=probe)
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed ANN: exact top-10 within the query's cell (label).
     Probing 1 cell of ~n/10 candidates — the 100 TB shape where cells
     are partition keys and each probe is a co-located scan."""
-
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("cell"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("label").alias("cell"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+    return _rerank(_gen_ivf(spark, sf_dir))
 
 
 IVF_NPROBE = 3      # cells probed by the multi-probe IVF variant
@@ -183,13 +223,8 @@ _CGRID = 1e6        # per-element integer grid for centroid ranking
 
 
 def _ivf_nprobe_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(q_id, label) probe relation of the multi-probe IVF variant:
-    rank every cell by exact-integer centroid affinity to the query,
-    keep the IVF_NPROBE nearest. Extracted from ann_ivf_nprobe_topk
-    (identical plan) so the recall dashboard's probed-cell count
-    (VERDICT r13 item 7) counts the SAME relation the variant probes."""
-    from pyspark.sql import Window
-
+    """(q_id, label): every cell ranked by exact-integer centroid
+    affinity to the query, the IVF_NPROBE nearest kept."""
     raw = tables.load(spark, sf_dir, "embeddings")
     d19 = "decimal(19,0)"
     # per-element grid longs, 0-based positions
@@ -213,28 +248,31 @@ def _ivf_nprobe_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("qg").cast(d19) * F.col("s").cast(d19))
              .cast("double").alias("dotd"))
     )
-    cw = Window.partitionBy("q_id").orderBy(
-        (F.col("dotd") / F.sqrt(F.col("n2d"))).desc(), "label")
-    return (
+    return _top_n(
         dots.join(F.broadcast(cell_n2), "label")
         # an all-zero cell-sum vector has no centroid signal and its
         # 0-division would rank NaN-first in Spark only — exclude it
         # (both engines; oracle carries the same predicate)
-        .where(F.col("n2d") > 0)
-        .withColumn("crn", F.row_number().over(cw))
-        .where(F.col("crn") <= IVF_NPROBE)
-        .select("q_id", "label")
-    )
+        .where(F.col("n2d") > 0),
+        IVF_NPROBE, "dotd / sqrt(n2d) DESC, label", "crn", "q_id", "label")
+
+
+def _gen_ivf_nprobe(spark: SparkSession, sf_dir: str,
+                    share=_inline) -> _Cand:
+    """Probe: the IVF_NPROBE label cells nearest each query."""
+    probe = share("ivf_nprobe", lambda: _ivf_nprobe_probe(spark, sf_dir))
+    emb = tables.load(spark, sf_dir, "embeddings")
+    return _Cand(F.broadcast(probe), _with_norm(emb), "label", probe=probe)
 
 
 def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with nprobe>1 — the recall/cost knob real ANN serving
-    turns (VERDICT r9 item 4). ann_ivf_topk probes only the query's
-    own cell; this variant ranks ALL cells by centroid affinity to
-    the query and probes the IVF_NPROBE nearest, trading a bounded
-    candidate-set growth (nprobe/n_cells of the table) for recall —
-    on the fixtures recall@10 vs exact knn rises from the 1-cell
-    baseline (floors pinned in tests/test_retrieval.py).
+    turns. ann_ivf_topk probes only the query's own cell; this variant
+    ranks ALL cells by centroid affinity to the query and probes the
+    IVF_NPROBE nearest, trading a bounded candidate-set growth
+    (nprobe/n_cells of the table) for recall — on the fixtures
+    recall@10 vs exact knn rises from the 1-cell baseline (floors
+    pinned in tests/test_retrieval.py).
 
     Exactness across engines: the centroid score is count-free —
     cos(q, mean(cell)) == cos(q, SUM(cell)) since the 1/n scalar
@@ -243,9 +281,7 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     long sums, dot(q, S) and |S|^2 as exact decimal(38,0) sums. Both
     engines cast the SAME exact integers to double, take the same
     correctly-rounded sqrt/division, so the per-query cell ranking is
-    bit-identical (ties broken by label). The final candidate scoring
-    reuses the 1e-12 product-grid cosine (grid_dot) all similarity
-    queries share.
+    bit-identical (ties broken by label).
 
     100 TB shape: the centroid pass is a narrow explode ->
     map-side-combinable (label, pos) long sums -> n_cells x dim rows
@@ -253,117 +289,106 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the candidate scan joins on the cell id — the same
     partition-pruned co-located probe as ann_ivf_topk, just nprobe
     cells wide. Nothing driver-side, no all-pairs stage."""
-    raw = tables.load(spark, sf_dir, "embeddings")
-    probed = _ivf_nprobe_probe(spark, sf_dir)
-    # exact cosine top-k among candidates in the probed cells
-    emb = _with_norm(raw)
-    q, c = _qc_frames(emb, "label")
-    scored = (
-        F.broadcast(probed)
-        .join(c, "label")
-        .join(F.broadcast(q), "q_id")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+    return _rerank(_gen_ivf_nprobe(spark, sf_dir))
 
 
 IVF_TRAINED_K = 8        # trained coarse-quantizer codebook size
 IVF_TRAINED_NPROBE = 2   # cells probed -> 2/8 of the table scanned
+IVF_SAMPLE_FRAC = 0.5    # ann_ivf_sampled_topk's training subsample
+
+
+def _trained_probe(spark: SparkSession, sf_dir: str, nprobe: int,
+                   sample_frac: float | None = None) -> DataFrame:
+    """(q_id, cluster): each query's `nprobe` nearest trained-IVF
+    cells by exact grid distance (array_sort over (d, i) structs —
+    all-integer, so the probe list is bit-identical cross-engine).
+    The codebook comes from the shared artifact cache, so this trains
+    at most once per fixture and codebook."""
+    from mapreduce_go_spark.operators.kmeans import (
+        _dist_array_sql, kmeans_centroids)
+
+    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
+                                 sample_frac=sample_frac)
+    return tables.load(spark, sf_dir, "embeddings").where(
+        f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id as q_id",
+        f"explode(transform(slice(array_sort({_dist_array_sql(centroids)}),"
+        f" 1, {nprobe}), s -> s.i)) as cluster",
+    )
+
+
+def _gen_trained(spark: SparkSession, sf_dir: str, share=_inline,
+                 sample_frac: float | None = None) -> _Cand:
+    """Probe: the IVF_TRAINED_NPROBE trained cells nearest each query,
+    over every vector's nearest-centroid assignment."""
+    from mapreduce_go_spark.operators.kmeans import (
+        _assign, kmeans_centroids)
+
+    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
+                                 sample_frac=sample_frac)
+    emb = tables.load(spark, sf_dir, "embeddings")
+    probe = share(f"ivf_trained_{sample_frac}", lambda: _trained_probe(
+        spark, sf_dir, IVF_TRAINED_NPROBE, sample_frac))
+
+    def cells() -> DataFrame:
+        # the full codebook's assignment is already a column of the
+        # layout table; a sampled codebook's is computed here
+        cell = (_ivf_layout_table(spark, sf_dir) if sample_frac is None
+                else _assign(emb.select("vec_id", "embedding"), centroids))
+        return cell.selectExpr("vec_id AS c_id", "cluster")
+
+    return _Cand(F.broadcast(probe), _assign(_with_norm(emb), centroids),
+                 "cluster", cells, probe)
 
 
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str,
                          sample_frac: float | None = None) -> DataFrame:
     """IVF with a TRAINED coarse quantizer — the production form of
-    the family (VERDICT r10 item 2): ann_ivf_topk / ann_ivf_nprobe
-    take their cells from the fixture `label` column; here the cells
-    come from k-means centroids trained on the embeddings themselves
+    the family: ann_ivf_topk / ann_ivf_nprobe take their cells from
+    the fixture `label` column; here the cells come from k-means
+    centroids trained on the embeddings themselves
     (kmeans.kmeans_centroids — Lloyd's on the exact 1e-12 integer
     grid), which is what FAISS-style IVF actually deploys.
 
     Pipeline: (1) train k=IVF_TRAINED_K centroids (driver loop,
     O(k*dim) traffic per iteration); (2) assign every vector to its
     nearest centroid by exact int64 grid distance (kmeans._assign —
-    ties to the lowest index); (3) per query, rank the k centroids by
-    the SAME grid distance and probe the IVF_TRAINED_NPROBE nearest
-    (array_sort over (d, i) structs — all-integer, so the probe list
-    is bit-identical cross-engine); (4) exact grid-cosine top-k among
-    candidates in the probed cells.
+    ties to the lowest index); (3) per query, probe the
+    IVF_TRAINED_NPROBE nearest centroids by the SAME grid distance
+    (_trained_probe); (4) exact grid-cosine top-k among candidates in
+    the probed cells.
 
     Exactness: centroids are bit-identical to the NumPy twin
     (_kmeans_twin) by the kmeans grid discipline, so the LAZY oracle
     embeds the twin's centroids as literals and re-derives assignment,
     probe ranking and cosine in SQL — a full value-level differential
-    despite the data-derived codebook (the kmeans/PQ LAZY_ORACLE
-    pattern, registry.all_oracles).
+    despite the data-derived codebook.
 
-    100 TB shape: training cost is ITERATIONS small jobs (the
-    synchronous-Lloyd's floor; at real scale pass sample_frac to
-    train on a deterministic xxhash64(vec_id) subsample — the scan
-    per iteration shrinks by 1/frac while assignment of the full
-    table is unchanged; recall floor vs full training pinned in
-    tests/test_approx.py); the trained codebook is a persistent
-    on-disk artifact (kmeans._codebook_disk_store), so fresh
-    processes — the driver bench included — load it instead of
-    retraining; the codebook is k*dim literals (KBs — the broadcast
-    analog);
-    assignment is one narrow map pass; the probe list is
-    N_QUERIES*nprobe rows broadcast; the candidate scan joins on the
-    cell id — at scale the table is partitioned by cell, making each
-    probe a partition-pruned co-located scan. No all-pairs stage, no
-    driver-side data paths beyond the k-row training sums."""
-    from mapreduce_go_spark.operators.kmeans import (
-        _assign, _dist_array_sql, kmeans_centroids)
-
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
-                                 sample_frac=sample_frac)
-    raw = tables.load(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    assigned = _assign(_with_norm(raw), centroids)
-    probed = assigned.where(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id as q_id",
-        f"explode(transform(slice(array_sort({_dist_array_sql(centroids)}),"
-        f" 1, {IVF_TRAINED_NPROBE}), s -> s.i)) as cluster",
-    )
-    q, c = _qc_frames(assigned, "cluster")
-    scored = (
-        F.broadcast(probed)
-        .join(c, "cluster")
-        .join(F.broadcast(q), "q_id")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
-
-
-IVF_SAMPLE_FRAC = 0.5    # ann_ivf_sampled_topk's training subsample
+    100 TB shape: training cost is ITERATIONS small jobs (at real
+    scale pass sample_frac to train on a deterministic xxhash64(vec_id)
+    subsample — the scan per iteration shrinks by 1/frac while
+    assignment of the full table is unchanged; recall floor vs full
+    training pinned in tests/test_approx.py); the trained codebook is
+    a persistent on-disk artifact (kmeans._codebook_disk_store), so
+    fresh processes load it instead of retraining; assignment is one
+    narrow map pass; the probe list is N_QUERIES*nprobe rows
+    broadcast; the candidate scan joins on the cell id."""
+    return _rerank(_gen_trained(spark, sf_dir, sample_frac=sample_frac))
 
 
 def ann_ivf_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ann_ivf_trained_topk on the 100 TB training path (VERDICT r11
-    item 6, SCALE.md): the coarse-quantizer codebook is trained on a
-    deterministic xxhash64(vec_id) half-sample instead of every row —
-    FAISS-style IVF trains on ~256 vectors/centroid, not the corpus —
-    while ASSIGNMENT of the full table and the probe/score stages are
-    unchanged. Each Lloyd's iteration scans 1/frac less data; at real
-    scale frac shrinks with the corpus so training cost is ~constant.
+    """ann_ivf_trained_topk on the 100 TB training path (SCALE.md):
+    the coarse-quantizer codebook is trained on a deterministic
+    xxhash64(vec_id) half-sample instead of every row — FAISS-style
+    IVF trains on ~256 vectors/centroid, not the corpus — while
+    ASSIGNMENT of the full table and the probe/score stages are
+    unchanged. Each Lloyd's iteration scans 1/frac less data.
 
     Still a full value-level differential: the sampling predicate has
     a pure-Python XXH64 twin (functions/xxhash.py, Spark parity
     pinned bit-for-bit), so the NumPy training twin reproduces the
     sampled codebook exactly and the LAZY oracle embeds it as
-    literals — the ann_ivf_trained_topk pattern with the sample
-    folded in. Recall floor vs full training is pinned in
+    literals. Recall floor vs full training is pinned in
     tests/test_approx.py."""
     return ann_ivf_trained_topk(spark, sf_dir,
                                 sample_frac=IVF_SAMPLE_FRAC)
@@ -385,34 +410,31 @@ def _sign_word_sql(word: int, col: str = "embedding") -> str:
     return f"({terms})"
 
 
-def _bq_cand(emb: DataFrame) -> DataFrame:
-    """(q_id, c_id): ann_binary_hamming_topk's coarse stage — top-
-    BQ_COARSE_C per query by Hamming distance over the packed sign
-    words, tie-broken on (hamming, c_id). Extracted (r17) so the
-    dashboard can join the same candidate set against its shared
-    scored-base relation; the standalone variant's plan is unchanged
-    (the code moved verbatim)."""
-    from pyspark.sql import Window
+def _hamming_top(words: DataFrame,
+                 scan: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """(q_id, c_id): the Hamming scan both binary variants share —
+    top-BQ_COARSE_C per query by Hamming distance over the packed sign
+    words (w0, w1), tie-broken on (hamming, c_id). `scan` joins the
+    broadcast query words (q_id, qw0, qw1) to the scanned vectors."""
+    qw = words.where(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id as q_id", "w0 as qw0", "w1 as qw1")
+    ham = scan(F.broadcast(qw)).where("vec_id != q_id").selectExpr(
+        "q_id", "vec_id as c_id",
+        "bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) as hamming")
+    return _top_n(ham, BQ_COARSE_C, "hamming, c_id", "rn", "q_id", "c_id")
 
+
+def _gen_binary_hamming(spark: SparkSession, sf_dir: str,
+                        share=_inline) -> _Cand:
+    """Pairs: a full Hamming scan over the sign words."""
+    emb = tables.load(spark, sf_dir, "embeddings")
     words = emb.selectExpr(
         "vec_id",
         f"{_sign_word_sql(0)} as w0",
         f"{_sign_word_sql(1)} as w1",
     )
-    qw = words.where(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id as q_id", "w0 as qw0", "w1 as qw1")
-    ham = (
-        F.broadcast(qw)
-        .crossJoin(words)
-        .where(F.col("vec_id") != F.col("q_id"))
-        .selectExpr(
-            "q_id", "vec_id as c_id",
-            "bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) as hamming")
-    )
-    wnd = Window.partitionBy("q_id").orderBy("hamming", "c_id")
-    return (ham.withColumn("rn", F.row_number().over(wnd))
-            .where(F.col("rn") <= BQ_COARSE_C)
-            .select("q_id", "c_id"))
+    cand = _hamming_top(words, lambda qw: qw.crossJoin(words))
+    return _Cand(F.broadcast(cand), _with_norm(emb))
 
 
 def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,21 +460,7 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-cosine _topk — the DuckDB oracle re-derives all three stages
     (per-bit unnest instead of bit_count: the oracle needs identical
     VALUES, not engine bit ops)."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    cand = _bq_cand(emb)
-    embn = _with_norm(emb)
-    q, c = _qc_frames(embn)
-    scored = (
-        F.broadcast(cand)
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id", "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+    return _rerank(_gen_binary_hamming(spark, sf_dir))
 
 
 IVF_HAM_NPROBE = 3   # cells the composed variant probes — one MORE
@@ -478,10 +486,9 @@ def _ivf_layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/k of the table reading ONLY the column its variant needs
     (16 bytes of sign words for IVF-Hamming, M=8 code bytes for
     IVF-PQ — columnar pruning keeps each path at its own width). The
-    Zipf x100 sweep (SCALE.md r14) measured the per-query
-    re-derivation of exactly this layout as the composed hybrid's
-    dominant residual, so fixture queries price only what deployments
-    pay per query."""
+    Zipf x100 sweep (SCALE.md) measured the per-query re-derivation
+    of exactly this layout as the composed hybrid's dominant residual,
+    so fixture queries price only what deployments pay per query."""
     from mapreduce_go_spark.media import session_parquet
     from mapreduce_go_spark.operators.kmeans import (
         _assign, _embeddings_content_key, kmeans_centroids)
@@ -507,78 +514,34 @@ def _ivf_layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_embeddings_content_key(sf_dir)}", build)
 
 
-def _probed_cells(spark: SparkSession, sf_dir: str,
-                  nprobe: int) -> DataFrame:
-    """(q_id, cluster): each query's `nprobe` nearest trained-IVF
-    cells by exact grid distance — the broadcast probe list whose
-    join against the cluster-partitioned layout table dynamically
-    prunes the scan to nprobe/k of the index. Shared by the
-    IVF-Hamming and IVF-PQ compositions."""
-    from mapreduce_go_spark.operators.kmeans import (
-        _dist_array_sql, kmeans_centroids)
+def _gen_ivf_hamming(spark: SparkSession, sf_dir: str,
+                     share=_inline) -> _Cand:
+    """Pairs: the Hamming scan restricted to the IVF_HAM_NPROBE
+    trained cells nearest each query, read from the layout table."""
+    probe = _trained_probe(spark, sf_dir, IVF_HAM_NPROBE)
 
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K)
-    raw = tables.load(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    return raw.where(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id as q_id",
-        f"explode(transform(slice(array_sort({_dist_array_sql(centroids)}),"
-        f" 1, {nprobe}), s -> s.i)) as cluster",
-    )
+    def build() -> DataFrame:
+        layout = _ivf_layout_table(spark, sf_dir)
+        # cell-pruned: only the probed cells' words are scanned
+        return _hamming_top(layout, lambda qw: F.broadcast(probe)
+                            .join(layout, "cluster").join(qw, "q_id"))
 
-
-def _ivf_hamming_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(q_id, c_id) Hamming-coarse candidates restricted to the
-    trained-IVF probed cells — the composition VERDICT r13 item 1
-    names, shared by ann_ivf_hamming_topk and hybrid_rrf_ann_topk's
-    dense pool. Stages: (1) trained coarse quantizer (the SAME k=8
-    full-training codebook artifact ann_ivf_trained_topk loads —
-    kmeans._codebook_disk_store, trained at most once per fixture);
-    (2) every vector assigned to its cell and sign-packed into two
-    bigint words; (3) per query, probe the IVF_HAM_NPROBE nearest
-    cells by exact grid distance; (4) Hamming scan over ONLY the
-    probed cells' packed words, top-BQ_COARSE_C per query on the
-    (hamming, c_id) tie-break.
-
-    100 TB shape: this replaces the registry's last full linear
-    dense scan (ann_binary_hamming_topk's deliberate 16-byte/vector
-    pass, SCALE.md's named margin) with a cell-pruned one — the
-    layout table IS partitioned by cell with (w0, w1) as narrow
-    columns (_ivf_layout_table), so the coarse pass reads nprobe/k of
-    the table at 16 bytes/vector through a partition-pruned scan;
-    everything downstream (exact re-rank) is unchanged and
-    candidate-bounded."""
-    from pyspark.sql import Window
-
-    words = _ivf_layout_table(spark, sf_dir)
-    probed = _probed_cells(spark, sf_dir, IVF_HAM_NPROBE)
-    qw = words.where(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id as q_id", "w0 as qw0", "w1 as qw1")
-    ham = (
-        F.broadcast(probed)
-        .join(words, "cluster")  # cell-pruned: only probed cells scan
-        .join(F.broadcast(qw), "q_id")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .selectExpr(
-            "q_id", "vec_id as c_id",
-            "bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) as hamming")
-    )
-    wnd = Window.partitionBy("q_id").orderBy("hamming", "c_id")
-    return (ham.withColumn("rn", F.row_number().over(wnd))
-            .where(F.col("rn") <= BQ_COARSE_C)
-            .select("q_id", "c_id"))
+    emb = tables.load(spark, sf_dir, "embeddings")
+    return _Cand(F.broadcast(share("ivf_hamming", build)), _with_norm(emb),
+                 probe=probe)
 
 
 def ann_ivf_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-Hamming ANN composed with the trained-IVF cell layout
-    (VERDICT r13 item 1): ann_binary_hamming_topk's coarse stage is a
-    full 16-byte/vector linear scan — correct, but the one plan whose
-    100 TB story pointed at a layout it didn't use. Here the Hamming
-    scan runs only over the IVF_HAM_NPROBE probed cells of the
-    trained k=IVF_TRAINED_K quantizer (see _ivf_hamming_cand), then
-    the exact grid-cosine re-rank of the survivors is unchanged —
-    candidates are a subset of ann_ivf_trained_topk's probed-cell
-    members, Hamming-filtered to BQ_COARSE_C per query.
+    """Binary-Hamming ANN composed with the trained-IVF cell layout:
+    ann_binary_hamming_topk's coarse stage is a full 16-byte/vector
+    linear scan. Here the Hamming scan runs only over the
+    IVF_HAM_NPROBE probed cells of the trained k=IVF_TRAINED_K
+    quantizer (the same full-training codebook artifact
+    ann_ivf_trained_topk loads), through a partition-pruned scan of
+    the cluster-partitioned layout table's (w0, w1) columns; the exact
+    grid-cosine re-rank of the survivors is unchanged — candidates are
+    a subset of the probed-cell members, Hamming-filtered to
+    BQ_COARSE_C per query.
 
     Exactness: cell assignment and probe ranking are exact int64 grid
     comparisons (the kmeans discipline — centroids bit-identical to
@@ -586,20 +549,7 @@ def ann_ivf_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (hamming, c_id), re-rank is the shared _topk — so the LAZY
     oracle embeds the twin's centroids and re-derives every stage
     value-exactly (_ivf_hamming_oracle_sql)."""
-    cand = _ivf_hamming_cand(spark, sf_dir)
-    embn = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q, c = _qc_frames(embn)
-    scored = (
-        F.broadcast(cand)
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id", "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+    return _rerank(_gen_ivf_hamming(spark, sf_dir))
 
 
 IVF_PQ_NPROBE = 3    # cells the IVF-PQ composition probes — the
@@ -610,20 +560,15 @@ IVF_PQ_NPROBE = 3    # cells the IVF-PQ composition probes — the
                      # floor pinned in tests/test_approx.py)
 
 
-def _ivf_pq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(q_id, c_id): ann_ivf_pq_topk's cell-pruned ADC shortlist —
-    codes read from the cluster-partitioned layout table through the
-    broadcast probe list's dynamic partition pruning, pure-JVM ADC
-    gather, top-PQ_RERANK per query by (adist, c_id). Extracted (r17)
-    for the dashboard's shared scored-base re-rank; the standalone
-    variant's plan is unchanged (verbatim move)."""
-    from pyspark.sql import Window
-
+def _ivf_pq_shortlist(spark: SparkSession, sf_dir: str,
+                      probe: DataFrame) -> DataFrame:
+    """(q_id, c_id): the cell-pruned ADC shortlist — codes read from
+    the cluster-partitioned layout table through the broadcast
+    `probe`'s dynamic partition pruning, pure-JVM ADC gather,
+    top-PQ_RERANK per query by (adist, c_id)."""
     CB = _pq_codebooks(sf_dir)                 # (M, K, sub)
     layout = _ivf_layout_table(spark, sf_dir)
-    probed = _probed_cells(spark, sf_dir, IVF_PQ_NPROBE)
-    # N_QUERIES rows, Spark-free + content-key cached (was a per-
-    # construction collect job — see _query_vec_rows)
+    # N_QUERIES rows, Spark-free + content-key cached
     q_rows = _query_vec_rows(sf_dir)
     Q = np.asarray([e for _, e in q_rows], dtype=np.float64)
     LUT = _adc_luts(Q, CB)                     # (n_q, M, K) int64
@@ -636,15 +581,15 @@ def _ivf_pq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             for row in LUT[i]) + ")"
         for i, (qid, _) in enumerate(q_rows)) + ")"
     scored = (
-        F.broadcast(probed)
+        F.broadcast(probe)
         .join(layout, "cluster")  # cell-pruned: only probed cells scan
         .where(F.col("vec_id") != F.col("q_id"))
         # NULL embedding -> NULL codes -> NULL adist, and the (adist,
         # c_id) window sorts NULLS FIRST — NULL-code rows would crowd
         # the PQ_RERANK shortlist while the oracle's pcodes (ORDER BY
-        # d, k with NULL d last) assigns them arbitrary codes (ADVICE
-        # r15). Excluded symmetrically: here, and in the oracle via
-        # pqd's d IS NOT NULL (_pq_code_ctes / _ivf_rank_ctes).
+        # d, k with NULL d last) assigns them arbitrary codes.
+        # Excluded symmetrically: here, and in the oracle via pqd's
+        # d IS NOT NULL (_pq_code_ctes / _ivf_rank_ctes).
         .where(F.col("codes").isNotNull())
         .selectExpr(
             "q_id", "vec_id as c_id",
@@ -656,28 +601,32 @@ def _ivf_pq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" cast(0 as bigint), (acc, x) -> acc + x) as adist",
         )
     )
-    w_ad = Window.partitionBy("q_id").orderBy("adist", "c_id")
-    return (
-        scored.withColumn("ark", F.row_number().over(w_ad))
-        .where(F.col("ark") <= PQ_RERANK)
-        .select("q_id", "c_id")
-    )
+    return _top_n(scored, PQ_RERANK, "adist, c_id", "ark", "q_id", "c_id")
+
+
+def _gen_ivf_pq(spark: SparkSession, sf_dir: str,
+                share=_inline) -> _Cand:
+    """Pairs: the ADC shortlist of the IVF_PQ_NPROBE trained cells
+    nearest each query."""
+    probe = _trained_probe(spark, sf_dir, IVF_PQ_NPROBE)
+    emb = tables.load(spark, sf_dir, "embeddings")
+    return _Cand(F.broadcast(_ivf_pq_shortlist(spark, sf_dir, probe)),
+                 _with_norm(emb), probe=probe)
 
 
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FAISS-standard IVF-PQ composition (VERDICT r14's named
-    successor to ann_pq_topk): ADC scoring runs ONLY inside the
-    trained-IVF probed cells instead of over every code in the table.
-    ann_pq_topk's ADC pass is 32x-compressed but still linear — the
-    registry's last full-table scan of any kind. Here the codes live
-    in the cluster-partitioned layout table (_ivf_layout_table, the
-    same artifact the IVF-Hamming composition rides), the broadcast
-    probe list dynamically prunes the scan to IVF_PQ_NPROBE/k of the
-    index, and the per-candidate ADC gather is a pure-JVM expression:
-    each query's (M x K) int64 lookup table is a SQL map literal, and
-    the score is an 8-element zip_with/aggregate fold over the code
-    array — no Python anywhere in the per-query path (the one encode
-    pass happened at layout-build time).
+    """The FAISS-standard IVF-PQ composition: ADC scoring runs ONLY
+    inside the trained-IVF probed cells instead of over every code in
+    the table. ann_pq_topk's ADC pass is 32x-compressed but still
+    linear. Here the codes live in the cluster-partitioned layout
+    table (_ivf_layout_table, the same artifact the IVF-Hamming
+    composition rides), the broadcast probe list dynamically prunes
+    the scan to IVF_PQ_NPROBE/k of the index, and the per-candidate
+    ADC gather is a pure-JVM expression: each query's (M x K) int64
+    lookup table is a SQL map literal, and the score is an 8-element
+    zip_with/aggregate fold over the code array — no Python anywhere
+    in the per-query path (the one encode pass happened at
+    layout-build time).
 
     100 TB shape: probe = partition-pruned scan of nprobe/k of the
     table at M=8 code bytes/vector (vs 16 sign bytes for IVF-Hamming,
@@ -691,19 +640,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (codebooks and centroids are literal constants trained by the
     shared Spark-free twins), so the whole composition is
     differentially checked (_ivf_pq_oracle_sql), not recall-floored."""
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    shortlist = _ivf_pq_shortlist(spark, sf_dir)
-    q, c = _qc_frames(emb)
-    rerank = (
-        F.broadcast(shortlist)
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id", "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"))
-    )
-    return _topk(rerank)
+    return _rerank(_gen_ivf_pq(spark, sf_dir))
 
 
 MRL_DIM = 16         # matryoshka coarse prefix length (16 of 64 dims)
@@ -711,13 +648,8 @@ MRL_COARSE_C = 40    # prefix-cosine candidates per query
 
 
 def _mrl_cand(emb: DataFrame) -> DataFrame:
-    """(q_id, c_id): matryoshka_two_stage_topk's coarse stage — top-
-    MRL_COARSE_C per query by exact cosine over the first MRL_DIM
-    dimensions, tie-broken on (pcos DESC, c_id). Extracted (r17) for
-    the dashboard's shared scored-base re-rank; the standalone
-    variant's plan is unchanged (verbatim move)."""
-    from pyspark.sql import Window
-
+    """(q_id, c_id): top-MRL_COARSE_C per query by exact cosine over
+    the first MRL_DIM dimensions, tie-broken on (pcos DESC, c_id)."""
     pre = emb.select(
         "vec_id", "embedding",
         F.slice("embedding", 1, MRL_DIM).alias("prefix"),
@@ -743,11 +675,15 @@ def _mrl_cand(emb: DataFrame) -> DataFrame:
                     F.col("qpn"), F.col("cpn")).alias("pcos"),
         )
     )
-    wnd = Window.partitionBy("q_id").orderBy(
-        F.col("pcos").desc_nulls_last(), "c_id")
-    return (coarse.withColumn("rn", F.row_number().over(wnd))
-            .where(F.col("rn") <= MRL_COARSE_C)
-            .select("q_id", "c_id"))
+    return _top_n(coarse, MRL_COARSE_C, "pcos DESC NULLS LAST, c_id",
+                  "rn", "q_id", "c_id")
+
+
+def _gen_matryoshka(spark: SparkSession, sf_dir: str,
+                    share=_inline) -> _Cand:
+    """Pairs: the prefix-cosine coarse stage."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    return _Cand(F.broadcast(_mrl_cand(emb)), _with_norm(emb))
 
 
 def matryoshka_two_stage_topk(spark: SparkSession, sf_dir: str
@@ -772,27 +708,20 @@ def matryoshka_two_stage_topk(spark: SparkSession, sf_dir: str
     norms from the same grid), candidate selection tie-breaks on
     (cos DESC, c_id), re-rank is _topk — the oracle re-derives both
     stages over embedding[1:MRL_DIM] list slices."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    cand = _mrl_cand(emb)
-    embn = _with_norm(emb)
-    q, c = _qc_frames(embn)
-    scored = (
-        F.broadcast(cand)
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id", "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"),
-        )
-    )
-    return _topk(scored)
+    return _rerank(_gen_matryoshka(spark, sf_dir))
 
 
 RRF_K0 = 60      # RRF dampening constant (Cormack et al. 2009)
 RRF_POOL = 20    # top-k pool fused from each retrieval system
 RRF_TOP = 10     # fused ranks emitted per query
 RRF_PROBE = 5    # rarest query terms probed into the inverted index
+
+
+def _dense_pool(scored: DataFrame) -> DataFrame:
+    """(q_id, c_id, rd): a hybrid's dense pool — the top-RRF_POOL
+    scored candidates per query by (cos DESC, c_id)."""
+    return _top_n(scored, RRF_POOL, "cos DESC NULLS LAST, c_id", "rd",
+                  "q_id", "c_id", "rd")
 
 
 def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,32 +752,17 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(corpus·q_tokens) blowup this avoids: under a Zipf vocabulary a
     query's rarest terms are selective, and the fixture's degenerate
     31-token vocabulary is the worst case (posting lists ≈ corpus)
-    yet stays correct. The selective regime is MEASURED (r13,
-    tests/test_zipf.py on the deterministic Zipf corpus from
+    yet stays correct. The selective regime is MEASURED
+    (tests/test_zipf.py on the deterministic Zipf corpus from
     tools/zipf_fixture.py): the probe touches 132 posting rows where
-    the all-token join touches 73,811 — a 559x reduction. Both pools are WindowGroupLimit-bounded at
-    RRF_POOL per query before their exchanges; fusion touches
-    ≤ 2·RRF_POOL rows per query. Measured: probing took the 10x
-    curve from 3.55x (all-token join) to 1.3-1.6x
-    (session-dependent; both dedicated min-of-3 reads in SCALE.md)."""
-    from pyspark.sql import Window
-
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q, c = _qc_frames(emb)
-    wd = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc_nulls_last(), "c_id")
-    dense = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id",
-                _cosine(F.col("qe"), F.col("ce"),
-                        F.col("qn"), F.col("cn")).alias("cos"))
-        .withColumn("rd", F.row_number().over(wd))
-        .where(F.col("rd") <= RRF_POOL)
-        .select("q_id", "c_id", "rd")
-    )
-
+    the all-token join touches 73,811 — a 559x reduction. Both pools
+    are WindowGroupLimit-bounded at RRF_POOL per query before their
+    exchanges; fusion touches ≤ 2·RRF_POOL rows per query. Measured:
+    probing took the 10x curve from 3.55x (all-token join) to
+    1.3-1.6x (session-dependent; both dedicated min-of-3 reads in
+    SCALE.md)."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    dense = _dense_pool(_all_pairs(_with_norm(emb)))
     return _rrf_lex_and_fuse(spark, sf_dir, dense)
 
 
@@ -870,22 +784,17 @@ def _lex_probe_frames(spark: SparkSession, sf_dir: str
     each query's RRF_PROBE rarest terms ((df, tok) rank —
     cross-engine exact). ONE copy — the fusion tail and the Zipf
     selectivity measurement (tests/test_zipf.py) both consume it, so
-    the measured posting-row counts are counts of the shipped probe
-    (r13 review).
+    the measured posting-row counts are counts of the shipped probe.
 
-    r16: the base is the token-SETS relation (sort_array(collect_set)
-    — the dedup._shingle_sets recipe): `.distinct()`'s exchange
-    disappears into the aggregation, per-doc sizes ride the row (the
-    fusion tail's separate groupBy-count and its join are gone), and
-    every re-derivation of the token stream is an in-row explode of
-    the array. Measured 2.66 -> 2.18 s on hybrid_rrf_topk at sf0.1
-    (interleaved min-of-4); NOT localCheckpoint'ed — re-deriving the
-    aggregation was measured cheaper than materializing the arrays
-    (2.18 vs 2.27 s), the same 3-consumer trade as
+    The base is the token-SETS relation (sort_array(collect_set) —
+    the dedup._shingle_sets recipe): the distinct disappears into the
+    aggregation, per-doc sizes ride the row, and every re-derivation
+    of the token stream is an in-row explode of the array. NOT
+    localCheckpoint'ed — re-deriving the aggregation was measured
+    cheaper than materializing the arrays (2.18 vs 2.27 s on
+    hybrid_rrf_topk at sf0.1), the same 3-consumer trade as
     dedup_verified_pairs. Memoized per (session, fixture) — see
     _LEX_FRAMES_MEMO."""
-    from pyspark.sql import Window
-
     from mapreduce_go_spark.functions.text import NON_LETTER_RE
 
     import os
@@ -909,13 +818,8 @@ def _lex_probe_frames(spark: SparkSession, sf_dir: str
     qt = toks.where(F.col("doc_id") < N_QUERIES).select(
         F.col("doc_id").alias("q_id"), "tok")
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    wp = Window.partitionBy("q_id").orderBy("df", "tok")
-    qprobe = (
-        qt.join(dfreq, "tok")
-        .withColumn("pr", F.row_number().over(wp))
-        .where(F.col("pr") <= RRF_PROBE)
-        .select("q_id", "tok")
-    )
+    qprobe = _top_n(qt.join(dfreq, "tok"), RRF_PROBE, "df, tok", "pr",
+                    "q_id", "tok")
     out = (tsets, toks, qt, qprobe)
     _LEX_FRAMES_MEMO[memo_key] = out
     return out
@@ -925,15 +829,11 @@ def _rrf_lex_and_fuse(spark: SparkSession, sf_dir: str,
                       dense: DataFrame,
                       frames: tuple | None = None) -> DataFrame:
     """Shared hybrid-retrieval tail: the selective-probe lexical pool
-    plus the RRF fusion, over ANY (q_id, c_id, rd) dense pool —
-    hybrid_rrf_topk passes the brute-force anchor, the _ann variant
-    the binary-Hamming candidate rank. One copy (review discipline):
-    a probe or fusion change lands once for both. `frames` overrides
-    the (tsets, toks, qt, qprobe) relations — the dashboard (r17)
-    passes lazily localCheckpointed ones so its TWO hybrid rows share
-    one lexical execution; standalone hybrids keep the default."""
-    from pyspark.sql import Window
-
+    plus the RRF fusion, over ANY (q_id, c_id, rd) dense pool. A probe
+    or fusion change lands once for both hybrids. `frames` overrides
+    the (tsets, toks, qt, qprobe) relations — the dashboard passes
+    lazily localCheckpointed ones so its TWO hybrid rows share one
+    lexical execution."""
     tsets, toks, qt, qprobe = (
         frames if frames is not None
         else _lex_probe_frames(spark, sf_dir))
@@ -954,8 +854,7 @@ def _rrf_lex_and_fuse(spark: SparkSession, sf_dir: str,
         .groupBy("q_id", "c_id")
         .agg(F.count("*").alias("i"))
     )
-    wl = Window.partitionBy("q_id").orderBy(F.col("jac").desc(), "c_id")
-    lex = (
+    lex = _top_n(
         inter
         .join(F.broadcast(sizes.select(F.col("doc_id").alias("q_id"),
                                        F.col("sz").alias("qsz"))), "q_id")
@@ -964,60 +863,31 @@ def _rrf_lex_and_fuse(spark: SparkSession, sf_dir: str,
         .select("q_id", "c_id",
                 (F.col("i").cast("double")
                  / (F.col("qsz") + F.col("csz") - F.col("i")))
-                .alias("jac"))
-        .withColumn("rl", F.row_number().over(wl))
-        .where(F.col("rl") <= RRF_POOL)
-        .select("q_id", "c_id", "rl")
-    )
+                .alias("jac")),
+        RRF_POOL, "jac DESC, c_id", "rl", "q_id", "c_id", "rl")
 
     fused = dense.join(lex, ["q_id", "c_id"], "full_outer")
     score = (
         F.coalesce(F.lit(1.0) / (F.lit(RRF_K0) + F.col("rd")), F.lit(0.0))
         + F.coalesce(F.lit(1.0) / (F.lit(RRF_K0) + F.col("rl")), F.lit(0.0))
     )
-    wf = Window.partitionBy("q_id").orderBy(F.col("rrf").desc(), "c_id")
-    return (
-        fused.select("q_id", "c_id", score.alias("rrf"))
-        .withColumn("rrf_rank", F.row_number().over(wf))
-        .where(F.col("rrf_rank") <= RRF_TOP)
-        .select("q_id", "c_id", "rrf_rank",
-                F.round(F.col("rrf").cast(_DEC), 6).cast("double")
-                .alias("rrf"))
-    )
+    return _top_n(
+        fused.select("q_id", "c_id", score.alias("rrf")),
+        RRF_TOP, "rrf DESC, c_id", "rrf_rank", "q_id", "c_id", "rrf_rank",
+        f"cast(round(cast(rrf AS {_DEC}), 6) AS double) AS rrf")
 
 
 def hybrid_rrf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """hybrid_rrf_topk with its documented ANN swap-in EXERCISED:
-    the dense pool comes from the IVF-Hamming coarse scan
-    (_ivf_hamming_cand — trained cells probed, then 16 bytes/vector
-    Hamming over just those cells, candidates top-BQ_COARSE_C per
-    query) with an exact grid-cosine rank over the candidates — the
-    plan a 100 TB hybrid deployment actually runs, where a
-    brute-force dense pool is unaffordable. Through r13 the pool was
-    the FULL-table binary-Hamming scan; VERDICT r13 item 1 swaps in
-    the cell-pruned composition so the hybrid's coarse stage is also
-    partition-prunable at scale. Lexical pool and fusion are the
-    shared tail (_rrf_lex_and_fuse), so the two registrations
-    differ ONLY in the dense pool — the differential the swap-in
-    claim needed."""
-    from pyspark.sql import Window
-
-    cand = _ivf_hamming_cand(spark, sf_dir)
-    embn = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q, c = _qc_frames(embn)
-    wd = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc_nulls_last(), "c_id")
-    dense = (
-        F.broadcast(cand)
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .select("q_id", "c_id",
-                _cosine(F.col("qe"), F.col("ce"),
-                        F.col("qn"), F.col("cn")).alias("cos"))
-        .withColumn("rd", F.row_number().over(wd))
-        .where(F.col("rd") <= RRF_POOL)
-        .select("q_id", "c_id", "rd")
-    )
+    the dense pool is the IVF-Hamming generator's candidates (trained
+    cells probed, then 16 bytes/vector Hamming over just those cells,
+    top-BQ_COARSE_C per query) ranked by exact grid cosine — the plan
+    a 100 TB hybrid deployment actually runs, where a brute-force
+    dense pool is unaffordable and the coarse stage is
+    partition-prunable. Lexical pool and fusion are the shared tail
+    (_rrf_lex_and_fuse), so the two registrations differ ONLY in the
+    dense pool."""
+    dense = _dense_pool(_score(_gen_ivf_hamming(spark, sf_dir)))
     return _rrf_lex_and_fuse(spark, sf_dir, dense)
 
 
@@ -1058,10 +928,8 @@ _BAND_KEYS_ND = make_band_keys(_HP_ND, ND_BITS, ND_BANDS)
 
 def _lsh_bands(emb: DataFrame) -> DataFrame:
     """(vec_id, band, bkey): every vector's sign-random-projection
-    band keys, one row per band — the shared signature relation of
-    both LSH variants. Extracted (r17) so the dashboard computes the
-    band-keys kernel once for both probes; standalone plans are
-    unchanged (verbatim move)."""
+    band keys, one row per band — the signature relation both LSH
+    variants probe."""
     return emb.select(
         "vec_id",
         F.posexplode(_BAND_KEYS_E(F.col("embedding")))
@@ -1098,30 +966,27 @@ def _lsh_cand(bands: DataFrame, multiprobe: bool) -> DataFrame:
     )
 
 
+def _gen_lsh(spark: SparkSession, sf_dir: str, share=_inline,
+             multiprobe: bool = False) -> _Cand:
+    """Pairs: vectors sharing a band bucket with the query."""
+    embn = _with_norm(tables.load(spark, sf_dir, "embeddings"))
+    bands = share("lsh_bands", lambda: _lsh_bands(embn))
+    return _Cand(_lsh_cand(bands, multiprobe), embn)
+
+
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN (the prompt's 'LSH-bucketed variant'): sign-
-    random-projection signatures — bit j = sign(e . r_j) for a fixed
-    ±1 hyperplane matrix — bucket vectors by each band's bit string,
-    then exact cosine top-k among the query's bucket mates. ANN
-    semantics: a query with no bucket mates returns no rows.
+    """LSH-bucketed ANN: sign-random-projection signatures — bit j =
+    sign(e . r_j) for a fixed ±1 hyperplane matrix — bucket vectors by
+    each band's bit string, then exact cosine top-k among the query's
+    bucket mates. ANN semantics: a query with no bucket mates returns
+    no rows.
 
     100 TB shape: signatures are computed once per vector in a narrow
     pass and the table is partitioned by (band, bucket); each probe
     is a co-located scan of ~n/2^bits candidates, never the full
     table. Exactly oracle-checkable because the hyperplanes are
     literals and the sign sums use the scaled-long grid."""
-
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    cand = _lsh_cand(_lsh_bands(emb), multiprobe=False)
-    q, c = _qc_frames(emb)
-    scored = (
-        cand.join(F.broadcast(q), "q_id")
-        .join(c, "c_id")
-        .select("q_id", "c_id",
-                _cosine(F.col("qe"), F.col("ce"),
-                        F.col("qn"), F.col("cn")).alias("cos"))
-    )
-    return _topk(scored)
+    return _rerank(_gen_lsh(spark, sf_dir))
 
 
 def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,18 +1007,7 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x bands x 7), never the table scan. Probe keys are pure
     string flips of the exact grid-sign signatures, so the candidate
     set — and therefore the result — stays exactly oracle-checkable."""
-
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    cand = _lsh_cand(_lsh_bands(emb), multiprobe=True)
-    q, c = _qc_frames(emb)
-    scored = (
-        cand.join(F.broadcast(q), "q_id")
-        .join(c, "c_id")
-        .select("q_id", "c_id",
-                _cosine(F.col("qe"), F.col("ce"),
-                        F.col("qn"), F.col("cn")).alias("cos"))
-    )
-    return _topk(scored)
+    return _rerank(_gen_lsh(spark, sf_dir, multiprobe=True))
 
 
 # Max vectors per ND-LSH bucket before the bucket is dropped as
@@ -1165,23 +1019,15 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_BUCKET_CAP = 45
 
 
-def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT embedding-cosine near-dup pairs: all i<j pairs with
-    cosine >= 0.35 — the honest all-pairs semantics this name promised
-    in round 1. Registered as the FIXTURE-SCALE RECALL ORACLE for
-    embedding_neardup_pairs_blocked (the production path), exactly the
-    role ngram_jaccard_pairs plays for dedup_verified_pairs: it is
-    deliberately demoted from the driver window and must never appear
-    in a production plan — the broadcast product is O(n^2) row
-    generation and only viable on the 500-vector fixture."""
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    a = emb.select(F.col("vec_id").alias("d1"),
-                   F.col("embedding").alias("ea"), F.col("norm").alias("na"))
-    b = emb.select(F.col("vec_id").alias("d2"),
-                   F.col("embedding").alias("eb"), F.col("norm").alias("nb"))
+def _neardup(emb: DataFrame,
+             join: Callable[[DataFrame, DataFrame], DataFrame]) -> DataFrame:
+    """(d1, d2, cos) near-dup pairs: `join` pairs the (d1, ea, na) and
+    (d2, eb, nb) sides of the normed `emb`; pairs at or above
+    NEARDUP_COS are kept, cosine rounded for display."""
+    a = _side(emb, "d1", "ea", "na")
+    b = _side(emb, "d2", "eb", "nb")
     return (
-        F.broadcast(a)
-        .join(b, F.col("d1") < F.col("d2"))
+        join(a, b)
         .select(
             "d1",
             "d2",
@@ -1192,6 +1038,19 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d1", "d2",
                 F.round(F.col("cos").cast(_DEC), 6).cast("double").alias("cos"))
     )
+
+
+def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT embedding-cosine near-dup pairs: all i<j pairs with
+    cosine >= 0.35. Registered as the FIXTURE-SCALE RECALL ORACLE for
+    embedding_neardup_pairs_blocked (the production path), exactly the
+    role ngram_jaccard_pairs plays for dedup_verified_pairs: it is
+    deliberately demoted from the driver window and must never appear
+    in a production plan — the broadcast product is O(n^2) row
+    generation and only viable on the 500-vector fixture."""
+    return _neardup(
+        _with_norm(tables.load(spark, sf_dir, "embeddings")),
+        lambda a, b: F.broadcast(a).join(b, F.col("d1") < F.col("d2")))
 
 
 def embedding_neardup_pairs_blocked(
@@ -1223,30 +1082,13 @@ def embedding_neardup_pairs_blocked(
     from mapreduce_go_spark.operators.dedup import _bucket_pairs
 
     emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-
     bands = emb.select(
         F.col("vec_id").alias("doc_id"),
         F.posexplode(_BAND_KEYS_ND(F.col("embedding")))
         .alias("band", "band_key"),
     ).select("doc_id", "band", "band_key")
     cands = _bucket_pairs(bands, EMB_BUCKET_CAP)
-    a = emb.select(F.col("vec_id").alias("d1"),
-                   F.col("embedding").alias("ea"), F.col("norm").alias("na"))
-    b = emb.select(F.col("vec_id").alias("d2"),
-                   F.col("embedding").alias("eb"), F.col("norm").alias("nb"))
-    return (
-        cands.join(a, "d1")
-        .join(b, "d2")
-        .select(
-            "d1",
-            "d2",
-            _cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            .alias("cos"),
-        )
-        .where(F.col("cos") >= NEARDUP_COS)
-        .select("d1", "d2",
-                F.round(F.col("cos").cast(_DEC), 6).cast("double").alias("cos"))
-    )
+    return _neardup(emb, lambda a, b: cands.join(a, "d1").join(b, "d2"))
 
 
 def quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,9 +1143,8 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("f", F.lit(True))
     )
-    emb = tables.load(spark, sf_dir, "embeddings")
     return (
-        emb.select("vec_id")
+        tables.load(spark, sf_dir, "embeddings").select("vec_id")
         .join(dups, "vec_id", "left")
         .select("vec_id", F.coalesce("f", F.lit(False)).alias("is_dup"))
     )
@@ -1320,16 +1161,12 @@ PQ_TRAIN_CAP = 2048   # deterministic training sample row bound
 PQ_RERANK = 100   # ADC shortlist size re-ranked with exact cosine
 
 
-from functools import lru_cache
-
-
 def _pq_codebooks(sf_dir: str):
     """Content-key front door for _pq_codebooks_cached: the cache key
     includes the embeddings parquet's mtime+size (the kmeans
     _CODEBOOK_CACHE invalidation discipline), so regenerating the
     fixture at an UNCHANGED path serves fresh codebooks instead of
-    silently pinning the old training for the process lifetime
-    (r14 review)."""
+    silently pinning the old training for the process lifetime."""
     from mapreduce_go_spark.operators.kmeans import (
         _embeddings_content_key)
 
@@ -1391,14 +1228,12 @@ def _query_vec_rows(sf_dir: str) -> list[tuple[int, list[float]]]:
     """The N_QUERIES (vec_id, embedding) query rows sorted by vec_id,
     read Spark-free and content-key cached — the _pq_codebooks
     discipline applied to the OTHER driver-side constant both PQ
-    variants bake into their plans (the ADC lookup tables). Each PQ
-    construction used to run a Spark collect job for these 8 rows
-    (~0.2 s of pure scheduling per build; the dashboard builds both
-    variants, so it paid twice). pyarrow pushes the vec_id predicate
-    into the parquet scan and widens float32 exactly like Spark's
-    row collector, so the values are bit-identical to the collect
-    they replace; the lru key includes the fixture's mtime+size so a
-    rewritten fixture invalidates (r14 review discipline)."""
+    variants bake into their plans (the ADC lookup tables); a Spark
+    collect of these 8 rows cost ~0.2 s of scheduling per build.
+    pyarrow pushes the vec_id predicate into the parquet scan and
+    widens float32 exactly like Spark's row collector, so the values
+    are bit-identical to a collect; the lru key includes the
+    fixture's mtime+size so a rewritten fixture invalidates."""
     from mapreduce_go_spark.operators.kmeans import (
         _embeddings_content_key)
 
@@ -1465,12 +1300,12 @@ def _pq_encode_udf(CB: np.ndarray):
         # _stack, not raw np.vstack: Arrow hands float32 arrays, and
         # a float32 X*X*1e12 norm diverges from the float64 oracle /
         # driver LUT path by ~1e3 grid units — enough to flip a
-        # near-tie sub-codebook argmin between engines (review r10,
-        # confirmed by repro). _check_finite mirrors every sibling
-        # kernel: NaN must fail loudly, not grid to INT64_MIN. NULL
-        # embedding -> NULL codes via the shared scaffolding (the
-        # layout build shares a row pipeline with the null-propagating
-        # sign-word exprs; a NULL must not crash it).
+        # near-tie sub-codebook argmin between engines.
+        # _check_finite mirrors every sibling kernel: NaN must fail
+        # loudly, not grid to INT64_MIN. NULL embedding -> NULL codes
+        # via the shared scaffolding (the layout build shares a row
+        # pipeline with the null-propagating sign-word exprs; a NULL
+        # must not crash it).
         def encode(ev: pd.Series) -> np.ndarray:
             X = _grid_normalize(_check_finite(_stack(ev)))
             S = X.reshape(len(X), M, sub)
@@ -1484,20 +1319,16 @@ def _pq_encode_udf(CB: np.ndarray):
 
 
 def _pq_shortlist(sf_dir: str, emb: DataFrame) -> DataFrame:
-    """(q_id, c_id): ann_pq_topk's ADC shortlist — every vector PQ-
-    encoded in one Arrow pass, per-query ADC table-gather, top-
-    PQ_RERANK per query by (adist, c_id). Extracted (r17) for the
-    dashboard's shared scored-base re-rank; the standalone variant's
-    plan is unchanged (verbatim move)."""
-    from pyspark.sql import Window
+    """(q_id, c_id): the full-table ADC shortlist — every vector
+    PQ-encoded in one Arrow pass, per-query ADC table-gather,
+    top-PQ_RERANK per query by (adist, c_id)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     CB = _pq_codebooks(sf_dir)                 # (M, K, sub)
     M, K, sub = CB.shape
 
-    # N_QUERIES rows, Spark-free + content-key cached (was a per-
-    # construction collect job — see _query_vec_rows)
+    # N_QUERIES rows, Spark-free + content-key cached
     q_rows = _query_vec_rows(sf_dir)
     Q = np.asarray([e for _, e in q_rows], dtype=np.float64)
     q_ids = np.asarray([qid for qid, _ in q_rows])
@@ -1513,8 +1344,8 @@ def _pq_shortlist(sf_dir: str, emb: DataFrame) -> DataFrame:
         # NULL codes (null-propagated from a NULL embedding) -> NULL
         # scores; Catalyst collapses chained pandas UDFs into one
         # evaluation node, so the codes-IS-NOT-NULL filter downstream
-        # runs AFTER this kernel sees the raw batch (ADVICE r15) —
-        # the kernel itself must null-propagate like every sibling.
+        # runs AFTER this kernel sees the raw batch — the kernel
+        # itself must null-propagate like every sibling.
         def dense(cs: pd.Series) -> np.ndarray:
             C = np.vstack(cs.to_numpy())           # (n, M) int codes
             cols = np.arange(M)[None, :]
@@ -1529,7 +1360,7 @@ def _pq_shortlist(sf_dir: str, emb: DataFrame) -> DataFrame:
     # NULL codes (null-propagated from a NULL embedding) would crash
     # the vstack in adc_scores and, were it total, crowd the NULLS-
     # FIRST (adist, c_id) shortlist — excluded symmetrically with the
-    # oracle's pcodes d IS NOT NULL guard (ADVICE r15).
+    # oracle's pcodes d IS NOT NULL guard.
     coded = coded.where(F.col("codes").isNotNull())
     scored = coded.select(
         "vec_id", adc_scores("codes").alias("ad")
@@ -1542,12 +1373,13 @@ def _pq_shortlist(sf_dir: str, emb: DataFrame) -> DataFrame:
             F.array(*[F.lit(int(i)).cast("long") for i in q_ids]),
             F.col("qi") + 1),
     ).where(F.col("q_id") != F.col("c_id"))
-    w_ad = Window.partitionBy("q_id").orderBy("adist", "c_id")
-    return (
-        scored.withColumn("ark", F.row_number().over(w_ad))
-        .where(F.col("ark") <= PQ_RERANK)
-        .select("q_id", "c_id")
-    )
+    return _top_n(scored, PQ_RERANK, "adist, c_id", "ark", "q_id", "c_id")
+
+
+def _gen_pq(spark: SparkSession, sf_dir: str, share=_inline) -> _Cand:
+    """Pairs: the full-table ADC shortlist."""
+    embn = _with_norm(tables.load(spark, sf_dir, "embeddings"))
+    return _Cand(_pq_shortlist(sf_dir, embn), embn)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,206 +1409,77 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so encode argmin, ADC totals and the shortlist are bit-identical
     across engines and the whole query is differentially checked,
     not just recall-floored."""
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    shortlist = _pq_shortlist(sf_dir, emb)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"), F.col("norm").alias("qn"))
-    c = emb.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("ce"), F.col("norm").alias("cn"))
-    rerank = (
-        shortlist.join(F.broadcast(q), "q_id")
-        .join(c, "c_id")
-        .select(
-            "q_id", "c_id",
-            _cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-            .alias("cos"))
-    )
-    return _topk(rerank)
+    return _rerank(_gen_pq(spark, sf_dir))
 
 
-#: Every approximate variant the dashboard scores against the
-#: brute-force anchor. hybrid_rrf_topk retrieves by a DIFFERENT
-#: objective (dense + lexical fusion), so its number reads as
-#: dense-agreement rather than recall — included because a silent
+#: The generator table: every approximate variant the dashboard
+#: scores against the brute-force anchor, as name -> (candidate
+#: generator, fused). A generator is called as gen(spark, sf_dir,
+#: share); None means every pair (hybrid_rrf_topk's brute-force dense
+#: pool). Fused variants feed their scored candidates through the
+#: hybrid RRF tail instead of _topk; hybrid_rrf_topk retrieves by a
+#: DIFFERENT objective (dense + lexical fusion), so its number reads
+#: as dense-agreement rather than recall — included because a silent
 #: drop there is just as much a regression signal.
-ANN_RECALL_VARIANTS = (
-    "ann_ivf_topk", "ann_ivf_nprobe_topk", "ann_ivf_trained_topk",
-    "ann_ivf_sampled_topk", "ann_ivf_hamming_topk", "ann_ivf_pq_topk",
-    "ann_lsh_topk",
-    "ann_lsh_multiprobe_topk", "ann_pq_topk", "ann_binary_hamming_topk",
-    "matryoshka_two_stage_topk", "hybrid_rrf_topk",
-    "hybrid_rrf_ann_topk",
-)
+ANN_RECALL_VARIANTS: dict[str, tuple[Callable[..., _Cand] | None, bool]] = {
+    "ann_ivf_topk": (_gen_ivf, False),
+    "ann_ivf_nprobe_topk": (_gen_ivf_nprobe, False),
+    "ann_ivf_trained_topk": (_gen_trained, False),
+    "ann_ivf_sampled_topk": (
+        partial(_gen_trained, sample_frac=IVF_SAMPLE_FRAC), False),
+    "ann_ivf_hamming_topk": (_gen_ivf_hamming, False),
+    "ann_ivf_pq_topk": (_gen_ivf_pq, False),
+    "ann_lsh_topk": (_gen_lsh, False),
+    "ann_lsh_multiprobe_topk": (partial(_gen_lsh, multiprobe=True), False),
+    "ann_pq_topk": (_gen_pq, False),
+    "ann_binary_hamming_topk": (_gen_binary_hamming, False),
+    "matryoshka_two_stage_topk": (_gen_matryoshka, False),
+    "hybrid_rrf_topk": (None, True),
+    "hybrid_rrf_ann_topk": (_gen_ivf_hamming, True),
+}
 
 
-def _ivf_trained_probe(spark: SparkSession, sf_dir: str,
-                       nprobe: int,
-                       sample_frac: float | None = None) -> DataFrame:
-    """(q_id, cluster) probe relation of the trained-IVF family —
-    the same explode-over-ranked-centroids expression the variants
-    run, re-derived for the dashboard's probed-cell counts (VERDICT
-    r13 item 7). The codebook comes from the shared artifact cache,
-    so this trains nothing."""
-    from mapreduce_go_spark.operators.kmeans import (
-        _dist_array_sql, kmeans_centroids)
+def _dashboard_frames(spark: SparkSession, sf_dir: str
+                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(rows, anchor, probes) of ann_recall_dashboard: every variant's
+    (variant, q_id, c_id) output rows, the brute-force (q_id, c_id)
+    top-k, and (variant, n_probed_cells) for the cell-probing
+    variants.
 
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
-                                 sample_frac=sample_frac)
-    raw = tables.load(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    return raw.where(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id as q_id",
-        f"explode(transform(slice(array_sort({_dist_array_sql(centroids)}),"
-        f" 1, {nprobe}), s -> s.i)) as cluster",
-    )
-
-
-def ann_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of EVERY approximate variant against the brute-force
-    cosine anchor, as one relational dashboard row per variant
-    (VERDICT r12 item 7): per-variant recall was pinned only in
-    scattered pytest thresholds (tests/test_approx.py); this makes a
-    recall regression a CORRECTNESS failure. The variant top-k sets
-    join the anchor's (q_id, c_id) pairs — both sides deterministic
-    (every variant breaks ties on (score DESC, c_id)) — so
-    n_hits/n_anchor is exact, not a sampled estimate.
-
-    100 TB shape: each variant is its own already-scale-shaped plan;
-    the comparison adds one BROADCAST of the anchor's K*N_QUERIES
-    pairs (constant-size) and a 10-group aggregate — no new shuffle
-    of anything data-sized. The embeddings scan and the normed base
-    relation are registered in the cache ONCE here (VERDICT r13
-    item 4): every variant subtree that reads the table (they all
-    build the identical tables.load / _with_norm plans) is
-    substituted with the in-memory relation by Catalyst's cache
-    manager, so the 13 variants stop re-scanning the parquet +
-    re-deriving norms per plan. persist() is lazy — the first
-    executing variant materializes it; bench clears the cache
-    between queries.
-
-    n_probed_cells (VERDICT r13 item 7): for the cell-probing
-    variants the dashboard also counts the variant's ACTUAL probe
-    relation (q, cell) rows — the recall/cost knob — so a probe-width
-    regression fails this seat's hash, not just a pytest threshold.
-    NULL for variants without a cell probe (full scans, LSH buckets,
-    PQ, prefix re-rankers, the hybrids' fused output).
-
-    r17 (VERDICT r16 item 1): the 13 variants no longer re-execute
-    their full standalone plans. Every variant's FINAL ranking is the
-    same exact grid cosine over (q_id, c_id) candidate pairs, and the
-    brute-force anchor must score ALL pairs anyway — so the dashboard
-    derives ONE scored-base relation (q x c cosine on the shared
-    projections, N_QUERIES x (N-1) rows, lazily localCheckpointed
-    inside the timed query and rebuilt on every invocation) and each
-    variant joins its own candidate set against it: IVF by cell
-    equality, the trained family through the cluster-partitioned
-    layout table's assignment column (identical by construction to
-    _assign with the same codebook), Hamming/PQ/LSH/matryoshka
-    through their extracted candidate helpers, the hybrids' dense
-    pools as rank windows over the same relation. Candidate
-    GENERATION (probes, assignments, signatures, ADC, prefix pass)
-    stays on each variant's own lineage — only the value-identical
-    exact-cosine re-rank is shared. Relations consumed by 2+ variants
-    (nprobe/trained/sampled probe lists, the IVF-Hamming candidates,
-    the LSH band keys) are also lazily localCheckpointed, so each
-    executes once instead of once per consumer (Spark materializes
-    no diamond sharing on its own — r16's measured lesson). Variant
-    output rows verified identical to the standalone plans by full
-    collect compare at sf0.01 AND sf0.1."""
-    from pyspark.sql import Window
-
-    from mapreduce_go_spark.operators.kmeans import (
-        _assign, kmeans_centroids)
-
+    Every variant's final ranking is the same exact grid cosine over
+    its candidates, and the brute-force anchor must score ALL pairs
+    anyway — so ONE scored base (N_QUERIES x (N-1) rows, lazily
+    localCheckpointed inside the timed query and rebuilt on every
+    invocation) replaces the per-variant re-scoring: each generator's
+    candidates join it on (q_id, c_id) or (q_id, cell). Candidate
+    GENERATION stays on each variant's own lineage; only the
+    value-identical refinement is shared. Sub-relations a generator
+    marks with `share` (probe lists consumed by the variant and its
+    probed-cell count, the IVF-Hamming candidates two variants read,
+    the LSH band keys) are lazily localCheckpointed once, since Spark
+    materializes no diamond sharing on its own. The embeddings scan
+    and its normed twin are persisted: every generator subtree that
+    reads the table builds the identical plan, which Catalyst's cache
+    manager substitutes."""
     base = tables.load(spark, sf_dir, "embeddings")
     base.persist()
     embn = _with_norm(base)
     embn.persist()
-    # Deliberately NOT cached: the hybrids' lexical (doc_id, tok)
-    # relation. Measured (r14): caching it makes the two hybrids
-    # SLOWER (5.6 -> 7.9 s at sf0.1) — the InMemoryRelation breaks
-    # whole-stage codegen and its columnar->row hand-off per consumer
-    # costs more than the saved explode+distinct shuffle at fixture
-    # scale. The embeddings/norm persists above are the ones that pay
-    # (measured 12.9 -> 9.8 s for the whole dashboard).
-    q, c = _qc_frames(embn, "label")
-    scored_all = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", F.col("label").alias("c_label"),
-                _cosine(F.col("qe"), F.col("ce"),
-                        F.col("qn"), F.col("cn")).alias("cos"))
-        .localCheckpoint(eager=False)
-    )
-    pairs = scored_all.select("q_id", "c_id", "cos")
+    scored = _all_pairs(embn, "label").localCheckpoint(eager=False)
+    pairs = scored.select("q_id", "c_id", "cos")
+    shared: dict[str, DataFrame] = {}
 
-    # shared probe/candidate relations — each consumed >= 2 times
-    # (variant builder + probed-cell count, or two variants)
-    probed_np = _ivf_nprobe_probe(spark, sf_dir).localCheckpoint(
-        eager=False)
-    probe_tr = _ivf_trained_probe(
-        spark, sf_dir, IVF_TRAINED_NPROBE).localCheckpoint(eager=False)
-    probe_sm = _ivf_trained_probe(
-        spark, sf_dir, IVF_TRAINED_NPROBE,
-        sample_frac=IVF_SAMPLE_FRAC).localCheckpoint(eager=False)
-    ham_cand = _ivf_hamming_cand(spark, sf_dir).localCheckpoint(
-        eager=False)
-    bands = _lsh_bands(embn).localCheckpoint(eager=False)
+    def share(key: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if key not in shared:
+            shared[key] = build().localCheckpoint(eager=False)
+        return shared[key]
 
-    layout_cells = _ivf_layout_table(spark, sf_dir).select(
-        F.col("vec_id").alias("c_id"), "cluster")
-    sampled_cells = _assign(
-        base.select("vec_id", "embedding"),
-        kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
-                         sample_frac=IVF_SAMPLE_FRAC)).select(
-        F.col("vec_id").alias("c_id"), "cluster")
-    qcell = base.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("label").alias("qcell"))
-
-    def by_pair(cand: DataFrame) -> DataFrame:
-        return pairs.join(F.broadcast(cand), ["q_id", "c_id"])
-
-    def by_cells(cells: DataFrame, probe: DataFrame) -> DataFrame:
-        return (pairs.join(cells, "c_id")
-                .join(F.broadcast(probe), ["q_id", "cluster"])
-                .select("q_id", "c_id", "cos"))
-
-    def dense_rank(scored: DataFrame) -> DataFrame:
-        wd = Window.partitionBy("q_id").orderBy(
-            F.col("cos").desc_nulls_last(), "c_id")
-        return (scored.withColumn("rd", F.row_number().over(wd))
-                .where(F.col("rd") <= RRF_POOL)
-                .select("q_id", "c_id", "rd"))
-
-    variant_pairs = {
-        "ann_ivf_topk": scored_all.join(F.broadcast(qcell), "q_id")
-        .where(F.col("c_label") == F.col("qcell"))
-        .select("q_id", "c_id", "cos"),
-        "ann_ivf_nprobe_topk": scored_all.join(
-            F.broadcast(probed_np.withColumnRenamed("label", "c_label")),
-            ["q_id", "c_label"]).select("q_id", "c_id", "cos"),
-        "ann_ivf_trained_topk": by_cells(layout_cells, probe_tr),
-        "ann_ivf_sampled_topk": by_cells(sampled_cells, probe_sm),
-        "ann_ivf_hamming_topk": by_pair(ham_cand),
-        "ann_ivf_pq_topk": by_pair(_ivf_pq_shortlist(spark, sf_dir)),
-        "ann_lsh_topk": by_pair(_lsh_cand(bands, multiprobe=False)),
-        "ann_lsh_multiprobe_topk": by_pair(
-            _lsh_cand(bands, multiprobe=True)),
-        "ann_pq_topk": by_pair(_pq_shortlist(sf_dir, embn)),
-        "ann_binary_hamming_topk": by_pair(_bq_cand(base)),
-        "matryoshka_two_stage_topk": by_pair(_mrl_cand(base)),
-    }
     # the two hybrid rows share ONE lexical execution: tsets (the
     # per-doc token-sets aggregation) and qprobe checkpointed, toks/qt
     # re-derived in-row from the checkpointed arrays. Interleaved
     # min-of-4: 6.69 -> 5.43 s for the whole dashboard, values
-    # identical. (The r14 "don't cache lexical" note was about
-    # .persist()'s InMemoryRelation inside ONE hybrid; a lazy
-    # localCheckpoint shared by TWO hybrid executions is a different
-    # trade and was measured to win.)
+    # identical (a .persist() of the lexical relation instead was
+    # measured SLOWER: its InMemoryRelation breaks whole-stage codegen).
     tsets0, _toks0, _qt0, qprobe0 = _lex_probe_frames(spark, sf_dir)
     tsets_ck = tsets0.localCheckpoint(eager=False)
     toks_ck = tsets_ck.select("doc_id", F.explode("ts").alias("tok"))
@@ -1784,38 +1487,50 @@ def ann_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("q_id"), "tok")
     lex_frames = (tsets_ck, toks_ck, qt_ck,
                   qprobe0.localCheckpoint(eager=False))
-    anchor = _topk(pairs).select("q_id", "c_id")
+
+    rows, probes = [], []
+    for name, (gen, fused) in ANN_RECALL_VARIANTS.items():
+        g, cand = None, pairs
+        if gen is not None:
+            g = gen(spark, sf_dir, share)
+            on = scored if g.cells is None else scored.join(g.cells(), "c_id")
+            cand = on.join(F.broadcast(g.rel), ["q_id", g.on]).select(
+                "q_id", "c_id", "cos")
+        v = (_rrf_lex_and_fuse(spark, sf_dir, _dense_pool(cand), lex_frames)
+             if fused else _topk(cand))
+        rows.append(v.select(F.lit(name).alias("variant"), "q_id", "c_id"))
+        if g is not None and g.probe is not None and not fused:
+            probes.append(g.probe.agg(
+                F.count("*").cast("bigint").alias("n_probed_cells")).select(
+                F.lit(name).alias("variant"), "n_probed_cells"))
+    return (reduce(DataFrame.unionByName, rows),
+            _topk(pairs).select("q_id", "c_id"),
+            reduce(DataFrame.unionByName, probes))
+
+
+def ann_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@K of EVERY approximate variant against the brute-force
+    cosine anchor, as one relational dashboard row per variant: a
+    recall regression is a CORRECTNESS failure, not only a pytest
+    threshold. The variant top-k sets join the anchor's (q_id, c_id)
+    pairs — both sides deterministic (every variant breaks ties on
+    (score DESC, c_id)) — so n_hits/n_anchor is exact, not a sampled
+    estimate.
+
+    n_probed_cells: for the cell-probing variants the dashboard also
+    counts the variant's ACTUAL probe relation (q, cell) rows — the
+    recall/cost knob — so a probe-width regression fails this seat's
+    hash. NULL for variants without a cell probe (full scans, LSH
+    buckets, PQ, prefix re-rankers, the hybrids' fused output).
+
+    100 TB shape: the variants share one scored base
+    (_dashboard_frames); the comparison adds one BROADCAST of the
+    anchor's K*N_QUERIES pairs (constant-size) and a 13-group
+    aggregate — no new shuffle of anything data-sized. Variant rows
+    equal the standalone queries' rows (pinned in
+    tests/test_approx.py)."""
+    rows, anchor, probes = _dashboard_frames(spark, sf_dir)
     n_anchor = anchor.agg(F.count("*").alias("n_anchor"))
-    rows = None
-    for name in ANN_RECALL_VARIANTS:
-        if name == "hybrid_rrf_topk":
-            v = _rrf_lex_and_fuse(spark, sf_dir, dense_rank(pairs),
-                                  frames=lex_frames)
-        elif name == "hybrid_rrf_ann_topk":
-            v = _rrf_lex_and_fuse(spark, sf_dir,
-                                  dense_rank(by_pair(ham_cand)),
-                                  frames=lex_frames)
-        else:
-            v = _topk(variant_pairs[name])
-        v = v.select(F.lit(name).alias("variant"), "q_id", "c_id")
-        rows = v if rows is None else rows.unionByName(v)
-    probe_frames = {
-        "ann_ivf_topk": qcell.select(
-            "q_id", F.col("qcell").alias("cell")),
-        "ann_ivf_nprobe_topk": probed_np,
-        "ann_ivf_trained_topk": probe_tr,
-        "ann_ivf_sampled_topk": probe_sm,
-        "ann_ivf_hamming_topk": _ivf_trained_probe(
-            spark, sf_dir, IVF_HAM_NPROBE),
-        "ann_ivf_pq_topk": _ivf_trained_probe(
-            spark, sf_dir, IVF_PQ_NPROBE),
-    }
-    probes = None
-    for name, pf in probe_frames.items():
-        one = pf.agg(F.count("*").cast("bigint")
-                     .alias("n_probed_cells")).select(
-            F.lit(name).alias("variant"), "n_probed_cells")
-        probes = one if probes is None else probes.unionByName(one)
     marked = rows.join(
         F.broadcast(anchor.withColumn("hit", F.lit(1))),
         ["q_id", "c_id"], "left")

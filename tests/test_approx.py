@@ -764,3 +764,21 @@ def test_dashboard_rows_match_standalone_variants(spark, sf_dir):
         expected_recall = round(n_hits / len(anchor), 6)
         assert abs(got.recall - expected_recall) < 1e-9, (name, got)
     spark.catalog.clearCache()
+
+
+def test_dashboard_pair_sets_match_standalone_variants(spark, sf_dir):
+    """Equal counts do not imply equal sets: for every generator-table
+    entry, the (q_id, c_id) set the dashboard derives from its shared
+    scored base must equal the set the standalone query returns."""
+    from mapreduce_go_spark.operators import similarity as S
+
+    rows, _anchor, _probes = S._dashboard_frames(spark, sf_dir)
+    dash: dict[str, set] = {name: set() for name in S.ANN_RECALL_VARIANTS}
+    for r in rows.collect():
+        dash[r.variant].add((r.q_id, r.c_id))
+    for name in S.ANN_RECALL_VARIANTS:
+        want = set(map(tuple, S.QUERIES[name](spark, sf_dir)
+                       .select("q_id", "c_id").collect()))
+        assert want, name
+        assert dash[name] == want, (name, sorted(dash[name] ^ want)[:10])
+    spark.catalog.clearCache()

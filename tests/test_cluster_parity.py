@@ -11,9 +11,12 @@ UDFs through remote python workers, broadcast distribution to a
 second JVM, and shuffle reads across executor boundaries. One query
 per risk class, sf0.01 to keep the 1 GiB executors comfortable."""
 
+import os
 import subprocess
 import sys
 import textwrap
+
+_TESTS = os.path.dirname(os.path.abspath(__file__))
 
 # query -> why it's in the sample
 SAMPLE = {
@@ -31,11 +34,11 @@ SAMPLE = {
 }
 
 
-def test_oracle_parity_on_local_cluster():
+def test_oracle_parity_on_local_cluster(sf_dir):
     script = textwrap.dedent(f"""
         import sys
-        sys.path.insert(0, "/root/repo")
-        sys.path.insert(0, "/root/repo/tests")
+        sys.path.insert(0, {os.path.dirname(_TESTS)!r})
+        sys.path.insert(0, {_TESTS!r})
         from pyspark.sql import SparkSession
         spark = (SparkSession.builder.master("local-cluster[2,1,1024]")
                  .appName("cluster-parity")
@@ -52,10 +55,10 @@ def test_oracle_parity_on_local_cluster():
         for t in ("region nation customer supplier part orders lineitem "
                   "events documents embeddings").split():
             con.execute("create view " + t + " as select * from "
-                        "'/root/testdata/sf0.01/" + t + ".parquet'")
+                        "'" + {sf_dir!r} + "/" + t + ".parquet'")
         qs, osql = e.queries(), e.oracle_sql()
         for name in {list(SAMPLE)!r}:
-            df = qs[name](spark, "/root/testdata/sf0.01")
+            df = qs[name](spark, {sf_dir!r})
             scols, srows = canonical_rows(
                 df.columns, [tuple(r) for r in df.collect()])
             cur = con.execute(osql[name])

@@ -49,14 +49,14 @@ def test_vectorized_entropy_bit_identical_adversarial():
         assert _loop_entropy(px) == _vec_entropy(px), i
 
 
-def test_vectorized_entropy_bit_identical_fixture_sample():
+def test_vectorized_entropy_bit_identical_fixture_sample(sf_dir):
     import duckdb
 
     from mapreduce_go_spark.operators.multimodal import _jpeg_gray_pixels
 
     rows = duckdb.sql(
         "select doc_id, text from "
-        "'/root/testdata/sf0.01/documents.parquet'").fetchall()
+        f"'{sf_dir}/documents.parquet'").fetchall()
     assert rows
     for d, t in rows:
         px, _w, _h = _jpeg_gray_pixels(int(d), t.encode())
@@ -69,3 +69,16 @@ def test_encode_gray_roundtrip_recon_still_exact():
                np.zeros((8, 8), np.uint8)):
         data, recon = J.encode_gray(px, return_recon=True)
         assert np.array_equal(J.decode_gray(data), recon)
+
+
+def test_vectorized_entropy_rejects_out_of_range_coefficient():
+    """The category LUT covers magnitudes below 2**16; a larger AC
+    coefficient or DC difference must fail with a message naming the
+    bound, not an IndexError from the lookup."""
+    import pytest
+
+    for pos, val in ((5, 70000), (5, -65536), (0, 65536)):
+        zz = np.zeros((2, 64), dtype=np.int64)
+        zz[1, pos] = val
+        with pytest.raises(ValueError, match="16-bit baseline"):
+            J._encode_blocks_vec(zz)
