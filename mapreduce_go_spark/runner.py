@@ -14,18 +14,28 @@ classic pipeline — scan -> flat-map -> shuffle by key -> sorted group
 - map phase: `mapInPandas` over (filename, contents) rows; Arrow
   batches, one Python interpreter per core (vs one plugin process per
   worker in the reference).
-- shuffle + group: `repartition(n_reduce, key)` +
+- shuffle + group: `repartition(key)` +
   `sortWithinPartitions` + per-partition adjacent grouping — the
   EXACT reduce-side algorithm of the reference (sort whole partition,
   two-pointer group scan, /root/reference/mr/worker.go:66-100),
   except Spark's sort spills to disk instead of slurping (SURVEY §4.2
-  P4).
+  P4). The reduce width is the session's shuffle width, which AQE
+  coalesces to the shuffle's size: every Python task pays a fixed
+  worker start-up (~250-300 ms on a 4-core host) whatever its input,
+  so a fixed R would run R of them even for a few hundred KB.
 - holistic reduce contract honored: reducef sees the complete,
   sorted-by-key value list exactly once per key
   (/root/reference/mr/worker.go:90).
-- output: `mr-out-<partition>` files of "key value" lines, written
+  AQE only merges whole hash partitions and never splits a column
+  repartition, so each key stays in one task, sorted with the rest of
+  that task's keys.
+- output: R = `n_reduce` `mr-out` shards of "key value" lines, written
   atomically by Spark's task-commit protocol (replacing the temp+
   rename idiom, /root/reference/mr/worker.go:92-98).
+  Shard i holds the keys with pmod(hash(key), R) == i in key order:
+  the reference's ihash(key) % nReduce buckets, with Spark's murmur3
+  in place of FNV. Only the reduced output is re-shuffled into the R
+  shards, on the JVM.
 
 `run_sequential` is the mrsequential twin
 (/root/reference/main/mrsequential.go:38-87): same pipeline, pure
@@ -94,9 +104,12 @@ def map_phase(corpus: DataFrame, mapf: MapF) -> DataFrame:
     return corpus.mapInPandas(apply_map, _KV_SCHEMA)
 
 
-def reduce_phase(kv: DataFrame, reducef: ReduceF, n_reduce: int) -> DataFrame:
+def reduce_phase(kv: DataFrame, reducef: ReduceF) -> DataFrame:
     """shuffle (F3) + in-partition sort (F6) + adjacent group (F7) +
-    holistic reduce (F8). Values arrive sorted within each key group
+    holistic reduce (F8) on the session's AQE-sized shuffle: one
+    Python task per coalesced partition, never a fixed count.
+
+    Values arrive sorted within each key group
     only if the caller's reducef sorts them (same contract as the
     reference: reducers that need order sort explicitly, e.g.
     /root/reference/mrapps/indexer.go:37)."""
@@ -128,7 +141,7 @@ def reduce_phase(kv: DataFrame, reducef: ReduceF, n_reduce: int) -> DataFrame:
                                columns=["key", "out"])
 
     return (
-        kv.repartition(n_reduce, "key")
+        kv.repartition("key")
         .sortWithinPartitions("key")
         .mapInPandas(apply_reduce, _OUT_SCHEMA)
     )
@@ -138,19 +151,22 @@ def run_job(spark: SparkSession, corpus: DataFrame, mapf: MapF,
             reducef: ReduceF, n_reduce: int = 10,
             out_dir: str | None = None) -> DataFrame:
     """Full job. Returns the (key, out) DataFrame; when out_dir is
-    given, also writes mr-out-style text shards ("key out" lines,
-    one file per reduce partition, atomic via Spark's commit
-    protocol)."""
+    given, also writes R = n_reduce mr-out-style text shards ("key
+    out" lines; shard i holds the keys with pmod(hash(key), R) == i,
+    in key order; atomic via Spark's commit protocol). R only shapes
+    the output: the Python reduce runs on the AQE-sized shuffle, and
+    the write re-shuffles the reduced output alone."""
     from mapreduce_go_spark.session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    result = reduce_phase(map_phase(corpus, mapf), reducef, n_reduce)
+    result = reduce_phase(map_phase(corpus, mapf), reducef)
     if out_dir is not None:
         # persist before the text write: the write is its own action,
         # and an unpersisted handle would recompute the whole
-        # map+shuffle+reduce on the caller's next action (r14 review)
+        # map+shuffle+reduce on the caller's next action
         result = result.persist()
-        (result.select(F.format_string("%s %s", "key", "out").alias("line"))
+        (result.repartition(n_reduce, "key").sortWithinPartitions("key")
+         .select(F.format_string("%s %s", "key", "out").alias("line"))
          .write.mode("overwrite").text(out_dir))
     return result
 

@@ -1,0 +1,51 @@
+"""The gain rule of tools/ab_pairs.py on canned paired results: no
+Spark session, no benchmark run."""
+
+import importlib.util
+import os
+
+import pytest
+
+spec = importlib.util.spec_from_file_location(
+    "ab_pairs", os.path.join(os.path.dirname(__file__), "..", "tools",
+                             "ab_pairs.py"))
+ab_pairs = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(ab_pairs)
+
+PARENT = [5.4, 5.5, 5.3, 5.6, 5.5, 5.4, 5.7, 5.5, 5.6, 5.4]
+
+
+def test_gain_holds_when_nine_of_ten_won_beyond_parent_iqr():
+    change = [3.4, 3.5, 3.3, 3.6, 3.5, 3.4, 3.7, 3.5, 3.6, 5.8]
+    v = ab_pairs.verdict(PARENT, change)
+    assert v["wins"] == 9 and v["pairs"] == 10
+    assert v["parent"][1] == pytest.approx(5.5)
+    assert v["parent_iqr"] == pytest.approx(5.6 - 5.4)
+    assert v["worse_by"] == pytest.approx((3.5 - 5.5) / 5.5)
+    assert v["gain"]
+
+
+def test_no_gain_with_eight_wins_or_ties():
+    change = [3.4, 3.5, 3.3, 3.6, 3.5, 3.4, 3.7, 3.5, 5.6, 5.8]
+    v = ab_pairs.verdict(PARENT, change)
+    assert v["wins"] == 8  # the tie at 5.6 counts for neither side
+    assert not v["gain"]
+
+
+def test_no_gain_when_median_shift_within_parent_iqr():
+    change = [p - 0.05 for p in PARENT]
+    v = ab_pairs.verdict(PARENT, change)
+    assert v["wins"] == 10
+    assert not v["gain"]
+
+
+def test_higher_is_better_flips_the_direction():
+    v = ab_pairs.verdict([1.0, 1.1, 1.0, 1.2], [2.0, 2.1, 2.0, 2.2],
+                         better="higher")
+    assert v["wins"] == 4 and v["gain"]
+    assert v["worse_by"] < 0
+
+
+def test_unpaired_runs_are_refused():
+    with pytest.raises(ValueError):
+        ab_pairs.verdict([1.0, 2.0], [1.0])

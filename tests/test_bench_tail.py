@@ -78,3 +78,27 @@ def test_tail_subset_is_deterministic_by_name_not_time():
     # at most a couple of entries at the boundary
     assert len(common) >= min(len(s1["queries"]),
                               len(s2["queries"])) - 3
+
+
+def test_overflowing_entry_does_not_block_later_short_entries():
+    base = {"metric": "headline_queries_total_wall", "value": 1.0,
+            "unit": "sec"}
+    long_name, filler = "q" * 120, "f" * 40
+    items = [(filler, 1.0), (long_name, 2.0), ("a", 3.0), ("b", 4.0)]
+    budget = len(json.dumps(bench.fill_summary_queries(
+        base, [(filler, 1.0), ("a", 3.0), ("b", 4.0)], 0.1)))
+    s = bench.fill_summary_queries(base, items, 0.1, budget=budget)
+    assert list(s["queries"]) == [filler, "a", "b"]
+    assert s["n_queries_in_tail"] == 3
+    assert len(json.dumps(s)) <= budget
+
+
+def test_budget_holds_with_the_printed_count():
+    base = {"metric": "headline_queries_total_wall", "value": 1.0}
+    items = [(f"q{i}", 1.0) for i in range(10)]
+    full = bench.fill_summary_queries(base, items, 0.1, budget=10_000)
+    assert full["n_queries_in_tail"] == 10
+    budget = len(json.dumps(full)) - 1
+    s = bench.fill_summary_queries(base, items, 0.1, budget=budget)
+    assert len(json.dumps(s)) <= budget
+    assert s["n_queries_in_tail"] == len(s["queries"]) == 9

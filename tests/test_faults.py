@@ -11,15 +11,18 @@ analogs of the reference's crash / mtiming / rtiming suites
   by recording per-task wall-clock intervals and checking overlap.
 """
 
+import os
 import subprocess
 import sys
 import textwrap
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_task_retry_converges_to_golden():
     script = textwrap.dedent("""
         import os, sys, tempfile
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])  # the repo root
         from pyspark.sql import SparkSession, functions as F
         from pyspark.sql.types import LongType
 
@@ -47,8 +50,8 @@ def test_task_retry_converges_to_golden():
         assert got == golden, "retry result diverged from golden"
         print("RETRY_OK")
     """)
-    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
-                         text=True, timeout=300)
+    out = subprocess.run([sys.executable, "-c", script, _REPO],
+                         capture_output=True, text=True, timeout=300)
     assert "RETRY_OK" in out.stdout, out.stderr[-2000:]
 
 
@@ -63,7 +66,7 @@ def test_cross_executor_retry_local_cluster():
     scheduler fabric)."""
     script = textwrap.dedent("""
         import os, sys, tempfile, time
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])  # the repo root
         from pyspark.sql import SparkSession
         from pyspark import TaskContext
 
@@ -87,8 +90,8 @@ def test_cross_executor_retry_local_cluster():
         print("XEXEC_RETRY_OK", len(cwds))
         spark.stop()
     """)
-    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
-                         text=True, timeout=300)
+    out = subprocess.run([sys.executable, "-c", script, _REPO],
+                         capture_output=True, text=True, timeout=300)
     assert "XEXEC_RETRY_OK" in out.stdout, out.stderr[-2000:]
 
 
@@ -111,7 +114,7 @@ def test_speculation_cannot_fire_single_host():
     `att == 0` assertion — flip it into the positive test then."""
     script = textwrap.dedent("""
         import sys, time
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])  # the repo root
         from pyspark.sql import SparkSession
         from pyspark import TaskContext
 
@@ -141,8 +144,8 @@ def test_speculation_cannot_fire_single_host():
         print("SPECULATION_INERT_SINGLE_HOST", round(wall, 1))
         spark.stop()
     """)
-    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
-                         text=True, timeout=300)
+    out = subprocess.run([sys.executable, "-c", script, _REPO],
+                         capture_output=True, text=True, timeout=300)
     assert "SPECULATION_INERT_SINGLE_HOST" in out.stdout, out.stderr[-2000:]
 
 

@@ -3,11 +3,16 @@
 names are stable identifiers, and every oracle references registered
 fixture tables only."""
 
+import os
 import re
 
 import pytest
 
 from mapreduce_go_spark import registry, tables
+from tests.conftest import TEST_SF_DIR
+
+#: the cheapest fixtures, beside the configured ones
+_SF_TINY = os.path.join(os.path.dirname(TEST_SF_DIR), "sf0.001")
 
 _QUERIES = registry.all_queries()
 _ORACLES = registry.all_oracles()
@@ -20,8 +25,8 @@ def test_names_are_identifiers():
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_plan_builds(spark, name):
-    # sf0.001: cheapest fixtures; .schema forces full analysis
-    df = _QUERIES[name](spark, "/root/testdata/sf0.001")
+    # .schema forces full analysis
+    df = _QUERIES[name](spark, _SF_TINY)
     assert df.schema.fields, name
 
 
