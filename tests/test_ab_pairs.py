@@ -2,6 +2,7 @@
 Spark session, no benchmark run."""
 
 import importlib.util
+import json
 import os
 
 import pytest
@@ -49,3 +50,33 @@ def test_higher_is_better_flips_the_direction():
 def test_unpaired_runs_are_refused():
     with pytest.raises(ValueError):
         ab_pairs.verdict([1.0, 2.0], [1.0])
+
+
+def test_position_split_separates_order_from_side():
+    """Canned pairs where running second costs the change 3 s: the
+    split shows the order, the pooled median would not."""
+    parent = [9.0, 9.0, 9.0, 9.0, 9.0]
+    change = [7.0, 12.0, 8.0, 11.0, 8.5]
+    first = [True, False, True, False, True]
+    split = ab_pairs.position_split(parent, change, first)
+    assert split["change first"] == (3, pytest.approx(-1.0))
+    assert split["change second"] == (2, pytest.approx(2.5))
+    assert ab_pairs.position_split([1.0], [2.0], [True])[
+        "change second"] == (0, None)
+
+
+def test_replay_pairs_runs_by_seed(tmp_path):
+    def run(side, seed, first, pass_s):
+        return json.dumps({"side": side, "seed": seed, "first": first,
+                           "failed": 0,
+                           "metrics": {"pass_s": {"value": pass_s}}})
+
+    path = tmp_path / "pairs.jsonl"
+    path.write_text("\n".join([
+        run("change", 2, True, 3.0), run("parent", 2, False, 5.0),
+        run("parent", 1, True, 4.0), run("change", 1, False, 6.0),
+        run("parent", 3, True, 4.5),  # its change run never finished
+    ]) + "\n")
+    pairs = ab_pairs.load_pairs(str(path))
+    assert [(p["seed"], c["seed"]) for p, c in pairs] == [(1, 1), (2, 2)]
+    assert [c["first"] for _, c in pairs] == [False, True]

@@ -3,6 +3,7 @@ each end-to-end metric.
 
     python3 tools/ab_pairs.py --parent ../parent --change . \\
         --workload mr_apps --seeds 21-30 [--out pairs.jsonl]
+    python3 tools/ab_pairs.py --replay pairs.jsonl
 
 For every seed it runs `perfbench/run.py` once in each checkout, one
 fresh process each, alternating which side goes first (the first seed
@@ -13,8 +14,12 @@ neither), the parent's interquartile range, and whether a gain holds by
 the rule for small sandboxes: the change wins at least nine tenths of
 the pairs and the medians differ by more than the parent's IQR. It
 also prints how much worse the change's median is than the parent's,
-beside the metric's bound. `--out` appends every run's summary object,
-with its side, seed and position in the pair, as JSON lines.
+beside the metric's bound, and the median change - parent difference
+split by which side ran first: a difference that follows the order
+rather than the side is the host, not the change. `--out` appends every
+run's summary object, with its side, seed and position in the pair, as
+JSON lines; `--replay` prints the same report from such a file without
+running anything.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -58,6 +64,58 @@ def verdict(parent: list[float], change: list[float],
     }
 
 
+def position_split(parent: list[float], change: list[float],
+                   change_first: list[bool]) -> dict[str, tuple]:
+    """Median change - parent over the pairs in which the change ran
+    first, and over those in which it ran second: (pairs, median or
+    None) per position."""
+    out = {}
+    for label, first in (("change first", True), ("change second", False)):
+        d = [c - p for p, c, f in zip(parent, change, change_first)
+             if f == first]
+        out[label] = (len(d), statistics.median(d) if d else None)
+    return out
+
+
+def load_pairs(path: str) -> list[tuple[dict, dict]]:
+    """(parent, change) run objects per seed, in seed order, from an
+    `--out` file; a seed without both sides is left out."""
+    by_seed: dict[int, dict] = {}
+    with open(path) as fh:
+        for line in fh:
+            if line.strip():
+                r = json.loads(line)
+                by_seed.setdefault(r["seed"], {})[r["side"]] = r
+    return [(d["parent"], d["change"]) for _, d in sorted(by_seed.items())
+            if len(d) == 2]
+
+
+def report(spec: dict, pairs: list[tuple[dict, dict]]) -> None:
+    print(f"{'metric':12s} {'side':7s} {'q1':>9s} {'median':>9s} "
+          f"{'q3':>9s}")
+    change_first = [c["first"] for _, c in pairs]
+    for m in spec["end_to_end"]:
+        name = m["name"]
+        parent = [p["metrics"][name]["value"] for p, _ in pairs]
+        change = [c["metrics"][name]["value"] for _, c in pairs]
+        v = verdict(parent, change, m["better"])
+        for side in ("parent", "change"):
+            q1, q2, q3 = v[side]
+            print(f"{name:12s} {side:7s} {q1:9.4f} {q2:9.4f} {q3:9.4f}")
+        print(f"{name:12s} change won {v['wins']}/{v['pairs']} pairs; "
+              f"parent IQR {v['parent_iqr']:.4f}; median worse by "
+              f"{v['worse_by']:+.1%} (bound {m['bound']:.0%}); gain "
+              f"{'holds' if v['gain'] else 'does not hold'}")
+        print(f"{name:12s} median change - parent: " + "; ".join(
+            f"{label} {d:+.4f} ({n} pairs)" if n else f"{label} -"
+            for label, (n, d) in position_split(parent, change,
+                                                change_first).items()))
+    failed = {side: sum(pair[i]["failed"] for pair in pairs)
+              for i, side in enumerate(("parent", "change"))}
+    print(f"failed operations: parent {failed['parent']}, "
+          f"change {failed['change']}")
+
+
 def run_once(checkout: str, workload: str, seed: int,
              run_seconds: float) -> dict:
     proc = subprocess.run(
@@ -78,22 +136,31 @@ def benchmark_spec() -> dict:
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("--parent", required=True)
-    p.add_argument("--change", required=True)
-    p.add_argument("--workload", required=True)
-    p.add_argument("--seeds", required=True)
+    p.add_argument("--parent")
+    p.add_argument("--change")
+    p.add_argument("--workload")
+    p.add_argument("--seeds")
     p.add_argument("--out")
+    p.add_argument("--replay", metavar="FILE")
     args = p.parse_args(argv)
     spec = benchmark_spec()
+    if args.replay:
+        report(spec, load_pairs(args.replay))
+        return 0
+    if not (args.parent and args.change and args.workload and args.seeds):
+        p.error("--parent, --change, --workload and --seeds are required"
+                " without --replay")
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
-    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    pairs = []
     for i, seed in enumerate(seeds(args.seeds)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        pair = {}
         for pos, side in enumerate(order):
             res = run_once(sides[side], args.workload, seed,
                            spec["run_seconds"])
-            runs[side].append(res)
+            pair[side] = {**res, "side": side, "seed": seed,
+                          "first": pos == 0}
             print(f"seed {seed} {side} ({'first' if pos == 0 else 'second'})"
                   f" correct {res['correct']} failed {res['failed']}/"
                   f"{res['attempted']} " + " ".join(
@@ -101,25 +168,9 @@ def main(argv=None) -> int:
                       for k, v in res["metrics"].items()), flush=True)
             if args.out:
                 with open(args.out, "a") as fh:
-                    fh.write(json.dumps({**res, "side": side, "seed": seed,
-                                         "first": pos == 0}) + "\n")
-    print(f"{'metric':12s} {'side':7s} {'q1':>9s} {'median':>9s} "
-          f"{'q3':>9s}")
-    for m in spec["end_to_end"]:
-        name = m["name"]
-        v = verdict([r["metrics"][name]["value"] for r in runs["parent"]],
-                    [r["metrics"][name]["value"] for r in runs["change"]],
-                    m["better"])
-        for side in ("parent", "change"):
-            q1, q2, q3 = v[side]
-            print(f"{name:12s} {side:7s} {q1:9.4f} {q2:9.4f} {q3:9.4f}")
-        print(f"{name:12s} change won {v['wins']}/{v['pairs']} pairs; "
-              f"parent IQR {v['parent_iqr']:.4f}; median worse by "
-              f"{v['worse_by']:+.1%} (bound {m['bound']:.0%}); gain "
-              f"{'holds' if v['gain'] else 'does not hold'}")
-    failed = {s: sum(r["failed"] for r in rs) for s, rs in runs.items()}
-    print(f"failed operations: parent {failed['parent']}, "
-          f"change {failed['change']}")
+                    fh.write(json.dumps(pair[side]) + "\n")
+        pairs.append((pair["parent"], pair["change"]))
+    report(spec, pairs)
     return 0
 
 
