@@ -1382,8 +1382,9 @@ def phash_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay-idempotence of the streaming twin are proven in
     tests/test_streaming.py.
 
-    Scale shape (the bounded-holder join, same formulation the
-    streaming index uses at streaming/jobs.py:798+): rank band rows
+    Scale shape (the bounded-holder join; the streaming twin,
+    streaming.jobs._phash_epoch, keeps the same at-most-CAP holders
+    per bucket in its index): rank band rows
     per bucket with a window, keep only rk <= PHASH_BAND_CAP as the
     HOLDER relation — at most CAP rows per bucket, so the holder
     side is O(buckets * CAP) regardless of skew — then equi-join

@@ -25,10 +25,7 @@ from mapreduce_go_spark.functions.num import dsum, dsum_sql
 SESSION_GAP = "30 minutes"
 
 
-def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day windows per event type: count + exact sum."""
-    ev = tables.load(spark, sf_dir, "events")
-    w = F.window("ts", "1 day")
+def _window_counts(ev: DataFrame, w) -> DataFrame:
     return (
         ev.groupBy(w.alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total"))
@@ -40,24 +37,27 @@ def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
+
+
+def tumbling_plan(ev: DataFrame) -> DataFrame:
+    """Tumbling 1-day windows per event type: count + exact sum. The
+    one plan of tumbling_window and the streaming tumbling_counts."""
+    return _window_counts(ev, F.window("ts", "1 day"))
+
+
+def sliding_plan(ev: DataFrame) -> DataFrame:
+    """Sliding 1-hour windows every 30 minutes: each event lands in 2
+    windows (explode happens inside Spark's window generator). The one
+    plan of sliding_window and the streaming sliding_counts."""
+    return _window_counts(ev, F.window("ts", "1 hour", "30 minutes"))
+
+
+def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return tumbling_plan(tables.load(spark, sf_dir, "events"))
 
 
 def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1-hour windows every 30 minutes: each event lands in 2
-    windows (explode happens inside Spark's window generator)."""
-    ev = tables.load(spark, sf_dir, "events")
-    w = F.window("ts", "1 hour", "30 minutes")
-    return (
-        ev.groupBy(w.alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total"))
-        .select(
-            F.col("w.start").alias("win_start"),
-            F.col("w.end").alias("win_end"),
-            "event_type",
-            "n",
-            "total",
-        )
-    )
+    return sliding_plan(tables.load(spark, sf_dir, "events"))
 
 
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

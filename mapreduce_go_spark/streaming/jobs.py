@@ -14,6 +14,19 @@ unchanged. State sizing: watermark bounds tumbling/sliding state to
 (lateness / slide) windows per key; session state is bounded by the
 gap; dropDuplicatesWithinWatermark state is one key per id inside the
 watermark horizon.
+
+The incremental foreachBatch jobs (rollup, neardup, CDC, span dedup,
+retrieval, pHash, HLL/CMS/Bloom sketches, boilerplate lines, URL seen)
+share one epoch protocol, `_epoch_commit`, the streaming form of the
+reference's task commit (write aside, then commit; first completion
+wins): each job's state is a chain of immutable epoch-versioned
+snapshots with a commit marker, an epoch reads the latest snapshot
+committed below it, writes its per-epoch output and then its new
+snapshot, and a committed epoch replays as a no-op. With checkpointed
+source offsets that makes every job exactly-once. Each job is a `step`
+on that protocol: a seen-set probe (CDC, span, URL), a mergeable
+snapshot (rollup, sketches, lines), or its own probe (neardup, pHash,
+retrieval). Decontamination is stateless and keeps only the skip.
 """
 
 from __future__ import annotations
@@ -28,17 +41,12 @@ from pyspark.sql import functions as F
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dsum
 from mapreduce_go_spark.operators.dedup import LSH_BUCKET_CAP
-from mapreduce_go_spark.operators.streaming_batch import SESSION_GAP
+from mapreduce_go_spark.operators.streaming_batch import (
+    SESSION_GAP, WATERMARK_MS, sliding_plan, tumbling_plan)
 
-# the ONE late-data horizon, derived from the batch anchors' ms
-# constant so the two sides cannot be edited apart (r14 review: the
-# coupling lived only in a comment)
-from mapreduce_go_spark.operators.streaming_batch import (  # noqa: E402
-    WATERMARK_MS)
-
-# lossless: "// 60000 minutes" silently floored any non-minute
-# WATERMARK_MS, breaking the batch/stream parity the constant's
-# cannot-edit-apart contract promises (r15 review)
+# the ONE late-data horizon, derived from the batch anchors' ms constant
+# so the two sides cannot be edited apart; in ms because "// 60000
+# minutes" silently floored any non-minute WATERMARK_MS
 WATERMARK = f"{WATERMARK_MS} milliseconds"
 
 # Committed snapshot versions kept per incremental index/rollup chain.
@@ -103,26 +111,12 @@ def events_stream(spark: SparkSession, sf_dir: str,
 
 def tumbling_counts(stream: DataFrame) -> DataFrame:
     """Streaming twin of operators.streaming_batch.tumbling_window."""
-    return (
-        stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total"))
-        .select(F.col("w.start").alias("win_start"),
-                F.col("w.end").alias("win_end"),
-                "event_type", "n", "total")
-    )
+    return tumbling_plan(stream.withWatermark("ts", WATERMARK))
 
 
 def sliding_counts(stream: DataFrame) -> DataFrame:
-    return (
-        stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"),
-                 "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total"))
-        .select(F.col("w.start").alias("win_start"),
-                F.col("w.end").alias("win_end"),
-                "event_type", "n", "total")
-    )
+    """Streaming twin of operators.streaming_batch.sliding_window."""
+    return sliding_plan(stream.withWatermark("ts", WATERMARK))
 
 
 def session_counts(stream: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
@@ -720,122 +714,171 @@ def run_foreach_batch_parquet(spark: SparkSession, streaming_df: DataFrame,
     _drain_foreach(streaming_df, checkpoint_dir, write_epoch)
 
 
-def _latest_rollup_version(out_dir: str, below: int | None = None) -> int | None:
-    """Highest COMMITTED snapshot version (dir has _SUCCESS) in
-    out_dir, optionally restricted to versions < `below`."""
-    if not os.path.isdir(out_dir):
-        return None
-    vs = [
-        int(name[2:]) for name in os.listdir(out_dir)
+# ------------------------------------------------------------------ #
+# The epoch protocol of the incremental jobs                         #
+# ------------------------------------------------------------------ #
+
+def _version_dir(index_dir: str, version: int) -> str:
+    return os.path.join(index_dir, f"v={version}")
+
+
+_neardup_index_dir = _version_dir
+
+
+def _committed_versions(index_dir: str) -> list[int]:
+    """Sorted committed snapshot versions: `v=<n>` dirs holding the
+    parquet commit marker."""
+    if not os.path.isdir(index_dir):
+        return []
+    return sorted(
+        int(name[2:]) for name in os.listdir(index_dir)
         if name.startswith("v=") and name[2:].isdigit()
-        and os.path.exists(os.path.join(out_dir, name, "_SUCCESS"))
-    ]
-    if below is not None:
-        vs = [v for v in vs if v < below]
-    return max(vs) if vs else None
+        and os.path.exists(os.path.join(index_dir, name, "_SUCCESS")))
 
 
-def _prune_old_versions(out_dir: str, keep: int = SNAPSHOT_RETAIN) -> None:
-    """Garbage-collect committed snapshot versions beyond the newest
-    `keep` (uncommitted attempt dirs are left for their own retry to
-    overwrite). Called only AFTER a successful _SUCCESS commit, so the
-    chain always retains the snapshot the next epoch will read. The
-    parquet-only stand-in for Delta/Iceberg VACUUM."""
-    if keep < 1:
-        # keep=0 would delete EVERY committed snapshot including the
-        # newest — silently resetting the incremental chain instead
-        # of retaining the snapshot the next epoch reads (r14 review)
-        raise ValueError(f"_prune_old_versions: keep must be >= 1, "
-                         f"got {keep}")
-    if not os.path.isdir(out_dir):
+def _latest_version(index_dir: str, below: int | None = None) -> int | None:
+    """Highest committed snapshot version, optionally < `below`."""
+    vs = [v for v in _committed_versions(index_dir)
+          if below is None or v < below]
+    return vs[-1] if vs else None
+
+
+def _prune_old_versions(index_dir: str) -> None:
+    """Delete committed snapshots beyond the newest SNAPSHOT_RETAIN —
+    the parquet-only stand-in for Delta/Iceberg VACUUM. Uncommitted
+    attempt dirs are left for their own retry to overwrite."""
+    for v in _committed_versions(index_dir)[:-SNAPSHOT_RETAIN]:
+        shutil.rmtree(_version_dir(index_dir, v), ignore_errors=True)
+
+
+def _epoch_commit(batch_df: DataFrame, epoch_id: int, index_dir: str,
+                  step, out_dir: str | None = None) -> None:
+    """Apply one micro-batch to an incremental job exactly once.
+
+    The job's state is a chain of immutable snapshots,
+    `index_dir/v=<epoch>`, each committed by parquet's `_SUCCESS`
+    marker; its per-epoch output goes to `out_dir/epoch=<epoch>`.
+    Together with the checkpointed source offsets this makes the job
+    exactly-once under foreachBatch replay:
+
+    1. A committed epoch is skipped, so a replay after a post-commit
+       crash cannot apply its batch twice.
+    2. `step(batch_df, hist)` reads the latest snapshot committed
+       BELOW the epoch (`hist`, None on the first epoch) and returns
+       `(index, output, persisted)`: the new snapshot, the epoch's
+       output or None, and the DataFrames it persisted. A new
+       directory is written, never the one being read.
+    3. The output is written first, then the index. A crash anywhere
+       before the index commit leaves the epoch uncommitted, and the
+       replay rewrites both (overwrite-by-epoch is idempotent); the
+       reverse order would commit the index and lose the output.
+    4. Persisted inputs are released whether or not the writes
+       succeed; old snapshots are pruned only after the commit, so
+       the chain always keeps the one the next epoch reads.
+
+    This mirrors the reference's write-temp-then-rename task commit
+    with first-completion-wins (/root/reference/mr/worker.go,
+    mr/master.go); on a cluster a transactional table format
+    (Delta/Iceberg MERGE) provides the same with txn ids."""
+    target = _version_dir(index_dir, epoch_id)
+    if os.path.exists(os.path.join(target, "_SUCCESS")):
         return
-    committed = sorted(
-        int(name[2:]) for name in os.listdir(out_dir)
-        if name.startswith("v=") and name[2:].isdigit()
-        and os.path.exists(os.path.join(out_dir, name, "_SUCCESS"))
-    )
-    for v in committed[:-keep]:
-        shutil.rmtree(os.path.join(out_dir, f"v={v}"), ignore_errors=True)
+    prev = _latest_version(index_dir, below=epoch_id)
+    hist = (None if prev is None else batch_df.sparkSession.read.parquet(
+        _version_dir(index_dir, prev)))
+    index, output, persisted = step(batch_df, hist)
+    try:
+        if output is not None:
+            output.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"epoch={epoch_id}"))
+        index.write.mode("overwrite").parquet(target)
+    finally:
+        for df in persisted:
+            df.unpersist()
+    _prune_old_versions(index_dir)
+
+
+def _merged(partial: DataFrame, hist: DataFrame | None, keys: list[str],
+            *aggs) -> DataFrame:
+    """Snapshot merge of a mergeable state: the batch's `partial`, or
+    `hist` ∪ `partial` re-aggregated by `keys` (set union when no
+    aggregate is given)."""
+    if hist is None:
+        return partial
+    both = hist.unionByName(partial)
+    return both.groupBy(*keys).agg(*aggs) if aggs else both.distinct()
+
+
+def _seen_probe(rows: DataFrame, hist: DataFrame | None, key: str,
+                *order: str) -> tuple[DataFrame, DataFrame]:
+    """Seen-set probe under the arrival-order keep-first rule: `rows`
+    plus `is_dup`, true iff `key` is in the seen-set `hist` or an
+    earlier occurrence (by `order`) exists in this batch; and the new
+    seen-set, `hist` ∪ the batch's distinct keys. One index row per
+    distinct key, so the set needs no degenerate-bucket cap."""
+    from pyspark.sql import Window
+
+    ranked = rows.withColumn("rn", F.row_number().over(
+        Window.partitionBy(key).orderBy(*order)))
+    keys = rows.select(key)
+    if hist is None:
+        probed = ranked.withColumn("seen", F.lit(False))
+        index = keys.distinct()
+    else:
+        probed = ranked.join(hist.withColumn("seen", F.lit(True)), key,
+                             "left").fillna(False, subset=["seen"])
+        index = hist.select(key).unionByName(keys).distinct()
+    return (probed.withColumn("is_dup", F.col("seen") | (F.col("rn") > 1)),
+            index)
+
+
+def _flag_dups(batch_df: DataFrame, dup_ids: DataFrame) -> DataFrame:
+    """(doc_id, dup) for every doc of the batch."""
+    return (batch_df.select("doc_id")
+            .join(dup_ids.distinct().withColumn("dup", F.lit(True)),
+                  "doc_id", "left")
+            .fillna(False, subset=["dup"]))
+
+
+def _read_latest(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The latest committed snapshot; an explicit FileNotFoundError
+    when no epoch has committed yet (a formatted `v=None` path used to
+    surface as an opaque PATH_NOT_FOUND)."""
+    v = _latest_version(index_dir)
+    if v is None:
+        raise FileNotFoundError(f"no committed snapshot in {index_dir}")
+    return spark.read.parquet(_version_dir(index_dir, v))
 
 
 def _merge_rollup_epoch(batch_df: DataFrame, epoch_id: int,
                         out_dir: str) -> None:
-    """One epoch's merge, IDEMPOTENT under replay: the rollup is a
-    chain of immutable epoch-versioned snapshots (out_dir/v=<epoch>,
-    parquet _SUCCESS = commit marker).
+    """Day/type event counts, merged by counter addition — counts are
+    not idempotent, so the replay skip is what keeps them exact."""
+    def step(batch, hist):
+        partial = (
+            batch.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").alias("win_start"), "event_type", "n"))
+        return (_merged(partial, hist, ["win_start", "event_type"],
+                        F.sum("n").alias("n")), None, ())
 
-    - A replayed epoch (marker already present) is SKIPPED — the
-      failure mode of the old read-merge-overwrite form, where a
-      post-commit crash made the restarted epoch double-count itself.
-    - The merge reads the latest committed snapshot BELOW this epoch
-      and writes a NEW directory, so it never overwrites the input it
-      is reading (the race the old form papered over with
-      cache().count()); a half-written attempt has no _SUCCESS and is
-      simply overwritten by the retry.
-
-    Local-FS marker checks stand in for what a transactional table
-    format (Delta/Iceberg MERGE with txn ids) provides on a cluster —
-    the epoch-versioned layout is the same idea with parquet-only
-    means."""
-    target = os.path.join(out_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # epoch already applied (foreachBatch replay after restart)
-    partial = (
-        batch_df.groupBy(
-            F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n")
-    )
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is None:
-        merged = partial
-    else:
-        existing = batch_df.sparkSession.read.parquet(
-            os.path.join(out_dir, f"v={prev}"))
-        merged = (
-            existing.unionByName(partial)
-            .groupBy("win_start", "event_type")
-            .agg(F.sum("n").alias("n"))
-        )
-    merged.write.mode("overwrite").parquet(target)
-    _prune_old_versions(out_dir)
-
-
-def _committed_version(out_dir: str) -> int:
-    """Latest committed snapshot version, or an EXPLICIT
-    FileNotFoundError — before review r10 the sketch readers formatted
-    a literal None into the path ('<out_dir>/v=None') and surfaced an
-    opaque PATH_NOT_FOUND AnalysisException when no epoch had
-    committed yet."""
-    v = _latest_rollup_version(out_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {out_dir}")
-    return v
+    _epoch_commit(batch_df, epoch_id, out_dir, step)
 
 
 def read_continuous_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
     """The rollup's current contents: latest committed snapshot."""
-    return spark.read.parquet(
-        os.path.join(out_dir, f"v={_committed_version(out_dir)}"))
+    return _read_latest(spark, out_dir)
 
 
 def run_continuous_rollup(spark: SparkSession, stream: DataFrame,
                           out_dir: str, checkpoint_dir: str) -> None:
-    """Incrementally-maintained continuous aggregate (hypertable
-    rollup): each micro-batch's partial day/type counts merge into an
-    epoch-versioned materialization (_merge_rollup_epoch) via
-    foreachBatch. Exactly-once end to end: offsets are checkpointed,
-    and the merge skips replayed epochs + writes copy-on-write
-    snapshots, so epoch replay after a crash cannot double-count
-    (tests/test_streaming.py re-fires an epoch to prove it).
-
-    This is the incremental path of operators.streaming_batch
-    tumbling_window; tests assert the materialization equals the
-    batch rollup after all batches drain."""
-    def merge_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_rollup_epoch(batch_df, epoch_id, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, merge_epoch)
+    """Incrementally maintained continuous aggregate (hypertable
+    rollup): each micro-batch's partial day/type counts merge into the
+    snapshot chain. This is the incremental path of
+    operators.streaming_batch.tumbling_window; tests assert the
+    materialization equals the batch rollup after all batches drain."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _merge_rollup_epoch(b, e, out_dir))
 
 
 def documents_stream(spark: SparkSession, staged_dir: str,
@@ -847,99 +890,60 @@ def documents_stream(spark: SparkSession, staged_dir: str,
             .option("maxFilesPerTrigger", 1).parquet(staged_dir))
 
 
-def _neardup_index_dir(out_dir: str, epoch_id: int) -> str:
-    return os.path.join(out_dir, f"v={epoch_id}")
-
-
 def _neardup_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str,
                    flags_dir: str, bucket_cap: int | None = None) -> None:
-    """One micro-batch of streaming near-dup detection, idempotent
-    under epoch replay (same versioned-snapshot discipline as
-    _merge_rollup_epoch).
+    """Streaming near-dup detection. The batch's docs get minhash-LSH
+    band keys (operators.dedup._lsh_bands_df — the SAME signature
+    pipeline as the batch dedup family); a doc is flagged `dup` iff
+    its number of PRIOR bucket-mates (earlier epochs, from the index's
+    per-bucket count, plus earlier docs of the SAME batch via an
+    in-batch rank) is >= 1 — the batch min-per-bucket probe
+    (operators.dedup._dup_doc_ids) restricted by arrival time.
 
-    The batch's docs get minhash-LSH band keys
-    (operators.dedup._lsh_bands_df — the SAME signature pipeline as
-    the batch dedup family); a doc is flagged `dup` iff its number of
-    PRIOR bucket-mates (docs from earlier epochs, from the persistent
-    index's per-bucket count, plus earlier docs of the SAME batch via
-    an in-batch rank) is >= 1 — exactly the batch min-per-bucket probe
-    (operators.dedup._dup_doc_ids) restricted by arrival time. All of
-    the batch's bands then merge into a new index snapshot.
+    `bucket_cap` (production: dedup.LSH_BUCKET_CAP) bounds a
+    degenerate bucket: it flags at most `cap` docs across its lifetime
+    (prior count <= cap), then goes INERT, so one boilerplate band key
+    cannot mark every future colliding doc as dup. The cumulative
+    per-bucket count rides the index rows, so the cap costs no extra
+    shuffle. None keeps the uncapped anchor semantics
+    (= dedup.neardup_flags); the capped twin is
+    dedup.neardup_flags_capped_df.
 
-    `bucket_cap` (production: dedup.LSH_BUCKET_CAP) closes the
-    degenerate-bucket gap: a bucket flags at most `cap` docs across
-    its lifetime (prior count <= cap), then goes INERT — one
-    boilerplate band key can no longer mark every future colliding doc
-    as dup forever, and the verdict for the docs it did flag is
-    unchanged. The cumulative per-bucket count (`n_docs`) rides the
-    index rows, so the cap costs no extra shuffle. Default None keeps
-    the uncapped anchor semantics (= dedup.neardup_flags); the capped
-    twin is dedup.neardup_flags_capped_df — both parities are proven
-    in tests/test_streaming.py.
-
-    Scale shape: the index is (band, band_key, min doc_id, n_docs) —
-    one row per distinct bucket, NOT per doc; the per-batch probe is
-    an equi-join on (band, band_key) against that index. At production
-    scale the parquet snapshot chain becomes a Delta/Iceberg MERGE;
-    the probe/append plan is unchanged."""
+    The index is (band, band_key, min doc_id, n_docs) — one row per
+    distinct bucket, NOT per doc — merged by min/sum."""
     from pyspark.sql import Window
 
     from mapreduce_go_spark.operators.dedup import (_lsh_bands_df,
                                                     _minhash_sig_df)
 
-    target = _neardup_index_dir(out_dir, epoch_id)
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        # persisted: the signature lineage feeds both the ranked probe
+        # and the index
+        bands = _lsh_bands_df(_minhash_sig_df(batch)).persist()
+        ranked = bands.withColumn("rb", F.row_number().over(
+            Window.partitionBy("band", "band_key").orderBy("doc_id")))
+        batch_idx = bands.groupBy("band", "band_key").agg(
+            F.min("doc_id").alias("first_doc"),
+            F.count("*").alias("n_docs"))
+        if hist is None:
+            joined = ranked.withColumn("n_hist", F.lit(0).cast("long"))
+        else:
+            joined = ranked.join(
+                hist.select("band", "band_key",
+                            F.col("n_docs").alias("n_hist")),
+                ["band", "band_key"], "left",
+            ).fillna(0, subset=["n_hist"])
+        prior = F.col("n_hist") + F.col("rb") - 1
+        cond = prior >= 1
+        if bucket_cap is not None:
+            cond = cond & (prior <= bucket_cap)
+        index = _merged(batch_idx, hist, ["band", "band_key"],
+                        F.min("first_doc").alias("first_doc"),
+                        F.sum("n_docs").alias("n_docs"))
+        flags = _flag_dups(batch, joined.where(cond).select("doc_id"))
+        return index, flags, (bands,)
 
-    # persist: the minhash+LSH signature lineage feeds both the
-    # ranked probe (flags write) and batch_idx (index write) —
-    # unpersisted it recomputed the signatures per write (review r10)
-    bands = _lsh_bands_df(_minhash_sig_df(batch_df)).persist()
-    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    ranked = bands.withColumn("rb", F.row_number().over(w))
-    # earliest holder + cumulative count per bucket within this batch
-    batch_idx = bands.groupBy("band", "band_key").agg(
-        F.min("doc_id").alias("first_doc"),
-        F.count("*").alias("n_docs"))
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is None:
-        joined = ranked.withColumn("n_hist", F.lit(0).cast("long"))
-        index = batch_idx
-    else:
-        hist = spark.read.parquet(_neardup_index_dir(out_dir, prev))
-        joined = ranked.join(
-            hist.select("band", "band_key",
-                        F.col("n_docs").alias("n_hist")),
-            ["band", "band_key"], "left",
-        ).fillna(0, subset=["n_hist"])
-        index = (
-            hist.unionByName(batch_idx)
-            .groupBy("band", "band_key")
-            .agg(F.min("first_doc").alias("first_doc"),
-                 F.sum("n_docs").alias("n_docs"))
-        )
-    prior = F.col("n_hist") + F.col("rb") - 1
-    cond = prior >= 1
-    if bucket_cap is not None:
-        cond = cond & (prior <= bucket_cap)
-    dups = joined.where(cond).select("doc_id").distinct()
-
-    flags = (
-        batch_df.select("doc_id")
-        .join(dups.withColumn("dup", F.lit(True)), "doc_id", "left")
-        .fillna(False, subset=["dup"])
-    )
-    # flags first: a crash between the two writes leaves no _SUCCESS on
-    # the index snapshot, so the epoch replays wholesale (both writes
-    # are overwrite-by-epoch — idempotent).
-    try:
-        flags.write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"epoch={epoch_id}"))
-        index.write.mode("overwrite").parquet(target)
-    finally:
-        bands.unpersist()
-    _prune_old_versions(out_dir)
+    _epoch_commit(batch_df, epoch_id, out_dir, step, flags_dir)
 
 
 def run_streaming_neardup(spark: SparkSession, stream: DataFrame,
@@ -947,13 +951,11 @@ def run_streaming_neardup(spark: SparkSession, stream: DataFrame,
                           checkpoint_dir: str,
                           bucket_cap: int | None = LSH_BUCKET_CAP) -> None:
     """Streaming near-duplicate detection: the D17 minhash-LSH dedup
-    as an incremental pipeline. Each micro-batch probes + extends a
-    persistent band index; outputs a per-epoch (doc_id, dup) flag
-    table. `bucket_cap` bounds how many docs a single (degenerate)
-    bucket may ever flag — see _neardup_epoch; the PRODUCTION DEFAULT
-    is dedup.LSH_BUCKET_CAP (batch twin:
-    dedup.neardup_flags_capped); pass None for the uncapped anchor
-    semantics (= dedup.neardup_flags).
+    as an incremental pipeline emitting per-epoch (doc_id, dup) flags.
+    `bucket_cap` bounds how many docs one degenerate bucket may ever
+    flag (see _neardup_epoch); the PRODUCTION DEFAULT is
+    dedup.LSH_BUCKET_CAP (batch twin: dedup.neardup_flags_capped);
+    pass None for the uncapped anchor semantics (= dedup.neardup_flags).
 
     .. versionchanged:: r6
        The default flipped from None (uncapped) to LSH_BUCKET_CAP —
@@ -962,16 +964,9 @@ def run_streaming_neardup(spark: SparkSession, stream: DataFrame,
        This is the intended production default (degenerate buckets
        must not explode candidate pairs at scale); callers needing
        the uncapped anchor semantics must now pass bucket_cap=None
-       explicitly.
-
-    Exactly-once: checkpointed offsets +
-    versioned index snapshots + epoch-keyed flag partitions (replay
-    overwrites itself; tests re-fire an epoch to prove no drift)."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _neardup_epoch(batch_df, epoch_id, index_dir, flags_dir,
-                       bucket_cap=bucket_cap)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+       explicitly."""
+    _drain_foreach(stream, checkpoint_dir, lambda b, e: _neardup_epoch(
+        b, e, index_dir, flags_dir, bucket_cap=bucket_cap))
 
 
 def read_neardup_flags(spark: SparkSession, flags_dir: str) -> DataFrame:
@@ -981,55 +976,26 @@ def read_neardup_flags(spark: SparkSession, flags_dir: str) -> DataFrame:
 
 def _cdc_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                out_dir: str) -> None:
-    """One micro-batch of incremental CDC dedup-ratio computation
-    (batch anchor: operators.dedup.cdc_dedup_ratio), idempotent under
-    epoch replay via the same versioned-snapshot discipline as the
-    near-dup job.
-
-    The persistent index is the distinct chunk_md5 set of all PRIOR
-    epochs — one row per hash, no per-doc state. A batch chunk
-    occurrence is dup iff its hash is in the index (seen in an earlier
-    epoch) or an earlier occurrence exists in the SAME batch
-    (row_number over (doc_id, chunk_no)); under doc_id-ordered arrival
-    this equals the batch anchor's global first-occurrence rule
-    exactly (proven in tests/test_streaming.py)."""
-    from pyspark.sql import Window
-
+    """Incremental CDC dedup ratio (batch anchor:
+    operators.dedup.cdc_dedup_ratio): a seen-set probe over chunk
+    hashes in (doc_id, chunk_no) order. Under doc_id-ordered arrival
+    this equals the batch anchor's global first-occurrence rule."""
     from mapreduce_go_spark.functions.num import dround
     from mapreduce_go_spark.operators.dedup import cdc_chunks_df
 
-    target = os.path.join(index_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        probed, index = _seen_probe(cdc_chunks_df(batch), hist,
+                                    "chunk_md5", "doc_id", "chunk_no")
+        stats = (
+            probed.groupBy("doc_id")
+            .agg(F.count("*").alias("n_chunks"),
+                 F.sum(F.col("is_dup").cast("long")).alias("n_dup_chunks"))
+            .withColumn("dup_ratio",
+                        dround(F.col("n_dup_chunks") / F.col("n_chunks"), 6))
+        )
+        return index, stats, ()
 
-    ch = cdc_chunks_df(batch_df)
-    w = Window.partitionBy("chunk_md5").orderBy("doc_id", "chunk_no")
-    ranked = ch.withColumn("rn", F.row_number().over(w))
-    prev = _latest_rollup_version(index_dir, below=epoch_id)
-    if prev is None:
-        joined = ranked.withColumn("seen", F.lit(False))
-        index = ch.select("chunk_md5").distinct()
-    else:
-        hist = spark.read.parquet(os.path.join(index_dir, f"v={prev}"))
-        joined = ranked.join(
-            hist.withColumn("seen", F.lit(True)), "chunk_md5", "left",
-        ).fillna(False, subset=["seen"])
-        index = (hist.select("chunk_md5")
-                 .unionByName(ch.select("chunk_md5")).distinct())
-    dup_occ = (F.col("seen") | (F.col("rn") > 1)).cast("long")
-    stats = (
-        joined.groupBy("doc_id")
-        .agg(F.count("*").alias("n_chunks"),
-             F.sum(dup_occ).alias("n_dup_chunks"))
-        .withColumn("dup_ratio",
-                    dround(F.col("n_dup_chunks") / F.col("n_chunks"), 6))
-    )
-    # stats first: a crash before the index commit replays wholesale
-    stats.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"epoch={epoch_id}"))
-    index.write.mode("overwrite").parquet(target)
-    _prune_old_versions(index_dir)
+    _epoch_commit(batch_df, epoch_id, index_dir, step, out_dir)
 
 
 def run_streaming_cdc(spark: SparkSession, stream: DataFrame,
@@ -1037,12 +1003,9 @@ def run_streaming_cdc(spark: SparkSession, stream: DataFrame,
                       checkpoint_dir: str) -> None:
     """Incremental sub-document dedup: per micro-batch CDC chunking,
     probe + extend a persistent chunk-hash index, emit per-epoch
-    per-doc dedup-ratio stats. Exactly-once via checkpointed offsets +
-    versioned index snapshots + epoch-keyed stat partitions."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _cdc_epoch(batch_df, epoch_id, index_dir, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    per-doc dedup-ratio stats."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _cdc_epoch(b, e, index_dir, out_dir))
 
 
 def read_cdc_stats(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1052,73 +1015,41 @@ def read_cdc_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def _dupspan_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                    out_dir: str) -> None:
-    """One micro-batch of incremental ExactSubstr span-dedup (batch
-    family: operators.dedup.dup_span_stats / strip_dup_spans),
-    idempotent under epoch replay via the versioned-snapshot
-    discipline shared with the near-dup/CDC jobs.
-
-    The persistent index is the distinct K-token window-hash set of
-    all PRIOR epochs — one row per hash, no per-doc state, so a
-    boilerplate span colliding a million times stays ONE index row
-    (the job needs no degenerate-bucket cap by construction). A
-    window occurrence is dup iff its hash is in the index or an
-    earlier occurrence exists in the same batch (row_number over
-    (doc_id, p)) — the arrival-order restriction of the batch rule:
-    the FIRST carrier of a span is never flagged, later copies are
-    (what an incremental ingest filter wants: keep one occurrence,
-    drop recycled arrivals — exactly the paper's keep-one removal),
-    while the batch dup_span_stats marks every carrier of a
-    corpus-duplicated span (the exposure metric). Under doc_id-
-    ordered arrival the flagged-occurrence set equals the batch
-    row_number>1-or-seen rule on the whole corpus (proven in
-    tests/test_streaming.py)."""
-    from pyspark.sql import Window
-
+    """Incremental ExactSubstr span dedup (batch family:
+    operators.dedup.dup_span_stats / strip_dup_spans): a seen-set
+    probe over K-token window hashes in (doc_id, p) order. The FIRST
+    carrier of a span is never flagged, later copies are — the
+    keep-one removal an ingest filter wants — while the batch
+    dup_span_stats marks every carrier (the exposure metric). Under
+    doc_id-ordered arrival the flagged occurrences equal the batch
+    row_number>1 rule on the whole corpus."""
     from mapreduce_go_spark.functions.num import dround
     from mapreduce_go_spark.operators.dedup import _span_tokens
 
-    target = os.path.join(index_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        wnd = (_span_tokens(batch).where(F.col("whash").isNotNull())
+               .select("doc_id", "p", "whash"))
+        probed, index = _seen_probe(wnd, hist, "whash", "doc_id", "p")
+        per_win = probed.groupBy("doc_id").agg(
+            F.count("*").alias("n_windows"),
+            F.sum(F.col("is_dup").cast("long")).alias("n_dup_windows"))
+        stats = (
+            batch.select("doc_id")
+            .join(per_win, "doc_id", "left")
+            .fillna(0, subset=["n_windows", "n_dup_windows"])
+            .withColumn(
+                "dup_frac",
+                F.when(F.col("n_windows") > 0,
+                       dround(F.col("n_dup_windows") / F.col("n_windows"),
+                              6))
+                # dround's when-branch is DOUBLE, so a decimal otherwise
+                # literal was silently coerced right back — say what the
+                # type actually is (review r10)
+                .otherwise(F.lit(0.0)))
+        )
+        return index, stats, ()
 
-    wnd = _span_tokens(batch_df).where(F.col("whash").isNotNull()) \
-        .select("doc_id", "p", "whash")
-    w = Window.partitionBy("whash").orderBy("doc_id", "p")
-    ranked = wnd.withColumn("rn", F.row_number().over(w))
-    prev = _latest_rollup_version(index_dir, below=epoch_id)
-    if prev is None:
-        joined = ranked.withColumn("seen", F.lit(False))
-        index = wnd.select("whash").distinct()
-    else:
-        hist = spark.read.parquet(os.path.join(index_dir, f"v={prev}"))
-        joined = ranked.join(
-            hist.withColumn("seen", F.lit(True)), "whash", "left",
-        ).fillna(False, subset=["seen"])
-        index = (hist.select("whash")
-                 .unionByName(wnd.select("whash")).distinct())
-    dup_occ = (F.col("seen") | (F.col("rn") > 1)).cast("long")
-    per_win = joined.groupBy("doc_id").agg(
-        F.count("*").alias("n_windows"),
-        F.sum(dup_occ).alias("n_dup_windows"))
-    stats = (
-        batch_df.select("doc_id")
-        .join(per_win, "doc_id", "left")
-        .fillna(0, subset=["n_windows", "n_dup_windows"])
-        .withColumn(
-            "dup_frac",
-            F.when(F.col("n_windows") > 0,
-                   dround(F.col("n_dup_windows") / F.col("n_windows"), 6))
-            # dround's when-branch is DOUBLE, so a decimal otherwise
-            # literal was silently coerced right back — say what the
-            # type actually is (review r10)
-            .otherwise(F.lit(0.0)))
-    )
-    # stats first: a crash before the index commit replays wholesale
-    stats.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"epoch={epoch_id}"))
-    index.write.mode("overwrite").parquet(target)
-    _prune_old_versions(index_dir)
+    _epoch_commit(batch_df, epoch_id, index_dir, step, out_dir)
 
 
 def run_streaming_dupspan(spark: SparkSession, stream: DataFrame,
@@ -1127,13 +1058,9 @@ def run_streaming_dupspan(spark: SparkSession, stream: DataFrame,
     """Streaming ExactSubstr span dedup: each document micro-batch's
     K-token window hashes probe + extend a persistent seen-hash
     index; emits per-epoch (doc_id, n_windows, n_dup_windows,
-    dup_frac) under the arrival-order keep-first rule. Exactly-once
-    via checkpointed offsets + versioned index snapshots + epoch-keyed
-    stat partitions (replay overwrites itself)."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _dupspan_epoch(batch_df, epoch_id, index_dir, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    dup_frac) under the arrival-order keep-first rule."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _dupspan_epoch(b, e, index_dir, out_dir))
 
 
 def read_dupspan_stats(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1143,53 +1070,34 @@ def read_dupspan_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def _retrieval_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                      out_dir: str) -> None:
-    """One micro-batch of incremental retrieval-index maintenance
-    (batch anchor: operators.pipeline.chunk_retrieval_topk). The
-    persistent index is the chunk-vector relation itself — one row of
-    exact integer sums per (doc_id, chunk_no), so appending a batch's
-    rows reproduces the batch computation EXACTLY (no approximation
-    drift between the incremental and batch indexes, the property the
-    parity test pins). Each epoch also re-answers the fixed queries
-    against the updated index and writes the epoch-keyed top-k —
-    the freshness contract of an incrementally-maintained search
-    index. Versioned snapshots + _SUCCESS skip: replay-idempotent."""
+    """Incremental retrieval-index maintenance (batch anchor:
+    operators.pipeline.chunk_retrieval_topk). The index is the
+    chunk-vector relation itself — exact integer sums per
+    (doc_id, chunk_no) — so appending a batch's rows reproduces the
+    batch computation EXACTLY. Each epoch re-answers the fixed queries
+    against the updated index: the freshness contract of an
+    incrementally maintained search index."""
     from mapreduce_go_spark.operators.pipeline import (chunk_topk_from_sums,
                                                        chunk_vec_sums)
 
-    target = os.path.join(index_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        vecs = chunk_vec_sums(batch)
+        index = vecs if hist is None else hist.unionByName(vecs)
+        return index, chunk_topk_from_sums(index), ()
 
-    batch_vecs = chunk_vec_sums(batch_df)
-    prev = _latest_rollup_version(index_dir, below=epoch_id)
-    if prev is None:
-        index = batch_vecs
-    else:
-        hist = spark.read.parquet(os.path.join(index_dir, f"v={prev}"))
-        index = hist.unionByName(batch_vecs)
-    answers = chunk_topk_from_sums(index)
-    # answers first: a crash before the index commit replays wholesale
-    answers.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"epoch={epoch_id}"))
-    index.write.mode("overwrite").parquet(target)
-    _prune_old_versions(index_dir)
+    _epoch_commit(batch_df, epoch_id, index_dir, step, out_dir)
 
 
 def run_streaming_retrieval(spark: SparkSession, stream: DataFrame,
                             index_dir: str, out_dir: str,
                             checkpoint_dir: str) -> None:
     """Streaming retrieval index: each document micro-batch is CDC-
-    chunked and featurized (pipeline.chunk_vec_sums), appended to a
-    versioned chunk-vector index, and the fixed queries re-answered
-    against the updated index per epoch. After the last batch the
-    latest answers equal the batch capstone exactly (integer vectors
-    append losslessly). Exactly-once via checkpointed offsets +
-    versioned snapshots + epoch-keyed answer partitions."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _retrieval_epoch(batch_df, epoch_id, index_dir, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    chunked and featurized (pipeline.chunk_vec_sums), appended to the
+    chunk-vector index, and the fixed queries re-answered per epoch.
+    After the last batch the latest answers equal the batch capstone
+    exactly (integer vectors append losslessly)."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _retrieval_epoch(b, e, index_dir, out_dir))
 
 
 def read_retrieval_answers(spark: SparkSession, out_dir: str,
@@ -1204,14 +1112,14 @@ def _decon_epoch(batch_df: DataFrame, epoch_id: int,
     """One micro-batch of streaming benchmark decontamination (batch
     anchor: operators.quality.decontaminate). STATELESS across epochs
     — the eval-side shingle set is a static broadcast relation, so
-    unlike the near-dup/CDC jobs there is no persistent index to
-    version; idempotence is just overwrite-by-epoch + _SUCCESS skip.
+    there is no index; idempotence is overwrite-by-epoch plus a skip
+    of a committed epoch partition.
 
     Per epoch: the batch's distinct 5-gram shingles (the same in-row
     assembly as the batch query) probe the broadcast eval set; every
-    train-split doc gets (doc_id, n_overlap, contaminated). Scale
-    shape: the stream never shuffles — only matching (doc_id,
-    shingle) rows reach the count aggregation."""
+    train-split doc gets (doc_id, n_overlap, contaminated). The stream
+    never shuffles — only matching (doc_id, shingle) rows reach the
+    count aggregation."""
     target = os.path.join(out_dir, f"epoch={epoch_id}")
     if os.path.exists(os.path.join(target, "_SUCCESS")):
         return  # replayed epoch: already applied
@@ -1240,13 +1148,9 @@ def run_streaming_decon(spark: SparkSession, stream: DataFrame,
     """Streaming decontamination: each document micro-batch is checked
     for word-5-gram overlap against the static eval-split shingle set
     (operators.quality.eval_shingles_df) and emits per-epoch
-    (doc_id, n_overlap, contaminated) rows for the train split.
-    Exactly-once via checkpointed offsets + epoch-keyed overwrite
-    partitions (the job is stateless, so replay is trivially clean)."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _decon_epoch(batch_df, epoch_id, ev_shingles, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    (doc_id, n_overlap, contaminated) rows for the train split."""
+    _drain_foreach(stream, checkpoint_dir, lambda b, e: _decon_epoch(
+        b, e, ev_shingles, out_dir))
 
 
 def read_decon_flags(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1367,116 +1271,82 @@ def run_to_memory_drained(spark: SparkSession, streaming_df: DataFrame,
 # operators.multimodal.phash_dup_flags)                              #
 # ------------------------------------------------------------------ #
 
-def _phash_index_dir(out_dir: str, epoch_id: int) -> str:
-    return os.path.join(out_dir, f"v={epoch_id}")
-
-
 def _phash_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                  flags_dir: str) -> None:
-    """One micro-batch of streaming perceptual image dedup,
-    idempotent under epoch replay (versioned-snapshot discipline).
-
-    The batch's docs get pHash band rows (the SAME kernel as the
-    batch family); a doc is flagged dup iff some PRIOR doc — a
-    stored index holder, or an earlier doc of the same batch — sits
-    in a shared band bucket within the bucket's first
-    PHASH_BAND_CAP lifetime holders AND its exact hamming distance
-    is <= PHASH_HAM_MAX. The index stores AT MOST CAP holder rows
-    per bucket (holder = (doc_id, b0..b3, lifetime rank)); a full
-    bucket goes INERT for storage but its stored holders keep
-    flagging future matches — same degenerate-bucket posture as
-    run_streaming_neardup, except here the holder's full hash must
-    ride the index because the verdict needs the hamming verify,
-    not just bucket membership. Index size is O(buckets * CAP), not
-    O(docs)."""
+    """Streaming perceptual image dedup. The batch's docs get pHash
+    band rows (the SAME kernel as the batch family); a doc is flagged
+    dup iff some PRIOR doc — a stored index holder, or an earlier doc
+    of the same batch — sits in a shared band bucket within the
+    bucket's first PHASH_BAND_CAP lifetime holders AND its exact
+    hamming distance is <= PHASH_HAM_MAX. The index stores AT MOST CAP
+    holder rows per bucket (holder = (doc_id, b0..b3, lifetime rank));
+    a full bucket goes INERT for storage but its stored holders keep
+    flagging future matches — the neardup cap posture, except that the
+    holder's full hash rides the index because the verdict needs the
+    hamming verify. Index size is O(buckets * CAP), not O(docs)."""
     from mapreduce_go_spark.operators.multimodal import (
         PHASH_BAND_CAP, PHASH_BANDS_SCHEMA, PHASH_HAM_MAX,
         _phash_band_batches)
 
-    target = _phash_index_dir(index_dir, epoch_id)
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
-
-    # persist: the PNG decode kernel feeds THREE lineages (in_batch
-    # via grouped, hist_probe, new_holders via grouped) and both
-    # epoch writes — unpersisted it re-ran the per-doc decode ~3x per
-    # epoch (review r10; the batch anchor phash_dup_flags documents
-    # the same single-run requirement and persists)
-    bands = batch_df.select("doc_id").mapInPandas(
-        _phash_band_batches, PHASH_BANDS_SCHEMA).persist()
-    grouped = (
-        bands.groupBy("band_no", "band_val")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("doc_id", "b0", "b1", "b2", "b3"))
-        ).alias("ds"))
-    )
-    prev = _latest_rollup_version(index_dir, below=epoch_id)
-    if prev is None:
-        hist = None
-        g = grouped.withColumn("n_hist", F.lit(0).cast("long"))
-    else:
-        hist = spark.read.parquet(_phash_index_dir(index_dir, prev))
-        counts = hist.groupBy("band_no", "band_val").agg(
-            F.max("rk").alias("n_hist"))  # rk is dense 1..n
-        g = (grouped.join(counts, ["band_no", "band_val"], "left")
-             .fillna(0, subset=["n_hist"]))
-
-    ham_xy = sum(
-        F.bit_count(F.expr(f"x.b{i} ^ y.b{i}")) for i in range(4))
-    # in-batch priors: holder position within the bucket's LIFETIME
-    # order is n_hist + i + 1; only positions <= CAP may flag
-    in_batch = (
-        g.select("n_hist", F.posexplode("ds").alias("i", "x"), "ds")
-        .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
-        .select("x", F.explode(
-            F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
-        .where(ham_xy <= PHASH_HAM_MAX)
-        .select(F.col("y.doc_id").alias("doc_id"))
-    )
-    if hist is not None:
-        ham_hist = sum(
-            F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
-            for i in range(4))
-        hist_probe = (
-            bands.join(
-                hist.select("band_no", "band_val",
-                            *[F.col(f"b{i}").alias(f"h{i}")
-                              for i in range(4)]),
-                ["band_no", "band_val"])
-            .where(ham_hist <= PHASH_HAM_MAX)
-            .select("doc_id")
+    def step(batch, hist):
+        # persisted: the PNG decode kernel feeds three lineages (the
+        # in-batch probe, the index probe, the new holders); the
+        # batch anchor phash_dup_flags persists for the same reason
+        bands = batch.select("doc_id").mapInPandas(
+            _phash_band_batches, PHASH_BANDS_SCHEMA).persist()
+        grouped = (
+            bands.groupBy("band_no", "band_val")
+            .agg(F.sort_array(
+                F.collect_list(F.struct("doc_id", "b0", "b1", "b2", "b3"))
+            ).alias("ds"))
         )
-        dups = in_batch.union(hist_probe).distinct()
-    else:
-        dups = in_batch.distinct()
+        if hist is None:
+            g = grouped.withColumn("n_hist", F.lit(0).cast("long"))
+        else:
+            counts = hist.groupBy("band_no", "band_val").agg(
+                F.max("rk").alias("n_hist"))  # rk is dense 1..n
+            g = (grouped.join(counts, ["band_no", "band_val"], "left")
+                 .fillna(0, subset=["n_hist"]))
 
-    flags = (
-        batch_df.select("doc_id")
-        .join(dups.withColumn("dup", F.lit(True)), "doc_id", "left")
-        .fillna(False, subset=["dup"])
-    )
-    new_holders = (
-        g.select("band_no", "band_val", "n_hist",
-                 F.posexplode("ds").alias("i", "x"))
-        .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
-        .select("band_no", "band_val",
-                F.col("x.doc_id").alias("doc_id"),
-                *[F.col(f"x.b{i}").alias(f"b{i}") for i in range(4)],
-                (F.col("n_hist") + F.col("i") + 1).cast("long")
-                .alias("rk"))
-    )
-    index = (hist.unionByName(new_holders) if hist is not None
-             else new_holders)
-    # flags first: a crash between the writes leaves no _SUCCESS on
-    # the index snapshot, so the epoch replays wholesale
-    try:
-        flags.write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"epoch={epoch_id}"))
-        index.write.mode("overwrite").parquet(target)
-    finally:
-        bands.unpersist()
-    _prune_old_versions(index_dir)
+        ham_xy = sum(
+            F.bit_count(F.expr(f"x.b{i} ^ y.b{i}")) for i in range(4))
+        # in-batch priors: holder position within the bucket's LIFETIME
+        # order is n_hist + i + 1; only positions <= CAP may flag
+        dups = (
+            g.select("n_hist", F.posexplode("ds").alias("i", "x"), "ds")
+            .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
+            .select("x", F.explode(F.slice(
+                F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
+            .where(ham_xy <= PHASH_HAM_MAX)
+            .select(F.col("y.doc_id").alias("doc_id"))
+        )
+        if hist is not None:
+            ham_hist = sum(
+                F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
+                for i in range(4))
+            dups = dups.union(
+                bands.join(
+                    hist.select("band_no", "band_val",
+                                *[F.col(f"b{i}").alias(f"h{i}")
+                                  for i in range(4)]),
+                    ["band_no", "band_val"])
+                .where(ham_hist <= PHASH_HAM_MAX)
+                .select("doc_id"))
+        new_holders = (
+            g.select("band_no", "band_val", "n_hist",
+                     F.posexplode("ds").alias("i", "x"))
+            .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
+            .select("band_no", "band_val",
+                    F.col("x.doc_id").alias("doc_id"),
+                    *[F.col(f"x.b{i}").alias(f"b{i}") for i in range(4)],
+                    (F.col("n_hist") + F.col("i") + 1).cast("long")
+                    .alias("rk"))
+        )
+        index = (new_holders if hist is None
+                 else hist.unionByName(new_holders))
+        return index, _flag_dups(batch, dups), (bands,)
+
+    _epoch_commit(batch_df, epoch_id, index_dir, step, flags_dir)
 
 
 def run_streaming_phash(spark: SparkSession, stream: DataFrame,
@@ -1484,13 +1354,9 @@ def run_streaming_phash(spark: SparkSession, stream: DataFrame,
                         checkpoint_dir: str) -> None:
     """Streaming perceptual image dedup: incremental twin of
     phash_dup_flags (exact batch parity under doc_id-ordered
-    arrival + replay idempotence proven in tests/test_streaming.py).
-    Exactly-once: checkpointed offsets + versioned index snapshots +
-    epoch-keyed flag partitions."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _phash_epoch(batch_df, epoch_id, index_dir, flags_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    arrival)."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _phash_epoch(b, e, index_dir, flags_dir))
 
 
 def read_phash_flags(spark: SparkSession, flags_dir: str) -> DataFrame:
@@ -1498,49 +1364,31 @@ def read_phash_flags(spark: SparkSession, flags_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------ #
-# Incremental HyperLogLog maintenance (D21 x the sketch family;       #
-# batch anchor: operators.quality.hll_distinct_tokens)                #
+# Incremental sketches (D21 x the sketch family): each snapshot IS   #
+# the sketch, merged by the sketch's own mergeability, so the        #
+# maintained sketch equals the batch sketch over all epochs'         #
+# documents regardless of batching. No token is ever stored.         #
 # ------------------------------------------------------------------ #
 
 def _hll_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
-    """One micro-batch of incremental token-cardinality sketching,
-    idempotent under epoch replay (versioned-snapshot discipline).
-
-    The snapshot IS the sketch: at most HLL_M sparse (bucket, r)
-    rows. The epoch merge is register-wise max — HLL's defining
-    mergeability — so the maintained sketch equals the batch
-    sketch over the union of all epochs' documents REGARDLESS of
-    batching (exact parity proven in tests/test_streaming.py, not
-    just approximately). This is the streaming face of the
-    mergeable-sketch scale story: state is O(HLL_M) forever, the
-    merge is a 64-row shuffle, and no token is ever stored."""
+    """HyperLogLog (batch anchor: operators.quality.hll_distinct_tokens):
+    at most HLL_M sparse (bucket, r) rows, merged register-wise by max."""
     from mapreduce_go_spark.operators.quality import hll_token_registers
 
-    target = os.path.join(out_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        partial = hll_token_registers(batch.select("doc_id", "text"))
+        return (_merged(partial, hist, ["bucket"], F.max("r").alias("r")),
+                None, ())
 
-    partial = hll_token_registers(batch_df.select("doc_id", "text"))
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is not None:
-        hist = spark.read.parquet(os.path.join(out_dir, f"v={prev}"))
-        partial = (hist.unionByName(partial)
-                   .groupBy("bucket").agg(F.max("r").alias("r")))
-    partial.write.mode("overwrite").parquet(target)
-    _prune_old_versions(out_dir)
+    _epoch_commit(batch_df, epoch_id, out_dir, step)
 
 
 def run_streaming_hll(spark: SparkSession, stream: DataFrame,
                       out_dir: str, checkpoint_dir: str) -> None:
     """Incremental distinct-token cardinality: per micro-batch HLL
-    register partials max-merged into a persistent O(HLL_M) sketch
-    snapshot. Exactly-once via checkpointed offsets + versioned
-    sketch snapshots."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _hll_epoch(batch_df, epoch_id, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    register partials max-merged into an O(HLL_M) sketch snapshot."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _hll_epoch(b, e, out_dir))
 
 
 def read_hll_registers(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1548,10 +1396,9 @@ def read_hll_registers(spark: SparkSession, out_dir: str) -> DataFrame:
     registers, zero-filled."""
     from mapreduce_go_spark.operators.quality import HLL_M
 
-    regs = spark.read.parquet(
-        os.path.join(out_dir, f"v={_committed_version(out_dir)}"))
     return (spark.range(HLL_M).select(F.col("id").alias("bucket"))
-            .join(regs, "bucket", "left").fillna(0, subset=["r"]))
+            .join(_read_latest(spark, out_dir), "bucket", "left")
+            .fillna(0, subset=["r"]))
 
 
 def read_hll_estimate(spark: SparkSession, out_dir: str) -> float:
@@ -1573,53 +1420,31 @@ def read_hll_estimate(spark: SparkSession, out_dir: str) -> float:
     return est
 
 
-# ------------------------------------------------------------------ #
-# Incremental count-min sketch maintenance (D21 x the sketch family;  #
-# batch anchor: operators.quality.cms_token_counts)                   #
-# ------------------------------------------------------------------ #
-
 def _cms_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
-    """One micro-batch of incremental token-frequency sketching —
-    the frequency sibling of _hll_epoch: the snapshot is the sparse
-    (r, bucket, cnt) cell table (at most DEPTH x WIDTH rows), the
-    epoch merge is counter-wise ADDITION (CMS's defining
-    mergeability), so the maintained sketch equals the batch sketch
-    over the union of all epochs' documents cell for cell — exact
-    parity proven in tests/test_streaming.py. State is
-    O(DEPTH x WIDTH) forever; no token is ever stored."""
+    """Count-min sketch (batch anchor: operators.quality.cms_token_counts):
+    at most DEPTH x WIDTH sparse (r, bucket, cnt) cells, merged
+    counter-wise by addition."""
     from mapreduce_go_spark.operators.quality import cms_token_sketch
 
-    target = os.path.join(out_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        partial = cms_token_sketch(batch.select("doc_id", "text"))
+        return (_merged(partial, hist, ["r", "bucket"],
+                        F.sum("cnt").alias("cnt")), None, ())
 
-    partial = cms_token_sketch(batch_df.select("doc_id", "text"))
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is not None:
-        hist = spark.read.parquet(os.path.join(out_dir, f"v={prev}"))
-        partial = (hist.unionByName(partial)
-                   .groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt")))
-    partial.write.mode("overwrite").parquet(target)
-    _prune_old_versions(out_dir)
+    _epoch_commit(batch_df, epoch_id, out_dir, step)
 
 
 def run_streaming_cms(spark: SparkSession, stream: DataFrame,
                       out_dir: str, checkpoint_dir: str) -> None:
     """Incremental token-frequency sketch: per micro-batch CMS cell
-    partials counter-added into a persistent O(DEPTH x WIDTH)
-    snapshot. Exactly-once via checkpointed offsets + versioned
-    sketch snapshots."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _cms_epoch(batch_df, epoch_id, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    partials counter-added into an O(DEPTH x WIDTH) snapshot."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _cms_epoch(b, e, out_dir))
 
 
 def read_cms_sketch(spark: SparkSession, out_dir: str) -> DataFrame:
     """The maintained sketch's sparse cells (r, bucket, cnt)."""
-    return spark.read.parquet(
-        os.path.join(out_dir, f"v={_committed_version(out_dir)}"))
+    return _read_latest(spark, out_dir)
 
 
 def read_cms_estimate(spark: SparkSession, out_dir: str,
@@ -1642,59 +1467,38 @@ def read_cms_estimate(spark: SparkSession, out_dir: str,
             .groupBy("tok").agg(F.min("cnt").alias("est")))
 
 
-# ------------------------------------------------------------------ #
-# Incremental Bloom-filter maintenance (D21 x the sketch family;      #
-# batch anchor: operators.corpus.bloom_decontaminate)                 #
-# ------------------------------------------------------------------ #
-
 def _bloom_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
-    """One micro-batch of incremental membership sketching — the
-    membership sibling of _hll_epoch/_cms_epoch, completing the
-    streaming face of the sketch trio: the snapshot is the set-bit
-    relation (at most BLOOM_M single-int rows), the epoch merge is
-    set UNION (bit-OR — Bloom's defining mergeability), so the
-    maintained filter equals the batch filter over the union of all
-    epochs' documents bit for bit, regardless of batching. State is
-    O(BLOOM_M) forever; no shingle is ever stored."""
+    """Bloom filter (batch anchor: operators.corpus.bloom_decontaminate):
+    the set-bit relation, at most BLOOM_M single-int rows, merged by
+    set union (bit-OR)."""
     from mapreduce_go_spark.operators.corpus import BLOOM_K, _bloom_bit
     from mapreduce_go_spark.operators.quality import decon_shingles_df
 
-    target = os.path.join(out_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        sh = (decon_shingles_df(batch.select("doc_id", "text"))
+              .select("shingle").distinct())
+        partial = sh.select(F.explode(F.array(
+            *[_bloom_bit(F.col("shingle"), k) for k in range(BLOOM_K)]
+        )).alias("bit")).distinct()
+        return _merged(partial, hist, ["bit"]), None, ()
 
-    sh = (decon_shingles_df(batch_df.select("doc_id", "text"))
-          .select("shingle").distinct())
-    partial = sh.select(F.explode(F.array(
-        *[_bloom_bit(F.col("shingle"), k) for k in range(BLOOM_K)]
-    )).alias("bit")).distinct()
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is not None:
-        hist = spark.read.parquet(os.path.join(out_dir, f"v={prev}"))
-        partial = hist.unionByName(partial).distinct()
-    partial.write.mode("overwrite").parquet(target)
-    _prune_old_versions(out_dir)
+    _epoch_commit(batch_df, epoch_id, out_dir, step)
 
 
 def run_streaming_bloom(spark: SparkSession, stream: DataFrame,
                         out_dir: str, checkpoint_dir: str) -> None:
     """Incrementally maintained Bloom filter over streaming document
-    shingles: per micro-batch bit partials unioned into a persistent
-    O(BLOOM_M) snapshot. Exactly-once via checkpointed offsets +
-    versioned snapshots. Streaming twin of the eval-side filter build
-    in corpus.bloom_decontaminate — a live benchmark suite can grow
-    while the screen keeps a constant-size broadcast artifact."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _bloom_epoch(batch_df, epoch_id, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    shingles: per micro-batch bit partials unioned into an O(BLOOM_M)
+    snapshot. Streaming twin of the eval-side filter build in
+    corpus.bloom_decontaminate — a live benchmark suite can grow while
+    the screen keeps a constant-size broadcast artifact."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _bloom_epoch(b, e, out_dir))
 
 
 def read_bloom_bits(spark: SparkSession, out_dir: str) -> DataFrame:
     """The maintained filter content: one row per set bit."""
-    return spark.read.parquet(
-        os.path.join(out_dir, f"v={_committed_version(out_dir)}"))
+    return _read_latest(spark, out_dir)
 
 
 def read_bloom_membership(spark: SparkSession, out_dir: str,
@@ -1713,40 +1517,30 @@ def read_bloom_membership(spark: SparkSession, out_dir: str,
 
 
 # ------------------------------------------------------------------ #
-# Incremental boilerplate line-frequency index (D21 x corpus hygiene; #
-# batch anchor: operators.corpus.boilerplate_line_stats)              #
+# Incremental corpus hygiene: boilerplate line frequency (batch      #
+# anchor: operators.corpus.boilerplate_line_stats) and URL-seen      #
+# dedup (batch anchor: operators.corpus.url_dedup)                   #
 # ------------------------------------------------------------------ #
 
 def _boiler_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
-    """One micro-batch of incremental line-frequency maintenance: the
-    snapshot is the (line, n_docs) counter table, the epoch merge is
-    counter ADDITION — valid because each document arrives in exactly
-    one epoch, so per-epoch DISTINCT-doc counts partition the global
-    distinct count. State is O(distinct lines) — the honest CCNet
-    cost (a counter per line ever seen, never a member list); the
-    boilerplate verdict (n_docs >= BOILER_MIN_DOCS) is derived at
-    read time so a line can BECOME boilerplate as epochs accumulate —
-    exactly the behavior a live crawl needs."""
+    """Line-frequency counters (line, n_docs), merged by addition —
+    valid because each document arrives in exactly one epoch, so
+    per-epoch DISTINCT-doc counts partition the global distinct count.
+    State is O(distinct lines), the honest CCNet cost; the verdict
+    (n_docs >= BOILER_MIN_DOCS) is derived at read time, so a line can
+    BECOME boilerplate as epochs accumulate."""
     from mapreduce_go_spark.operators.corpus import _lines_exploded
 
-    target = os.path.join(out_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        partial = (
+            _lines_exploded(batch.select("doc_id", "text"))
+            .groupBy("line")
+            .agg(F.count_distinct("doc_id").alias("n_docs"))
+        )
+        return (_merged(partial, hist, ["line"],
+                        F.sum("n_docs").alias("n_docs")), None, ())
 
-    partial = (
-        _lines_exploded(batch_df.select("doc_id", "text"))
-        .groupBy("line")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-    )
-    prev = _latest_rollup_version(out_dir, below=epoch_id)
-    if prev is not None:
-        hist = spark.read.parquet(os.path.join(out_dir, f"v={prev}"))
-        partial = (hist.unionByName(partial)
-                   .groupBy("line")
-                   .agg(F.sum("n_docs").alias("n_docs")))
-    partial.write.mode("overwrite").parquet(target)
-    _prune_old_versions(out_dir)
+    _epoch_commit(batch_df, epoch_id, out_dir, step)
 
 
 def run_streaming_boiler(spark: SparkSession, stream: DataFrame,
@@ -1755,10 +1549,8 @@ def run_streaming_boiler(spark: SparkSession, stream: DataFrame,
     per micro-batch distinct-doc line counts counter-added into a
     persistent versioned snapshot. Streaming twin of the line side of
     corpus.boilerplate_line_stats/strip_boilerplate_lines."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _boiler_epoch(batch_df, epoch_id, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _boiler_epoch(b, e, out_dir))
 
 
 def read_boiler_lines(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1766,73 +1558,34 @@ def read_boiler_lines(spark: SparkSession, out_dir: str) -> DataFrame:
     read time: (line, n_docs, boiler)."""
     from mapreduce_go_spark.operators.corpus import BOILER_MIN_DOCS
 
-    counts = spark.read.parquet(
-        os.path.join(out_dir, f"v={_committed_version(out_dir)}"))
-    return counts.withColumn(
+    return _read_latest(spark, out_dir).withColumn(
         "boiler", F.col("n_docs") >= BOILER_MIN_DOCS)
 
 
-# ------------------------------------------------------------------ #
-# Incremental URL-seen dedup (D21 x corpus hygiene; batch anchor:     #
-# operators.corpus.url_dedup)                                         #
-# ------------------------------------------------------------------ #
-
 def _urlseen_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                    out_dir: str) -> None:
-    """One micro-batch of crawl-frontier URL dedup: canonicalize the
-    batch's URLs, flag any doc whose canonical form is in the
-    persistent seen-set OR has an earlier occurrence in the same
-    batch (row_number — the arrival-order keep-first rule), then
-    extend the seen-set. One index row per distinct canonical URL —
-    no per-doc state, no cap needed by construction (the dupspan
-    discipline). Under doc_id-ordered arrival the keeper set equals
-    the batch url_dedup's min-doc_id keepers (proven in tests)."""
-    from pyspark.sql import Window
-
+    """Crawl-frontier URL dedup: a seen-set probe over canonical URLs
+    in doc_id order. Under doc_id-ordered arrival the keeper set
+    equals the batch url_dedup's min-doc_id keepers."""
     from mapreduce_go_spark.operators.corpus import (
         _canonical_url, _url_spark)
 
-    target = os.path.join(index_dir, f"v={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return  # replayed epoch: already applied
-    spark = batch_df.sparkSession
+    def step(batch, hist):
+        canon = batch.select(
+            "doc_id", _canonical_url(_url_spark()).alias("canonical_url"))
+        probed, index = _seen_probe(canon, hist, "canonical_url", "doc_id")
+        return index, probed.select("doc_id", "canonical_url", "is_dup"), ()
 
-    canon = batch_df.select(
-        "doc_id", _canonical_url(_url_spark()).alias("canonical_url"))
-    w = Window.partitionBy("canonical_url").orderBy("doc_id")
-    ranked = canon.withColumn("rn", F.row_number().over(w))
-    prev = _latest_rollup_version(index_dir, below=epoch_id)
-    if prev is None:
-        joined = ranked.withColumn("seen", F.lit(False))
-        index = canon.select("canonical_url").distinct()
-    else:
-        hist = spark.read.parquet(os.path.join(index_dir, f"v={prev}"))
-        joined = ranked.join(
-            hist.withColumn("seen", F.lit(True)), "canonical_url",
-            "left").fillna(False, subset=["seen"])
-        index = (hist.select("canonical_url")
-                 .unionByName(canon.select("canonical_url")).distinct())
-    verdicts = joined.select(
-        "doc_id", "canonical_url",
-        (F.col("seen") | (F.col("rn") > 1)).alias("is_dup"))
-    # verdicts first: a crash before the index commit replays wholesale
-    verdicts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"epoch={epoch_id}"))
-    index.write.mode("overwrite").parquet(target)
-    _prune_old_versions(index_dir)
+    _epoch_commit(batch_df, epoch_id, index_dir, step, out_dir)
 
 
 def run_streaming_urlseen(spark: SparkSession, stream: DataFrame,
                           index_dir: str, out_dir: str,
                           checkpoint_dir: str) -> None:
     """Incremental URL dedup against a persistent canonical-URL
-    seen-set — the crawl-frontier filter as a streaming job. Exactly-
-    once via checkpointed offsets + versioned index snapshots +
-    epoch-keyed verdict partitions (replay overwrites itself)."""
-    def on_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        _urlseen_epoch(batch_df, epoch_id, index_dir, out_dir)
-
-    _drain_foreach(stream, checkpoint_dir, on_epoch)
+    seen-set — the crawl-frontier filter as a streaming job."""
+    _drain_foreach(stream, checkpoint_dir,
+                   lambda b, e: _urlseen_epoch(b, e, index_dir, out_dir))
 
 
 def read_urlseen_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
