@@ -15,18 +15,15 @@ unchanged. State sizing: watermark bounds tumbling/sliding state to
 gap; dropDuplicatesWithinWatermark state is one key per id inside the
 watermark horizon.
 
-The incremental foreachBatch jobs (rollup, neardup, CDC, span dedup,
-retrieval, pHash, HLL/CMS/Bloom sketches, boilerplate lines, URL seen)
-share one epoch protocol, `_epoch_commit`, the streaming form of the
-reference's task commit (write aside, then commit; first completion
-wins): each job's state is a chain of immutable epoch-versioned
-snapshots with a commit marker, an epoch reads the latest snapshot
-committed below it, writes its per-epoch output and then its new
-snapshot, and a committed epoch replays as a no-op. With checkpointed
-source offsets that makes every job exactly-once. Each job is a `step`
-on that protocol: a seen-set probe (CDC, span, URL), a mergeable
-snapshot (rollup, sketches, lines), or its own probe (neardup, pHash,
-retrieval). Decontamination is stateless and keeps only the skip.
+The incremental foreachBatch jobs share one exactly-once epoch
+protocol, `_epoch_commit`, the streaming form of the reference's task
+commit (write aside, then commit; first completion wins): a job's
+state is a chain of epoch-versioned snapshots with a commit marker; an
+epoch reads the latest snapshot committed below it, writes its output,
+then its new snapshot; a committed epoch replays as a no-op. Each job
+is a `step` on it: a seen-set probe (CDC, span, URL), a mergeable
+snapshot (rollup, sketches, lines) or its own probe (neardup, pHash,
+retrieval). Stateless decontamination keeps only the skip.
 """
 
 from __future__ import annotations
@@ -77,11 +74,10 @@ def events_stream(spark: SparkSession, sf_dir: str,
     normalization tables.load applies to the batch side.
 
     Without `staged_dir` a fresh staging copy is created PER CALL and
-    its removal is registered atexit — the old contract said 'caller
-    owns cleanup' while discarding the only handle to the path, so a
-    long-lived session leaked one events.parquet copy per call
-    (review r10). Callers that loop should still stage once and pass
-    `staged_dir` explicitly."""
+    its removal is registered atexit, since the caller never sees the
+    path and a long-lived session would otherwise leak one
+    events.parquet copy per call. Callers that loop should still stage
+    once and pass `staged_dir` explicitly."""
     import atexit
 
     tables._ensure_confs(spark)
@@ -91,8 +87,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     src = staged_dir
     # schema from the batch reader, pre-conversion — cached per
     # sf_dir: it is invariant, and looping callers otherwise pay a
-    # driver file-listing + parquet footer read per stream (r13
-    # review)
+    # driver file-listing + parquet footer read per stream
     if sf_dir not in _RAW_SCHEMA_CACHE:
         _RAW_SCHEMA_CACHE[sf_dir] = spark.read.parquet(
             os.path.join(sf_dir, "events.parquet")).schema
@@ -105,7 +100,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     stream = reader.parquet(src)
     # the SAME normalization as the batch reader — one shared helper
     # (tables.normalize_event_ts), so stream and batch event times can
-    # never diverge (r14 review)
+    # never diverge
     return tables.normalize_event_ts(stream)
 
 
@@ -155,14 +150,12 @@ _USER_STATE_SCHEMA = "n bigint, total double, nn bigint, last_us bigint"
 def _user_stats_fn(key, pdf_iter, state):
     """Custom stateful operator: running per-user count / value sum /
     last event time, carried across micro-batches in GroupState.
-    NULL semantics match the batch twin (r14 review): `nn` counts the
-    non-null values seen, and an all-NULL user emits total NULL like
-    F.sum — pandas' NaN-skipping .sum() otherwise returned 0.0 for a
-    group the batch side leaves NULL. (Accumulation stays double —
-    pandas' per-chunk pairwise sum then += — which is not perfectly
-    split-invariant in the last ulp; the parity test's round(,4) has
-    ~1e11 ulps of slack, and the tws processors' int64 grid is the
-    exact alternative where exactness is the contract.)"""
+    NULL semantics match the batch twin: `nn` counts the non-null
+    values, so an all-NULL user emits total NULL like F.sum where
+    pandas' NaN-skipping .sum() gives 0.0. The double accumulation is
+    not split-invariant in the last ulp; the parity test's round(,4)
+    has ~1e11 ulps of slack, and the tws processors' int64 grid is the
+    exact alternative where exactness is the contract."""
     import pandas as pd
 
     if state.exists:
@@ -187,13 +180,10 @@ def _user_stats_fn(key, pdf_iter, state):
 def stateful_user_stats(stream: DataFrame) -> DataFrame:
     """D21 custom stateful operator (applyInPandasWithState): per-user
     running aggregates with explicit state, emitted each micro-batch
-    (update semantics). The batch twin is a plain groupBy — asserted
-    equal in tests/test_streaming.py.
-
-    State is one tiny tuple per user; at scale the state store
-    partitions by the group key and a TTL/timeout policy bounds it
-    (ProcessingTimeTimeout here, set to no timeout for the bounded
-    fixture)."""
+    (update semantics); the batch twin is a plain groupBy. State is
+    one tiny tuple per user; at scale the state store partitions by
+    the group key and a TTL/timeout policy bounds it (no timeout for
+    the bounded fixture)."""
     return (
         stream.select("user_id", "ts", "value")
         .groupBy("user_id")
@@ -215,19 +205,12 @@ def tws_available() -> bool:
     driver<->worker state protocol is protobuf-encoded, and protobuf
     is NOT baked into this container (ImportError surfaces as
     STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at query start).
-
-    .. versionchanged:: r12
-       The gate now self-unlocks: mapreduce_go_spark.vendor ships a
-       clean-room minimal protobuf runtime (public wire spec; just
-       the surface StateMessage_pb2 + the state clients use), tried
-       when no real google.protobuf exists. A real installation
-       always wins (sys.path append, never prepend). Worker-side the
-       vendored tree rides the pyfiles zip at archive root
-       (session.ensure_package_on_workers). With the unlock, every
-       micro-batch is a live cross-implementation differential: the
-       JVM's protobuf parses what we encode and vice versa, and the
-       parity test still pins the converged state to the batch
-       anchor."""
+    mapreduce_go_spark.vendor ships a clean-room minimal protobuf
+    runtime (public wire spec), tried when no real google.protobuf
+    exists (a real one always wins); workers get it in the pyfiles zip
+    (session.ensure_package_on_workers). Every micro-batch is then a
+    live cross-implementation differential: the JVM's protobuf parses
+    what we encode and vice versa."""
     from mapreduce_go_spark.vendor import ensure_protobuf
 
     return ensure_protobuf()
@@ -259,16 +242,11 @@ class UserTypeProfileProcessor(StatefulProcessor):
 
         acc: dict[object, tuple[int, int, int]] = {}
         for pdf in rows:
-            # _values_to_micro is the shared NULL/Inf discipline
-            # (r14 review folded the inline copy into it): n counts
-            # every row (count(*)), the total sums only non-null
-            # values on the 1e6 int grid, ±Inf raises like the batch
-            # side's ANSI cast. `nn` tracks non-null values so an
-            # all-NULL group emits total NULL exactly like F.sum —
-            # and groupby(dropna=False) keeps the NULL event_type
-            # group the batch groupBy keeps (both r14 review; the
-            # fixtures carry no NULLs, which is how the old
-            # 0.0-and-dropped behaviors stayed invisible).
+            # _values_to_micro is the shared NULL/Inf discipline; `nn`
+            # counts non-null values so an all-NULL group emits total
+            # NULL like F.sum, and dropna=False keeps the NULL
+            # event_type group the batch groupBy keeps (the fixtures
+            # carry no NULLs, so only this rule guards these cases)
             micro, ok = _values_to_micro(pdf)
             for et, sub in pd.DataFrame(
                     {"event_type": pdf["event_type"], "m": micro,
@@ -293,7 +271,7 @@ class UserTypeProfileProcessor(StatefulProcessor):
         # nullable Float64, NOT float64: the plain dtype coerces None
         # to NaN, and Spark's Arrow path keeps NaN as NaN — which is
         # NOT SQL NULL, so the all-NULL group's total would still
-        # diverge from the batch twin (r14 review)
+        # diverge from the batch twin
         out["total"] = pd.array([r[3] for r in rows_out],
                                 dtype="Float64")
         yield out
@@ -303,24 +281,15 @@ class UserTypeProfileProcessor(StatefulProcessor):
 
 
 class TtlUserCountProcessor(StatefulProcessor):
-    """ValueState with a TTL configuration — the one state-variable
-    option the e2e matrix didn't exercise (getValueState's
-    ttlDurationMs; SPARK-49564's StateTTLConfig rides the same
-    protobuf command stream the vendored runtime encodes, so this is
-    also a live wire-format pin for that path). The TTL here is
-    deliberately GENEROUS (10 min >> any test run): eviction cannot
-    fire, so the converged per-user counts must equal the batch
-    count exactly — the test pins the TTL-bearing protocol and the
-    state surviving micro-batches, NOT eviction timing (processing-
-    time eviction is wall-clock-dependent and has no deterministic
-    batch anchor, which is why no registered query uses TTL).
-
-    Operational trap (measured r13): processing-time mode re-arms
-    state cleanup every wall-clock tick, so such a query NEVER
-    self-drains — processAllAvailable and Trigger.AvailableNow both
-    schedule 'No new data but cleaning up state' batches forever.
-    Run it via run_to_memory_drained, which detects the drained
-    source from the progress stream and stops the query."""
+    """ValueState with a TTL (getValueState's ttlDurationMs, whose
+    StateTTLConfig rides the protobuf command stream the vendored
+    runtime encodes — a live wire-format pin for that path). The TTL
+    is deliberately GENEROUS (10 min >> any test run), so eviction
+    cannot fire and the converged per-user counts must equal the batch
+    count: the test pins the TTL-bearing protocol, NOT eviction timing,
+    which is wall-clock-dependent and has no batch anchor. Processing-
+    time mode never self-drains (see run_to_memory), so run it via
+    run_to_memory_drained."""
 
     TTL_MS = 600_000
 
@@ -466,8 +435,8 @@ class UserRecentEventsProcessor(StatefulProcessor):
             ts_us = _ts_ns(pdf) // 1_000
             seen += len(pdf)
             cur.extend(
-                # pd.isna, not str(): str(None) stored the literal
-                # 'None' where the batch twin keeps SQL NULL (r14)
+                # pd.isna, not str(): str(None) stores the literal
+                # 'None' where the batch twin keeps SQL NULL
                 (int(t), int(e),
                  None if pd.isna(et) else str(et),
                  int(m) if k else None)
@@ -498,10 +467,8 @@ class IdleUserFlushProcessor(StatefulProcessor):
     supersedes an earlier one and the max-n emission per user is the
     converged value). At end-of-stream the watermark rests at
     max(ts) - delay, so the set of flushed users is deterministic —
-    the batch anchor computes exactly that set. Expiry at exact
-    equality (timer == watermark) FIRES — probed end-to-end in
-    tests/test_streaming.py, which is why the anchor's filter is
-    <=."""
+    the batch anchor computes exactly that set. A timer equal to the
+    watermark FIRES (probed end to end), so the anchor's filter is <=."""
 
     def init(self, handle) -> None:
         self._handle = handle
@@ -590,19 +557,15 @@ def run_to_memory_rocksdb(spark: SparkSession, streaming_df: DataFrame,
                           staged_dir: str | None = None) -> DataFrame:
     """run_to_memory with the RocksDB state store provider set for the
     query's lifetime (transformWithState refuses the default
-    HDFS-backed provider) and the previous conf restored after — the
-    other streaming jobs in this module keep their provider.
-    drained=True routes through run_to_memory_drained (required for
-    processing-time time mode, where neither processAllAvailable nor
-    AvailableNow ever settles — see run_to_memory)."""
+    HDFS-backed provider) and the previous conf restored after.
+    drained=True routes through run_to_memory_drained, which
+    processing-time time mode requires (see run_to_memory)."""
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    # transformWithState spawns DEDICATED Python processes (the
-    # pre-init driver worker + per-task workers) whose PYTHONPATH is
-    # SPARK_HOME's pyspark + the session's python includes — NOT this
-    # process' sys.path. Ship the pyfiles zip (which carries the
-    # vendored google.protobuf at archive root) so those processes
-    # can speak the state protocol.
+    # transformWithState spawns DEDICATED Python processes whose
+    # PYTHONPATH is SPARK_HOME's pyspark + the session's python
+    # includes, not this process' sys.path: ship the pyfiles zip (with
+    # the vendored google.protobuf) so they can speak the state protocol
     from mapreduce_go_spark.session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -644,9 +607,9 @@ def enriched_segment_counts(stream: DataFrame,
 
 def _attribution_join(purchases: DataFrame, clicks: DataFrame,
                       how: str) -> DataFrame:
-    """ONE copy of the attribution join (r14 review: the inner and
-    outer variants were verbatim copies differing only in the join
-    type): both sides watermarked, purchases joined to same-user
+    """ONE copy of the attribution join for the inner and outer
+    variants, which differ only in the join type: both sides
+    watermarked, purchases joined to same-user
     clicks within the preceding hour — the range condition bounds
     each side's join state to the watermark + range window (without
     it, stream-stream state grows forever; Spark additionally
@@ -689,8 +652,8 @@ def stream_stream_join_outer(purchases: DataFrame,
 
 def _drain_foreach(stream, checkpoint_dir: str, fn) -> None:
     """Run a foreachBatch streaming query to completion and stop it —
-    the one copy of the drain protocol (it appeared 12 times before
-    review r10; any fix to drain semantics now lands once)."""
+    the one copy of the drain protocol, so any fix to drain semantics
+    lands once."""
     q = (stream.writeStream.foreachBatch(fn)
          .option("checkpointLocation", checkpoint_dir)
          .start())
@@ -956,15 +919,9 @@ def run_streaming_neardup(spark: SparkSession, stream: DataFrame,
     flag (see _neardup_epoch); the PRODUCTION DEFAULT is
     dedup.LSH_BUCKET_CAP (batch twin: dedup.neardup_flags_capped);
     pass None for the uncapped anchor semantics (= dedup.neardup_flags).
-
-    .. versionchanged:: r6
-       The default flipped from None (uncapped) to LSH_BUCKET_CAP —
-       a SEMANTIC change for callers relying on the old default:
-       docs in a band bucket past the cap are no longer flagged.
-       This is the intended production default (degenerate buckets
-       must not explode candidate pairs at scale); callers needing
-       the uncapped anchor semantics must now pass bucket_cap=None
-       explicitly."""
+    Capped is the default because degenerate buckets must not explode
+    candidate pairs at scale: docs in a band bucket past the cap are
+    not flagged."""
     _drain_foreach(stream, checkpoint_dir, lambda b, e: _neardup_epoch(
         b, e, index_dir, flags_dir, bucket_cap=bucket_cap))
 
@@ -1043,8 +1000,8 @@ def _dupspan_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
                        dround(F.col("n_dup_windows") / F.col("n_windows"),
                               6))
                 # dround's when-branch is DOUBLE, so a decimal otherwise
-                # literal was silently coerced right back — say what the
-                # type actually is (review r10)
+                # literal would be silently coerced back — say what the
+                # type actually is
                 .otherwise(F.lit(0.0)))
         )
         return index, stats, ()
@@ -1163,16 +1120,14 @@ def run_to_memory(spark: SparkSession, streaming_df: DataFrame,
                   checkpoint_dir: str | None = None) -> DataFrame:
     """Execute a streaming plan to completion against the staged input
     (file source drains fully) and return the sink contents.
-    checkpoint_dir makes the run durable — the hook the state-source
-    introspection tests use to read the finished query's state back
-    via spark.read.format("statestore").
+    checkpoint_dir makes the run durable, so the state-source tests
+    can read the finished query's state back.
 
-    NOT usable for processing-time time mode (TTL'd state): there
-    the engine re-arms state cleanup on every wall-clock tick, so
-    BOTH processAllAvailable and Trigger.AvailableNow schedule
-    "No new data but cleaning up state" batches forever (measured
-    r13: 60+ cleanup batches and counting at sf0.001). Use
-    run_to_memory_drained for those jobs."""
+    NOT usable for processing-time time mode (TTL'd state): the engine
+    re-arms state cleanup on every wall-clock tick, so both
+    processAllAvailable and Trigger.AvailableNow run "No new data but
+    cleaning up state" batches forever (measured: 60+ at sf0.001).
+    Use run_to_memory_drained for those jobs."""
     w = streaming_df.writeStream.outputMode(output_mode)
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
@@ -1190,17 +1145,14 @@ def _drained_from_ring(zeros: list[bool]) -> bool:
     cases are unit-testable: drained iff the TWO most recent batches
     both consumed nothing.
 
-    Why exactly this rule (r13+r14 reviews): a zero anywhere in the
-    ring can PRECEDE the first data batch (stage still populating at
-    start); a SINGLE trailing zero can be a zero-ROW staged file with
-    later files still unread (maxFilesPerTrigger=1 assigns it its own
-    batch) — either would stop the query mid-drain and silently
-    truncate the sink. Two consecutive trailing zeros cannot be
-    either: the file source schedules every remaining file before
-    emitting back-to-back empty batches, and the processing-time jobs
-    this runner exists for emit continuous zero-input cleanup batches
-    after the true drain, so the condition is reached within a poll
-    or two. The same rule covers the genuinely-empty source."""
+    A zero anywhere in the ring can PRECEDE the first data batch, and
+    a SINGLE trailing zero can be a zero-ROW staged file with later
+    files unread — either would stop the query mid-drain and truncate
+    the sink. Two consecutive trailing zeros cannot be either: the
+    file source schedules every remaining file before back-to-back
+    empty batches, and the processing-time jobs emit continuous
+    zero-input cleanup batches after the true drain, so the rule fires
+    within a poll or two. It also covers the genuinely-empty source."""
     return len(zeros) >= 2 and zeros[-1] and zeros[-2]
 
 
@@ -1210,24 +1162,12 @@ def run_to_memory_drained(spark: SparkSession, streaming_df: DataFrame,
                           checkpoint_dir: str | None = None,
                           staged_dir: str | None = None) -> DataFrame:
     """run_to_memory for PROCESSING-TIME time-mode jobs (TTL'd
-    state), which never self-drain (see run_to_memory): start the
-    query, poll its progress until some batch has consumed input AND
-    a LATER batch reports numInputRows == 0 (the source is drained —
-    everything after is wall-clock state cleanup, which emits no
-    processor output), then stop it. The sink then holds exactly the
-    data batches' emissions, which is what the batch-anchor parity
-    checks compare.
-
-    Drain rule (ADVICE r13): a single zero-input batch 0 can also
-    mean the staged dir was EMPTY or still being populated when the
-    query started — a silently-empty sink a parity assert would then
-    misattribute. So pass `staged_dir` when you have it (the runner
-    raises up-front if it holds no files — the static-source
-    contract says everything is visible before start), and the loop
-    additionally requires either a prior input>0 sighting
-    (accumulated across OUR polls, immune to recentProgress ring
-    eviction) or two CONSECUTIVE zero-input entries before declaring
-    the source drained."""
+    state), which never self-drain: poll the query's progress until
+    _drained_from_ring says the source is drained (everything after is
+    state cleanup, which emits no processor output), then stop it. The
+    sink then holds exactly the data batches' emissions. Pass
+    `staged_dir` when you have it: an EMPTY stage would give a
+    silently-empty sink, so the runner raises up-front instead."""
     import time as _time
 
     if staged_dir is not None and not any(
@@ -1246,7 +1186,7 @@ def run_to_memory_drained(spark: SparkSession, streaming_df: DataFrame,
         while _time.time() < deadline:
             if not q.isActive:
                 # surface the real failure instead of spinning into a
-                # misleading not-drained timeout (r13 review)
+                # misleading not-drained timeout
                 exc = q.exception()
                 if exc is not None:
                     raise exc
@@ -1506,7 +1446,7 @@ def read_bloom_membership(spark: SparkSession, out_dir: str,
     """Probe a shingle relation against the maintained filter:
     adds the Bloom 'maybe' verdict. The filter travels as one
     broadcast packed-bitmap row — the same constant-size O(1) probe
-    shape as the batch anchor (r16, see corpus.bloom_packed_words)."""
+    shape as the batch anchor (see corpus.bloom_packed_words)."""
     from mapreduce_go_spark.operators.corpus import (
         bloom_maybe_sql, bloom_packed_words)
 
@@ -1591,6 +1531,6 @@ def run_streaming_urlseen(spark: SparkSession, stream: DataFrame,
 def read_urlseen_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
     """All epochs' keep/dup verdicts. Read at the base path, not an
     'epoch=*' glob — with the glob each epoch=N dir becomes its own
-    base path and the epoch partition column vanishes from the result
-    (review r10), unlike every sibling epoch reader."""
+    base path and the epoch partition column vanishes from the result,
+    unlike every sibling epoch reader."""
     return spark.read.parquet(out_dir)
