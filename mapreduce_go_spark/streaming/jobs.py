@@ -87,7 +87,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     src = staged_dir
     # schema from the batch reader, pre-conversion — cached per
     # sf_dir: it is invariant, and looping callers otherwise pay a
-    # driver file-listing + parquet footer read per stream
+    # file listing + parquet footer read per stream
     if sf_dir not in _RAW_SCHEMA_CACHE:
         _RAW_SCHEMA_CACHE[sf_dir] = spark.read.parquet(
             os.path.join(sf_dir, "events.parquet")).schema
@@ -726,8 +726,8 @@ def _epoch_commit(batch_df: DataFrame, epoch_id: int, index_dir: str,
 
     1. A committed epoch is skipped, so a replay after a post-commit
        crash cannot apply its batch twice.
-    2. `step(batch_df, hist)` reads the latest snapshot committed
-       BELOW the epoch (`hist`, None on the first epoch) and returns
+    2. `hist` is the latest snapshot committed BELOW the epoch (None
+       on the first epoch); `step(batch_df, hist)` returns
        `(index, output, persisted)`: the new snapshot, the epoch's
        output or None, and the DataFrames it persisted. A new
        directory is written, never the one being read.
@@ -740,9 +740,9 @@ def _epoch_commit(batch_df: DataFrame, epoch_id: int, index_dir: str,
        the chain always keeps the one the next epoch reads.
 
     This mirrors the reference's write-temp-then-rename task commit
-    with first-completion-wins (/root/reference/mr/worker.go,
-    mr/master.go); on a cluster a transactional table format
-    (Delta/Iceberg MERGE) provides the same with txn ids."""
+    with first-completion-wins (mr/worker.go, mr/master.go); on a
+    cluster a transactional table format (Delta/Iceberg MERGE)
+    provides the same with txn ids."""
     target = _version_dir(index_dir, epoch_id)
     if os.path.exists(os.path.join(target, "_SUCCESS")):
         return
@@ -805,8 +805,8 @@ def _flag_dups(batch_df: DataFrame, dup_ids: DataFrame) -> DataFrame:
 
 def _read_latest(spark: SparkSession, index_dir: str) -> DataFrame:
     """The latest committed snapshot; an explicit FileNotFoundError
-    when no epoch has committed yet (a formatted `v=None` path used to
-    surface as an opaque PATH_NOT_FOUND)."""
+    when no epoch has committed yet, not an opaque PATH_NOT_FOUND on a
+    `v=None` path."""
     v = _latest_version(index_dir)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot in {index_dir}")
