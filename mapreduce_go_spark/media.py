@@ -12,10 +12,8 @@ This module is the fixture-ingest boundary: each `kind` is written
 ONCE per session as a parquet binary column — (doc_id, src, payload)
 — by the same distributed synthesis kernels, and every consumer
 operator reads the encoded bytes from it, exactly as a production job
-would read an ingested corpus. The write is lazy, keyed by
-(applicationId, sf_dir, kind) so sessions never race (the
-joins._bucketed_table discipline), self-healing on a vanished path,
-and cleaned at interpreter exit. Operator RESULTS are unchanged —
+would read an ingested corpus. Each kind is a session artifact
+(workspace.session_parquet). Operator RESULTS are unchanged —
 synthesis moved, it didn't change — so every oracle stays verbatim.
 
 At 100 TB the analog is real: the corpus arrives as parquet/WARC with
@@ -34,6 +32,7 @@ from pyspark.sql.types import (BinaryType, LongType, StructField,
                                StructType)
 
 from mapreduce_go_spark import tables
+from mapreduce_go_spark.workspace import session_parquet
 
 MEDIA_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -124,92 +123,12 @@ _KINDS = {
     "img": (_img_batches, ("doc_id", "text")),
 }
 
-# media_table's check-then-write is driver-local: two threads of the
-# SAME session requesting the same kind before first materialization
-# would both miss _SUCCESS and overwrite each other mid-commit (png
-# has two consumer operators — review r10). Cross-SESSION safety is
-# already structural (the path embeds applicationId). Locks are keyed
-# per materialization PATH so only same-(kind, sf_dir) requests
-# serialize — a single global lock made a png encode block an
-# unrelated wav encode for the full mapInPandas run (ADVICE r10).
-import threading as _threading  # noqa: E402
-
-_MEDIA_LOCKS_GUARD = _threading.Lock()
-_MEDIA_LOCKS: dict[str, _threading.Lock] = {}
-
-
-def _media_lock(path: str) -> _threading.Lock:
-    with _MEDIA_LOCKS_GUARD:
-        return _MEDIA_LOCKS.setdefault(path, _threading.Lock())
-
-
-def materialize_once(path: str, build) -> None:
-    """The check-then-write protocol every session-materialized
-    fixture table shares (media_table here,
-    similarity._ivf_layout_table): PER-PATH lock (a single global
-    lock made a png encode block an unrelated wav encode — ADVICE
-    r10) + _SUCCESS check, self-healing on a vanished path. `build`
-    runs exactly once per live path; cross-session safety is
-    structural (callers embed applicationId in the path via
-    session_scratch)."""
-    import os
-
-    with _media_lock(path):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            build()
-
-
-def session_parquet(spark: SparkSession, family: str, sf_dir: str,
-                    extra: str, build) -> DataFrame:
-    """ONE parquet write per (session, family, fixture, extra) then a
-    plain scan — the shared front door over materialize_once +
-    session_scratch for every parquet-shaped session materialization
-    (media_table here, similarity._ivf_layout_table,
-    quality.eval_shingles_table; joins._bucketed_table stays separate
-    because bucketing metadata needs the catalog protocol). sf_dir is
-    keyed by its ABSPATH so 'testdata/sf0.01' and
-    '/root/testdata/sf0.01' dedup to one artifact (the r15 review
-    found the call sites disagreeing on this). `build(path)` writes
-    the parquet; session_scratch registers the per-application atexit
-    cleanup once for every family (r11 unification)."""
-    import hashlib
-    import os
-
-    from mapreduce_go_spark.workspace import session_scratch
-
-    tag = hashlib.md5("|".join(
-        [os.path.abspath(sf_dir), extra]).encode()).hexdigest()[:8]
-    path = os.path.join(session_scratch(spark), f"{family}_{tag}")
-    materialize_once(path, lambda: build(path))
-    # memoized handle per (application, path, _SUCCESS mtime): the
-    # artifact is immutable while its _SUCCESS lives, and each
-    # read.parquet call costs ~90 ms of driver py4j + footer read
-    # (r16 profile — the tables.load rationale; layout-table
-    # consumers re-open the same artifact several times per dashboard
-    # construction). The mtime in the key preserves materialize_once's
-    # self-healing: after a tmp-cleaner wipes the path and the next
-    # caller rebuilds it, the rebuilt _SUCCESS is new and the stale
-    # handle (whose cached file index points at deleted part files)
-    # is never served (tests/test_bucketing.py's rmtree scenario —
-    # caught live by the r16 close pytest run).
-    key = (spark.sparkContext.applicationId, path,
-           os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns)
-    df = _SESSION_PARQUET_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _SESSION_PARQUET_MEMO[key] = df
-    return df
-
-
-_SESSION_PARQUET_MEMO: dict[tuple[str, str, int], DataFrame] = {}
-
 
 def media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     """The encoded-media corpus for `kind` at `sf_dir`: (doc_id, src,
-    payload). Materialized distributed on first request this session,
-    then a plain parquet scan — consumer operators never pay
-    synthesis again (and bench's min-of-3 measures walk+decode, not
-    fixture manufacture)."""
+    payload), synthesized distributed by the first request of the
+    session. Consumer operators never pay synthesis again, so bench's
+    min-of-3 measures walk+decode, not fixture manufacture."""
     kernel, cols = _KINDS[kind]
 
     def build(path: str) -> None:

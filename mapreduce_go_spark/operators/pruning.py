@@ -15,31 +15,27 @@ on the scan; a dynamicpruning expression on the DPP fact scan), not
 just measured — the layout discipline of zorder_layout applied to
 directory partitioning.
 
-Fixture boundary: the partitioned copy is written once per session
-(workspace keyed by sf + applicationId, the bucketed-table pattern);
-30 daily partitions at every fixture scale.
+Fixture boundary: the partitioned copy is a session artifact
+(workspace.materialize_once); 30 daily partitions at every fixture
+scale.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dsum, dsum_sql
+from mapreduce_go_spark.sources.io import write_parquet
+from mapreduce_go_spark.workspace import materialize_once
 
 
 def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Day-partitioned parquet copy of events (partition column
-    event_date = to_date(ts)), written once per session."""
-    from mapreduce_go_spark.sources.io import write_parquet
-    from mapreduce_go_spark.workspace import materialize_once
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    event_date = to_date(ts)), a session artifact."""
     return materialize_once(
-        spark, f"events_by_day_{tag}",
+        spark, "events_by_day", sf_dir, "",
         lambda p: write_parquet(
             tables.load(spark, sf_dir, "events")
             .withColumn("event_date", F.to_date("ts")),

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql
 from mapreduce_go_spark.functions.text import NON_LETTER_RE
+from mapreduce_go_spark.workspace import session_parquet
 
 # ---------------------------------------------------------------- #
 # Gopher-style repetition signals                                   #
@@ -261,15 +262,13 @@ def eval_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def eval_shingles_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """eval_shingles_df materialized ONCE per session as parquet (the
-    media.session_parquet discipline shared with media_table and
-    similarity._ivf_layout_table). Every decon consumer — the exact
-    semi-join here, bloom_decontaminate's two lineages — re-derived
-    the eval scan+explode+distinct per use (r14/r15 reviews); the set
-    is tiny (~1.5k rows at sf0.01, ~14k at sf0.1 — a real pipeline's
-    benchmark suite is a few MB of text), so one coalesced file is
-    the right shape and there is no cache handle to leak."""
-    from mapreduce_go_spark.media import session_parquet
+    """eval_shingles_df as a session parquet artifact. Every decon
+    consumer — the exact semi-join here, bloom_decontaminate's two
+    lineages — would otherwise re-derive the eval
+    scan+explode+distinct per use; the set is tiny (~1.5k rows at
+    sf0.01, ~14k at sf0.1 — a real pipeline's benchmark suite is a few
+    MB of text), so one coalesced file is the right shape and there is
+    no cache handle to leak."""
 
     def build(path: str) -> None:
         (eval_shingles_df(spark, sf_dir).coalesce(1)

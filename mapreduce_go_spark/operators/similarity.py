@@ -40,6 +40,7 @@ from mapreduce_go_spark.functions.num import dround, dround_sql
 from mapreduce_go_spark.functions.simd import (
     grid_dot, grid_norm, make_band_keys,
 )
+from mapreduce_go_spark.workspace import session_parquet
 
 N_QUERIES = 8          # vec_id < 8 are the query vectors
 TOP_K = 10
@@ -474,11 +475,9 @@ IVF_HAM_NPROBE = 3   # cells the composed variant probes — one MORE
 def _ivf_layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (vec_id, cluster, w0, w1, codes) CELL LAYOUT the composed
     IVF variants ride: every vector's trained-cell assignment plus its
-    packed sign words AND its PQ codes, materialized ONCE per session
-    as parquet PARTITIONED BY cluster (the joins._bucketed_table /
-    media.media_table amortization discipline — keyed by
-    applicationId + the embeddings content key, self-healing on a
-    vanished path). This is the deployment shape made literal — one
+    packed sign words AND its PQ codes, a session parquet artifact
+    PARTITIONED BY cluster and keyed by the embeddings content key.
+    This is the deployment shape made literal — one
     layout pass emits every per-vector index artifact, the way a FAISS
     IVF index file carries both the coarse assignment and the codes:
     at 100 TB assignment + sign-packing + PQ encode is the one-time
@@ -489,7 +488,6 @@ def _ivf_layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf x100 sweep (SCALE.md) measured the per-query re-derivation
     of exactly this layout as the composed hybrid's dominant residual,
     so fixture queries price only what deployments pay per query."""
-    from mapreduce_go_spark.media import session_parquet
     from mapreduce_go_spark.operators.kmeans import (
         _assign, _embeddings_content_key, kmeans_centroids)
 

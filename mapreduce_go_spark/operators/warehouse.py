@@ -37,13 +37,12 @@ back with the explicit schema).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql, dsum, dsum_sql
+from mapreduce_go_spark.workspace import materialize_once
 
 # MERGE fixture CDC rules (deterministic functions of the key so the
 # oracle reproduces them): every 97th active customer is a delete,
@@ -161,19 +160,15 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read it back with an explicit schema, return the rows — the
     interchange round-trip is its own integrity check (the oracle is
     the identity query on the source table, so any value the format
-    mangles fails the differential).
-
-    Written once per (sf_dir, application) into the engine workspace
-    (the warc_sink_roundtrip discipline); JSONL is splittable so the
-    re-read parallelizes per-split regardless of file count.
+    mangles fails the differential). The export is a session artifact;
+    JSONL is splittable so the re-read parallelizes per-split
+    regardless of file count.
     """
     from mapreduce_go_spark.sources import io
-    from mapreduce_go_spark.workspace import materialize_once
 
     cols = ["doc_id", "lang", "source", "n_chars", "text"]
-    tag = os.path.basename(sf_dir.rstrip("/"))
     out = materialize_once(
-        spark, f"jsonl_{tag}",
+        spark, "jsonl", sf_dir, "",
         lambda p: io.write_json(
             tables.load(spark, sf_dir, "documents").select(*cols), p))
     schema = ("doc_id long, lang string, source string, "
@@ -192,13 +187,11 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes and filter-prunes like parquet; sources/io.read_orc
     is the library entry."""
     from mapreduce_go_spark.sources import io
-    from mapreduce_go_spark.workspace import materialize_once
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate", "o_orderpriority"]
-    tag = os.path.basename(sf_dir.rstrip("/"))
     out = materialize_once(
-        spark, f"orc_{tag}",
+        spark, "orc", sf_dir, "",
         lambda p: io.write_orc(
             tables.load(spark, sf_dir, "orders").select(*cols), p))
     return io.read_orc(spark, out).select(*cols)
@@ -216,7 +209,6 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so any mangling (lost quote, split field, header drift) fails the
     differential."""
     from mapreduce_go_spark.sources import io
-    from mapreduce_go_spark.workspace import materialize_once
 
     def derive(df: DataFrame) -> DataFrame:
         return df.select(
@@ -226,9 +218,8 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("n_chars").cast("string")).alias("tricky"),
         )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
     out = materialize_once(
-        spark, f"csv_{tag}",
+        spark, "csv", sf_dir, "",
         lambda p: io.write_csv(
             derive(tables.load(spark, sf_dir, "documents")), p))
     schema = ("doc_id long, lang string, source string, "

@@ -42,6 +42,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from mapreduce_go_spark.workspace import materialize_once
+
 WARC_SOURCE_SCHEMA = ("bucket bigint, doc_id bigint, uri string, "
                       "http_status int, body_len int, body_md5 string")
 
@@ -346,42 +348,36 @@ class WarcStreamReader(SimpleDataSourceStreamReader):
 
 
 def ensure_warc_files(spark, sf_dir: str) -> str:
-    """Materialize the deterministic per-bucket .warc files once per
-    session (keyed by sf + applicationId, the bucketed-layout
-    discipline) and return the directory. Corrupt buckets
+    """The deterministic per-bucket .warc files as a session artifact;
+    returns the directory. Corrupt buckets
     (bucket % WARC_CORRUPT_EVERY == 0) are written too — truncated
     mid-record exactly like the in-plan synthesis — so the source's
     skip/fail postures face real malformed archives."""
-    from mapreduce_go_spark.workspace import session_scratch
     from mapreduce_go_spark.operators.warc import WARC_BUCKET, make_warc
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(session_scratch(spark), f"warc_files_{tag}")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
-    # fixture-ingest boundary: driver-side write of the deterministic
-    # archives (bounded: #docs rows once per session; a real pipeline
-    # starts from files and never runs this)
-    import duckdb
+    def write(out: str) -> None:
+        # fixture-ingest boundary: driver-side write of the
+        # deterministic archives (bounded: #docs rows once per session;
+        # a real pipeline starts from files and never runs this)
+        import duckdb
 
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT doc_id, text FROM "
-        f"'{os.path.join(sf_dir, 'documents.parquet')}' ORDER BY doc_id"
-    ).fetchall()
-    con.close()
-    buckets: dict[int, list[tuple[int, str]]] = {}
-    for doc_id, text in rows:
-        buckets.setdefault(doc_id // WARC_BUCKET, []).append(
-            (doc_id, text))
-    for b, docs in buckets.items():
-        with open(os.path.join(out, f"bucket={b}.warc"), "wb") as f:
-            f.write(make_warc(b, docs))
-    with open(done, "w") as f:
-        f.write("ok")
-    return out
+        con = duckdb.connect()
+        rows = con.execute(
+            "SELECT doc_id, text FROM "
+            f"'{os.path.join(sf_dir, 'documents.parquet')}' ORDER BY doc_id"
+        ).fetchall()
+        con.close()
+        buckets: dict[int, list[tuple[int, str]]] = {}
+        for doc_id, text in rows:
+            buckets.setdefault(doc_id // WARC_BUCKET, []).append(
+                (doc_id, text))
+        os.makedirs(out, exist_ok=True)
+        for b, docs in buckets.items():
+            with open(os.path.join(out, f"bucket={b}.warc"), "wb") as f:
+                f.write(make_warc(b, docs))
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+
+    return materialize_once(spark, "warc_files", sf_dir, "", write)
 
 
 def warc_source_extract(spark, sf_dir: str):
@@ -641,8 +637,6 @@ def warc_sink_roundtrip(spark, sf_dir: str):
 
     from mapreduce_go_spark import tables
     from mapreduce_go_spark.operators.warc import WARC_BUCKET
-
-    from mapreduce_go_spark.workspace import session_scratch
     from mapreduce_go_spark.session import ensure_package_on_workers
 
     # the writer kernel imports this package on EXECUTORS — ship it
@@ -650,18 +644,18 @@ def warc_sink_roundtrip(spark, sf_dir: str):
     # recipe's vanilla-session posture catches exactly this)
     ensure_package_on_workers(spark)
     _arm_pushdown(spark)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(session_scratch(spark), f"warc_sink_{tag}")
     spark.dataSource.register(WarcDataSource)
-    if not os.path.exists(os.path.join(out, "_WRITTEN")):
+
+    def write(out: str) -> None:
         docs = tables.load(spark, sf_dir, "documents").select(
             F.expr(f"doc_id div {WARC_BUCKET}").alias("bucket"),
             "doc_id", "text")
         (docs.repartition("bucket")
          .write.format("warc").option("path", out).mode("append")
          .save())
-        with open(os.path.join(out, "_WRITTEN"), "w") as f:
-            f.write("ok")
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+
+    out = materialize_once(spark, "warc_sink", sf_dir, "", write)
     return (spark.read.format("warc")
             .option("path", out)
             .option("on_corrupt", "fail")

@@ -32,7 +32,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
@@ -779,8 +779,6 @@ def _seen_probe(rows: DataFrame, hist: DataFrame | None, key: str,
     earlier occurrence (by `order`) exists in this batch; and the new
     seen-set, `hist` ∪ the batch's distinct keys. One index row per
     distinct key, so the set needs no degenerate-bucket cap."""
-    from pyspark.sql import Window
-
     ranked = rows.withColumn("rn", F.row_number().over(
         Window.partitionBy(key).orderBy(*order)))
     keys = rows.select(key)
@@ -874,8 +872,6 @@ def _neardup_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str,
 
     The index is (band, band_key, min doc_id, n_docs) — one row per
     distinct bucket, NOT per doc — merged by min/sum."""
-    from pyspark.sql import Window
-
     from mapreduce_go_spark.operators.dedup import (_lsh_bands_df,
                                                     _minhash_sig_df)
 
@@ -1234,54 +1230,43 @@ def _phash_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
         # batch anchor phash_dup_flags persists for the same reason
         bands = batch.select("doc_id").mapInPandas(
             _phash_band_batches, PHASH_BANDS_SCHEMA).persist()
-        grouped = (
-            bands.groupBy("band_no", "band_val")
-            .agg(F.sort_array(
-                F.collect_list(F.struct("doc_id", "b0", "b1", "b2", "b3"))
-            ).alias("ds"))
-        )
+        keys = ["band_no", "band_val"]
+        ranked = bands.withColumn("i", F.row_number().over(
+            Window.partitionBy(*keys).orderBy("doc_id")))
         if hist is None:
-            g = grouped.withColumn("n_hist", F.lit(0).cast("long"))
+            ranked = ranked.withColumn("n_hist", F.lit(0).cast("long"))
         else:
-            counts = hist.groupBy("band_no", "band_val").agg(
+            counts = hist.groupBy(*keys).agg(
                 F.max("rk").alias("n_hist"))  # rk is dense 1..n
-            g = (grouped.join(counts, ["band_no", "band_val"], "left")
-                 .fillna(0, subset=["n_hist"]))
-
-        ham_xy = sum(
-            F.bit_count(F.expr(f"x.b{i} ^ y.b{i}")) for i in range(4))
-        # in-batch priors: holder position within the bucket's LIFETIME
-        # order is n_hist + i + 1; only positions <= CAP may flag
+            ranked = (ranked.join(counts, keys, "left")
+                      .fillna(0, subset=["n_hist"]))
+        # a batch row's position in the bucket's LIFETIME order is
+        # n_hist + i; only positions <= CAP become holders
+        new_holders = (
+            ranked.withColumn("rk", (F.col("n_hist") + F.col("i"))
+                              .cast("long"))
+            .where(F.col("rk") <= PHASH_BAND_CAP)
+            .select(*keys, "doc_id", *[f"b{i}" for i in range(4)], "rk")
+        )
+        ham = sum(
+            F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
+            for i in range(4))
+        holder_hashes = [F.col(f"b{i}").alias(f"h{i}") for i in range(4)]
+        # in-batch priors: the bounded-holder join of phash_dup_flags,
+        # at most CAP holder rows per bucket whatever its size
         dups = (
-            g.select("n_hist", F.posexplode("ds").alias("i", "x"), "ds")
-            .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
-            .select("x", F.explode(F.slice(
-                F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
-            .where(ham_xy <= PHASH_HAM_MAX)
-            .select(F.col("y.doc_id").alias("doc_id"))
+            bands.join(new_holders.select(
+                *keys, F.col("doc_id").alias("h_doc"), *holder_hashes),
+                keys)
+            .where((F.col("h_doc") < F.col("doc_id"))
+                   & (ham <= PHASH_HAM_MAX))
+            .select("doc_id")
         )
         if hist is not None:
-            ham_hist = sum(
-                F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
-                for i in range(4))
             dups = dups.union(
-                bands.join(
-                    hist.select("band_no", "band_val",
-                                *[F.col(f"b{i}").alias(f"h{i}")
-                                  for i in range(4)]),
-                    ["band_no", "band_val"])
-                .where(ham_hist <= PHASH_HAM_MAX)
+                bands.join(hist.select(*keys, *holder_hashes), keys)
+                .where(ham <= PHASH_HAM_MAX)
                 .select("doc_id"))
-        new_holders = (
-            g.select("band_no", "band_val", "n_hist",
-                     F.posexplode("ds").alias("i", "x"))
-            .where(F.col("n_hist") + F.col("i") < PHASH_BAND_CAP)
-            .select("band_no", "band_val",
-                    F.col("x.doc_id").alias("doc_id"),
-                    *[F.col(f"x.b{i}").alias(f"b{i}") for i in range(4)],
-                    (F.col("n_hist") + F.col("i") + 1).cast("long")
-                    .alias("rk"))
-        )
         index = (new_holders if hist is None
                  else hist.unionByName(new_holders))
         return index, _flag_dups(batch, dups), (bands,)

@@ -1,21 +1,42 @@
 """Session workspace: the directory the engine owns for materialized
-layouts and the per-application scratch under it.
+artifacts, the per-application scratch under it, and the one
+write-once rule every session artifact follows.
 
-Extracted from operators/joins.py in r15 — the bucketed-layout helper
-was the first materialization and the symbols grew into engine-wide
-infrastructure that media caches, WARC sinks, format-roundtrip
-exports, pruning layouts and the k-means codebook store all imported
-from an OPERATOR module through deferred intra-function imports (the
-layering inversion the r15 review flagged). This module has no
-operator dependencies, so every consumer can import it at the top
-level.
+A session artifact is a directory written once per session and read
+by every later request:
+
+- Key: `artifact_path` names it `<family>_<md5(abspath(sf_dir)|extra)[:8]>`
+  under `session_scratch`. The absolute fixture path is hashed, so two
+  spellings of one fixture share an artifact and two fixtures with the
+  same last path component do not.
+- Lock: `materialize_once` holds a per-path lock around the check and
+  the write, so two driver threads asking for one artifact write it
+  once, while unrelated artifacts never wait on each other.
+- Commit marker: `_SUCCESS`. Spark's file committer publishes it after
+  the data; a `write` that bypasses Spark writes it last itself. No
+  marker means uncommitted: a write that raised or crashed is redone
+  by the next request.
+- Lifetime: the application's scratch directory, removed at
+  interpreter exit. A killed session never runs that removal, so the
+  first `session_scratch` call of each session sweeps the scratch of
+  dead sessions. A vanished artifact (tmp cleaner, sweep) is rebuilt
+  by the next request.
+
+This module has no operator dependencies, so every consumer can import
+it at the top level.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import hashlib
+import os
+import threading
+
+from pyspark.sql import DataFrame, SparkSession
 
 _CLEANUP_REGISTERED: set[str] = set()
+_LOCKS_GUARD = threading.Lock()
+_LOCKS: dict[str, threading.Lock] = {}
 
 
 def _workspace_dir() -> str:
@@ -23,7 +44,6 @@ def _workspace_dir() -> str:
     $SPARK_GRAFT_WORKSPACE, else <repo>/.bucketed_cache. NOT the OS
     temp dir — tmp cleaners delete long-lived session files out from
     under the catalog (the advisory's failure mode)."""
-    import os
     import pathlib
 
     return os.environ.get(
@@ -34,26 +54,17 @@ def _workspace_dir() -> str:
 
 def session_scratch(spark: SparkSession) -> str:
     """Per-application scratch directory under the workspace, removed
-    at interpreter exit. EVERY session-lifetime materialization
-    (bucketed layouts, the partitioned events copy, format-roundtrip
-    exports) must live under this path: before r11 the jsonl/orc/csv/
-    events_by_day copies were appId-tagged at the workspace ROOT and
-    never cleaned, so every pytest/bench/driver session leaked its
-    copies onto disk permanently.
+    at interpreter exit; every session artifact lives under it.
 
-    The atexit removal is best-effort (a SIGKILLed session never runs
-    it), so the first call of a session also SWEEPS siblings left by
-    dead sessions (VERDICT r15 item 7: ~90 MB of orphans had
-    accumulated across rounds). Ownership is a pidfile: each scratch
-    carries .owner_pid; a sibling whose pid is gone is sweepable, a
-    live one is left alone (concurrent pytest + driver sessions
-    coexist). Legacy appId-patterned dirs with no pidfile are swept
-    too; anything else under the workspace (the codebooks store) is
-    durable and untouched. Every session-parquet consumer is
-    self-healing on a vanished path, so a mis-sweep of a live legacy
-    dir costs a rebuild, not correctness."""
+    Its first call in a session sweeps the siblings left by dead
+    sessions. Ownership is a pidfile: each scratch carries
+    .owner_pid; a sibling whose pid is gone is sweepable, a live one is
+    left alone (concurrent pytest + driver sessions coexist). Legacy
+    appId-patterned dirs with no pidfile are swept too; anything else
+    under the workspace (the codebooks store) is durable and untouched.
+    Every artifact is rebuilt on a vanished path, so a mis-sweep of a
+    live legacy dir costs a rebuild, not correctness."""
     import atexit
-    import os
     import shutil
 
     base = os.path.join(_workspace_dir(), spark.sparkContext.applicationId)
@@ -67,21 +78,50 @@ def session_scratch(spark: SparkSession) -> str:
     return base
 
 
-def materialize_once(spark: SparkSession, name: str, write) -> str:
-    """Session-scoped materialize-once under the scratch dir: calls
-    `write(path)` unless the path already carries Spark's task-commit
-    _SUCCESS marker, and returns the path. ONE commit convention for
-    every format export (r16 review: the roundtrip jobs hand-rolled a
-    private _WRITTEN marker next to the _SUCCESS the Hadoop committer
-    already publishes, in a thrice-copied check/write/stamp block).
-    _SUCCESS is atomic with the committed data — a crashed write
-    leaves no marker and the next session (or retry) rewrites."""
-    import os
+def artifact_path(spark: SparkSession, family: str, sf_dir: str,
+                  extra: str) -> str:
+    """The session path of the `family` artifact built from `sf_dir`;
+    `extra` keys whatever else the artifact depends on."""
+    tag = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}|{extra}".encode()).hexdigest()[:8]
+    return os.path.join(session_scratch(spark), f"{family}_{tag}")
 
-    out = os.path.join(session_scratch(spark), name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        write(out)
-    return out
+
+def materialize_once(spark: SparkSession, family: str, sf_dir: str,
+                     extra: str, write) -> str:
+    """Call `write(path)` unless the artifact is committed, and return
+    its path."""
+    path = artifact_path(spark, family, sf_dir, extra)
+    with _LOCKS_GUARD:
+        lock = _LOCKS.setdefault(path, threading.Lock())
+    with lock:
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            write(path)
+    return path
+
+
+def session_parquet(spark: SparkSession, family: str, sf_dir: str,
+                    extra: str, build) -> DataFrame:
+    """A parquet artifact (`build(path)` writes it) as a plain scan.
+
+    The read handle is memoized per (application, path, _SUCCESS
+    mtime): each read.parquet costs ~90 ms of driver py4j plus a footer
+    read, and layout consumers reopen one artifact several times per
+    construction. The mtime keeps the rebuild on a vanished path
+    honest: the rebuilt artifact carries a new marker, so the stale
+    handle, whose file index names deleted part files, is never
+    served."""
+    path = materialize_once(spark, family, sf_dir, extra, build)
+    key = (spark.sparkContext.applicationId, path,
+           os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns)
+    df = _SESSION_PARQUET_MEMO.get(key)
+    if df is None:
+        df = spark.read.parquet(path)
+        _SESSION_PARQUET_MEMO[key] = df
+    return df
+
+
+_SESSION_PARQUET_MEMO: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def _sweep_dead_sessions(current: str) -> None:
@@ -89,7 +129,6 @@ def _sweep_dead_sessions(current: str) -> None:
     pidfile with a gone pid, or a legacy appId-patterned dir with no
     pidfile at all. PermissionError from kill(pid, 0) means ALIVE
     (another user's process) — kept."""
-    import os
     import re
     import shutil
 

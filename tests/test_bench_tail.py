@@ -9,14 +9,9 @@ the tail whole. These tests pin the byte budgets and the determinism
 with a synthetic full-size timings dict — no Spark session needed.
 """
 
-import importlib.util
 import json
-import os
 
-spec = importlib.util.spec_from_file_location(
-    "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"))
-bench = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(bench)
+import bench
 
 
 def _fake_timings():

@@ -235,6 +235,29 @@ def test_phash_dup_flags_bounded_holder_join(spark, sf_dir):
         spark.catalog.clearCache()
 
 
+def test_streaming_phash_epoch_bounded_holder_join(spark, sf_dir,
+                                                   tmp_path, monkeypatch):
+    """The streaming twin of phash_dup_flags pairs a batch's band rows
+    through the same bounded-holder join: neither frame an epoch
+    writes (its flags, its index snapshot) collects a band bucket into
+    one array."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mapreduce_go_spark import tables
+    from mapreduce_go_spark.streaming import jobs
+
+    plans = []
+    monkeypatch.setattr(DataFrameWriter, "parquet",
+                        lambda self, path, *a, **k: plans.append(
+                            plan_of(self._df)))
+    batch = tables.load(spark, sf_dir, "documents").where("doc_id < 64")
+    jobs._phash_epoch(batch, 0, str(tmp_path / "index"),
+                      str(tmp_path / "flags"))
+    assert len(plans) == 2
+    for p in plans:
+        assert "collect_list" not in p, p
+
+
 def test_pack_sequences_no_global_window(spark, sf_dir):
     """The packing cumsum must never run as one un-partitioned window
     (the whole corpus through a single task). windowspecdefinition's

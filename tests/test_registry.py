@@ -181,13 +181,7 @@ def test_bench_headline_names_are_registered():
     renamed/removed query must fail here, not silently drop out of
     BENCH_r{N} (bench.py filters to known names, so a typo would
     shrink the benchmark without any error)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
 
     from mapreduce_go_spark import registry
 
@@ -234,14 +228,9 @@ def test_bench_summary_line_fits_driver_tail():
     present at 5-digit seconds, 4-digit query count) must stay under
     the tail with margin. If FAMILIES grows past this, shorten keys
     or drop the families map from the short line."""
-    import importlib.util
     import json
-    import os
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
 
     fams = {name: 99999.999 for name, _ in bench.FAMILIES}
     fams["other"] = 99999.999
@@ -268,13 +257,7 @@ def test_bench_canary_degraded_flags_slow_host():
     degraded readings (0.164, 0.333 — SCALE.md r13 close) are
     flagged, and the threshold is a written constant, not a
     per-round human judgment."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
 
     assert not bench.canary_degraded(0.111)  # idle reference itself
     assert not bench.canary_degraded(0.113)  # r13 driver reading

@@ -54,12 +54,7 @@ def main(argv: list[str]) -> int:
     out_path = argv[0] if argv else "plans/r18/plan_census.tsv"
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.1"
 
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "..", "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
 
     from mapreduce_go_spark import registry
     from mapreduce_go_spark.session import get_spark
