@@ -40,15 +40,15 @@ from pyspark.sql import SparkSession
 def default_shuffle_partitions() -> int:
     """$SPARK_GRAFT_CPUS read at CALL time — an import-time snapshot
     could disagree with get_spark's own call-time env read when the
-    variable is set between import and session build (r13 review)."""
+    variable is set between import and session build."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 #: Conf marker: set when a caller PINNED shuffle partitions via the
 #: get_spark argument — tables._ensure_confs then leaves the value
-#: alone instead of resetting it to $SPARK_GRAFT_CPUS on every load()
-#: (r13 review: the explicit argument only held until the first
-#: table load otherwise).
+#: alone instead of resetting it to $SPARK_GRAFT_CPUS on every load();
+#: otherwise the explicit argument only held until the first table
+#: load.
 _PIN_KEY = "spark.mapreduce_go_spark.shufflePartitions.pinned"
 
 
@@ -86,13 +86,13 @@ def get_spark(app_name: str = "mapreduce_go_spark",
         # capture (pyspark/errors/utils._with_origin): one
         # getActiveSession + one conf.get + a PySparkCurrentOrigin
         # set/clear per operation — 3-4 extra py4j round-trips each.
-        # Profiled r16: ~15k round-trips to build the 13-variant
+        # Profiled: ~15k round-trips to build the 13-variant
         # dashboard plan, and the wrapper was ~35% of warm
         # construction (interleaved min-of-4: 6.23 s -> 3.84 s with
         # it off). Pure driver-side fixed cost, scale-independent;
         # the price is error messages without Python call-site
         # context, which the test suite never relies on. Env-
-        # overridable (ADVICE r16): a debugging session restores
+        # overridable: a debugging session restores
         # call-site context with SPARK_GRAFT_CALLSITE_CAPTURE=true —
         # it is a STATIC conf, so set it before the process's first
         # get_spark.
@@ -178,7 +178,7 @@ def _publish(name: str, write) -> str:
 
 def _apply_sql_confs(spark: SparkSession, n_shuffle: int) -> None:
     """The ONE conf list (tables._ensure_confs delegates here — two
-    hand-maintained lists had already drifted, r13 review)."""
+    hand-maintained lists had already drifted apart)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
@@ -199,7 +199,7 @@ def _apply_sql_confs(spark: SparkSession, n_shuffle: int) -> None:
     # scale — no producer/consumer overlap across the JVM<->Python
     # boundary — and for large binary cells (media blobs) it also
     # sets the per-batch memory high-water mark. 1000 measured best
-    # overall (r16 interleaved min-of-5 over six Arrow-heavy queries:
+    # overall (interleaved min-of-5 over six Arrow-heavy queries:
     # 4.13 s at 10000 -> 3.82 s at 1000; 500 wins another 3% on the
     # binary-heavy kernels but starts to tax narrow-numeric ones,
     # zscore 0.25 -> 0.29). Batch size is value-invariant for every
@@ -236,7 +236,7 @@ def ensure_package_on_workers(spark: SparkSession) -> str:
     sc = spark.sparkContext
     # keyed by applicationId, not id(sc): a stopped context's address
     # can be reused by a NEW context, which would silently skip the
-    # addPyFile and fail every worker-side import (r13 review)
+    # addPyFile and fail every worker-side import
     if sc.applicationId in _SHIPPED_CONTEXTS:
         return os.path.join(tempfile.gettempdir(), _PYFILES_ZIP)
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
