@@ -22,19 +22,53 @@ configuration:
   zip archive on `sys.path`: 0.14-0.27 s per stock task on 4 cores.
   Guard: new session, `local`/`local[...]` master, and installed
   `pyspark.__version__ == spark.version`; otherwise workers are stock.
+- A new JVM on a `local` master starts from a JDK dynamic AppCDS
+  archive: Spark's classes are mapped instead of loaded and linked
+  (session start 7.5-8.6 s -> 4.1-4.4 s on 4 cores). Guard: no JVM yet
+  (`SparkContext._gateway is None`, no `PYSPARK_GATEWAY_PORT`), the
+  default `PYSPARK_SUBMIT_ARGS`, no env var that adds to spark-class's
+  classpath, and a conf dir holding only `*.template` files; the
+  launch then points `SPARK_CONF_DIR` at an empty dir at a stable path
+  in the cache, because the JDK will not dump with a non-empty
+  directory on the classpath and checks the runtime classpath against
+  the dump's. Otherwise the start is stock. The archive is
+  `${XDG_CACHE_HOME:-~/.cache}/mapreduce_go_spark/cds/<key>.jsa`, keyed
+  without a subprocess by the `java` spark-class runs (its `libjvm.so`
+  size and mtime), the Spark version, the `$SPARK_HOME/jars` listing
+  and the driver heap (over 32 GB the JVM takes the no-coops base
+  archive); not by `JAVA_TOOL_OPTIONS`, which may carry per-run paths.
+  With no archive the session dumps to `<key>.<unique>.tmp`
+  (`-XX:ArchiveClassesAtExit`), records its JVM beside it and waits
+  for that JVM at interpreter exit. A later session publishes the
+  temp file (`os.replace`) only once its writer is gone and
+  `java -Xshare:on -XX:SharedArchiveFile=<tmp> -version` on the
+  recorded classpath exits 0, and deletes it otherwise: a garbage file
+  is merely ignored by the JVM, but a torn dump (a JVM killed while
+  writing) kills the JVM with SIGBUS in
+  `FileMapInfo::relocate_pointers_in_core_regions`.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import fcntl
+import glob
 import hashlib
+import json
 import os
 import re
 import shlex
+import shutil
+import subprocess
 import sys
 import tempfile
+import uuid
+from typing import NamedTuple
 
 import pyspark
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 def default_shuffle_partitions() -> int:
@@ -70,9 +104,11 @@ def get_spark(app_name: str = "mapreduce_go_spark",
             active.conf.set(_PIN_KEY, "true")
         return active
 
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -80,7 +116,7 @@ def get_spark(app_name: str = "mapreduce_go_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.speculation", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # PySpark 4 wraps EVERY DataFrame API call in a call-site
         # capture (pyspark/errors/utils._with_origin): one
@@ -102,7 +138,15 @@ def get_spark(app_name: str = "mapreduce_go_spark",
                 ).lower() in ("1", "true", "yes") else "false")
     )
     new = SparkContext._active_spark_context is None
-    spark = builder.getOrCreate()
+    archive = _archive_launch(master, heap)
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        builder.config("spark.driver.extraJavaOptions", archive.options)
+        with _conf_dir(archive.conf_dir):
+            spark = builder.getOrCreate()
+        if archive.record:
+            _record_dump(archive.record, spark.sparkContext)
     if new:
         _use_worker_launcher(spark.sparkContext)
     _apply_sql_confs(spark, n_shuffle)
@@ -113,6 +157,187 @@ def get_spark(app_name: str = "mapreduce_go_spark",
 
 
 _LOCAL_MASTER = re.compile(r"local(\[.*\])?")
+
+#: env vars that add entries to spark-class's launch classpath
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES", "SPARK_TESTING",
+                  "SPARK_SQL_TESTING")
+#: a cache path that needs no quoting in extraJavaOptions or a classpath
+_PLAIN_PATH = re.compile(r"[\w./+@,=-]+")
+#: how long interpreter exit waits for a dumping JVM before killing it
+_DUMP_WAIT_S = 120
+#: CDS logs to stdout (a dump names every class it skips, ~550 lines),
+#: which would land in the bench and perfbench output tails
+_QUIET = "-Xlog:cds*=off"
+
+
+class _Archive(NamedTuple):
+    options: str        # spark.driver.extraJavaOptions
+    conf_dir: str       # SPARK_CONF_DIR for the launch
+    record: str | None  # the dump's writer record; None when mapping
+
+
+def _archive_launch(master: str, heap: str) -> _Archive | None:
+    """How to start the session JVM from the archive (see the module
+    docstring), or None for the stock start. Publishes finished dumps
+    first; with no archive to map, writes the new dump's record."""
+    if (SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ
+            or os.environ.get("PYSPARK_SUBMIT_ARGS",
+                              "pyspark-shell") != "pyspark-shell"
+            or any(os.environ.get(v) for v in _CLASSPATH_ENV)
+            or not _LOCAL_MASTER.fullmatch(master)):
+        return None
+    spark_home = _find_spark_home()
+    if not _templates_only(os.environ.get("SPARK_CONF_DIR")
+                           or os.path.join(spark_home, "conf")):
+        return None
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+            if os.environ.get("JAVA_HOME") else shutil.which("java"))
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
+                         or os.path.expanduser("~/.cache"),
+                         "mapreduce_go_spark", "cds")
+    conf = os.path.join(cache, "conf")
+    if not java or not _PLAIN_PATH.fullmatch(cache):
+        return None
+    try:
+        key = _archive_key(java, spark_home, heap)
+        os.makedirs(conf, exist_ok=True)
+        if os.listdir(conf):
+            return None
+        archive = os.path.join(cache, f"{key}.jsa")
+        with open(os.path.join(cache, "lock"), "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            _settle_dumps(cache, key, archive)
+            if os.path.exists(archive):
+                return _Archive(
+                    f"-XX:SharedArchiveFile={archive} {_QUIET}", conf, None)
+            stem = os.path.join(cache, f"{key}.{uuid.uuid4().hex[:12]}")
+            _write_record(f"{stem}.json",
+                          {"pid": os.getpid(), "java": java, "heap": heap})
+        return _Archive(f"-XX:ArchiveClassesAtExit={stem}.tmp {_QUIET}",
+                        conf, f"{stem}.json")
+    except OSError:
+        return None
+
+
+def _templates_only(conf_dir: str) -> bool:
+    return (not os.path.isdir(conf_dir)
+            or all(n.endswith(".template") for n in os.listdir(conf_dir)))
+
+
+def _archive_key(java: str, spark_home: str, heap: str) -> str:
+    java = os.path.realpath(java)
+    libjvm = os.stat(os.path.join(os.path.dirname(os.path.dirname(java)),
+                                  "lib", "server", "libjvm.so"))
+    jars = sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns)
+                  for e in os.scandir(os.path.join(spark_home, "jars")))
+    text = repr((java, libjvm.st_size, libjvm.st_mtime_ns,
+                 pyspark.__version__, jars, heap))
+    return hashlib.sha1(text.encode()).hexdigest()[:16]
+
+
+def _settle_dumps(cache: str, key: str, archive: str) -> None:
+    """Publish as `archive` each temp file of `key` whose writer is gone
+    and that passes the probe; delete the others. Runs under the cache
+    lock."""
+    for record in glob.glob(os.path.join(glob.escape(cache),
+                                         f"{key}.*.json")):
+        writer = _read_record(record)
+        if _alive(writer.get("pid")):
+            continue
+        tmp = record[:-len(".json")] + ".tmp"
+        if os.path.exists(tmp):
+            if "classpath" in writer and _probe(tmp, writer):
+                os.replace(tmp, archive)
+            else:
+                os.remove(tmp)
+        os.remove(record)
+
+
+def _probe(tmp: str, writer: dict) -> bool:
+    """Does a JVM started like the writer map `tmp`? -Xshare:on makes
+    a file that cannot be mapped fail the start instead of being
+    ignored; a torn file fails it with SIGBUS."""
+    cmd = [writer["java"], f"-Xmx{writer['heap']}",
+           "-cp", writer["classpath"], f"-XX:SharedArchiveFile={tmp}",
+           "-Xshare:on", "-XX:ErrorFile=/dev/null",
+           "-XX:-CreateCoredumpOnCrash", "-version"]
+    try:
+        return subprocess.run(cmd, stdout=subprocess.DEVNULL,
+                              stderr=subprocess.DEVNULL,
+                              timeout=60).returncode == 0
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+
+
+def _alive(pid) -> bool:
+    if not isinstance(pid, int):
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _read_record(path: str) -> dict:
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
+def _write_record(path: str, record: dict) -> None:
+    with open(path + ".part", "w") as fh:
+        json.dump(record, fh)
+    os.replace(path + ".part", path)
+
+
+@contextlib.contextmanager
+def _conf_dir(path: str):
+    """SPARK_CONF_DIR is `path` while the JVM launches."""
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+
+
+def _record_dump(record: str, sc: SparkContext) -> None:
+    """Name the launched JVM (spark-class execs it) as the dump's writer,
+    with the classpath the probe needs, and wait for it at exit."""
+    proc = sc._gateway.proc
+    _write_record(record, {
+        **_read_record(record), "pid": proc.pid,
+        "classpath": sc._jvm.System.getProperty("java.class.path")})
+    atexit.register(_await_dump, proc)
+
+
+def _await_dump(proc: subprocess.Popen) -> None:
+    """End the session JVM (it exits when its stdin closes) and wait
+    while it writes the archive. The context is stopped first: a JVM
+    that exits under a live context breaks the accumulator server's
+    connection, and its thread prints an EOFError traceback."""
+    if proc.poll() is not None:
+        return
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.stop()
+    with contextlib.suppress(OSError):
+        proc.stdin.close()
+    try:
+        proc.wait(_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
 
 
 def _use_worker_launcher(sc: SparkContext) -> None:
