@@ -39,7 +39,8 @@ configuration:
   archive); not by `JAVA_TOOL_OPTIONS`, which may carry per-run paths.
   With no archive the session dumps to `<key>.<unique>.tmp`
   (`-XX:ArchiveClassesAtExit`), records its JVM beside it and waits
-  for that JVM at interpreter exit. A later session publishes the
+  for that JVM at interpreter exit; while another session's dump
+  still runs, the start is stock. A later session publishes the
   temp file (`os.replace`) only once its writer is gone and
   `java -Xshare:on -XX:SharedArchiveFile=<tmp> -version` on the
   recorded classpath exits 0, and deletes it otherwise: a garbage file
@@ -208,10 +209,12 @@ def _archive_launch(master: str, heap: str) -> _Archive | None:
         archive = os.path.join(cache, f"{key}.jsa")
         with open(os.path.join(cache, "lock"), "w") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
-            _settle_dumps(cache, key, archive)
+            busy = _settle_dumps(cache, key, archive)
             if os.path.exists(archive):
                 return _Archive(
                     f"-XX:SharedArchiveFile={archive} {_QUIET}", conf, None)
+            if busy:  # a second dump would run slower for the same file
+                return None
             stem = os.path.join(cache, f"{key}.{uuid.uuid4().hex[:12]}")
             _write_record(f"{stem}.json",
                           {"pid": os.getpid(), "java": java, "heap": heap})
@@ -237,14 +240,16 @@ def _archive_key(java: str, spark_home: str, heap: str) -> str:
     return hashlib.sha1(text.encode()).hexdigest()[:16]
 
 
-def _settle_dumps(cache: str, key: str, archive: str) -> None:
+def _settle_dumps(cache: str, key: str, archive: str) -> bool:
     """Publish as `archive` each temp file of `key` whose writer is gone
-    and that passes the probe; delete the others. Runs under the cache
-    lock."""
+    and that passes the probe; delete the others. Returns whether a
+    writer still runs. Runs under the cache lock."""
+    busy = False
     for record in glob.glob(os.path.join(glob.escape(cache),
                                          f"{key}.*.json")):
         writer = _read_record(record)
         if _alive(writer.get("pid")):
+            busy = True
             continue
         tmp = record[:-len(".json")] + ".tmp"
         if os.path.exists(tmp):
@@ -253,6 +258,7 @@ def _settle_dumps(cache: str, key: str, archive: str) -> None:
             else:
                 os.remove(tmp)
         os.remove(record)
+    return busy
 
 
 def _probe(tmp: str, writer: dict) -> bool:
