@@ -479,6 +479,8 @@ def decode_gif_indices(
                 off += 1 + ln
             idx = np.frombuffer(
                 _lzw_decode(bytes(data), mcs, iw * ih), dtype=np.uint8)
+            if idx.size == 0:  # a 0-pixel image, or EOI right after CLEAR
+                raise ValueError("GIF image without pixels")
             if int(idx.max(initial=0)) >= palette.shape[0]:
                 raise ValueError("GIF index beyond palette")
             return int(w), int(h), int(iw), int(ih), idx, palette

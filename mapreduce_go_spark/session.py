@@ -24,14 +24,15 @@ configuration:
   `pyspark.__version__ == spark.version`; otherwise workers are stock.
 - A new JVM on a `local` master starts from a JDK dynamic AppCDS
   archive: Spark's classes are mapped instead of loaded and linked
-  (session start 7.5-8.6 s -> 4.1-4.4 s on 4 cores). Guard: no JVM yet
-  (`SparkContext._gateway is None`, no `PYSPARK_GATEWAY_PORT`), the
-  default `PYSPARK_SUBMIT_ARGS`, no env var that adds to spark-class's
-  classpath, and a conf dir holding only `*.template` files; the
-  launch then points `SPARK_CONF_DIR` at an empty dir at a stable path
-  in the cache, because the JDK will not dump with a non-empty
-  directory on the classpath and checks the runtime classpath against
-  the dump's. Otherwise the start is stock. The archive is
+  (perfbench `setup_s` median 8.8-9.0 s -> 4.8-4.9 s on 4 cores). Guard:
+  no JVM yet (`SparkContext._gateway is None`, no
+  `PYSPARK_GATEWAY_PORT`), the default `PYSPARK_SUBMIT_ARGS`, no env var
+  that adds to spark-class's classpath, and a conf dir holding only
+  `*.template` files; the launch then points `SPARK_CONF_DIR` at an
+  empty dir at a stable path in the cache, because the JDK will not
+  dump with a non-empty directory on the classpath and checks the
+  runtime classpath against the dump's. Otherwise the start is stock.
+  The archive is
   `${XDG_CACHE_HOME:-~/.cache}/mapreduce_go_spark/cds/<key>.jsa`, keyed
   without a subprocess by the `java` spark-class runs (its `libjvm.so`
   size and mtime), the Spark version, the `$SPARK_HOME/jars` listing

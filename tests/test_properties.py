@@ -5,7 +5,7 @@ probe beyond the fixture distribution."""
 import re
 from collections import Counter
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from mapreduce_go_spark import runner
@@ -508,6 +508,7 @@ def test_jpeg_decoder_total_on_garbage(junk, seed):
 
 @given(st.integers(0, 2**31 - 1))
 @settings(max_examples=25, deadline=None)
+@example(seed=20655)  # a corrupt GIF that decoded to 0 pixels
 def test_all_codec_parsers_total(seed):
     """Every from-scratch parser is TOTAL: truncations, byte
     corruptions and pure garbage either parse or raise ValueError —
