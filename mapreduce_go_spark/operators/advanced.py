@@ -497,8 +497,7 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank_fixed(spark: SparkSession, sf_dir: str,
-                   iters: int = PR_ITERS,
-                   persist_each_round: bool = False) -> DataFrame:
+                   iters: int = PR_ITERS) -> DataFrame:
     """Exact fixed-point PageRank over the part/supplier graph:
     `iters` synchronous iterations of
     rank'(v) = base + sum_{u->v} (85 * rank(u)) div (100 * outdeg(u)),
@@ -509,42 +508,20 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str,
     Every quantity is an exact int: the oracle value-checks all
     PR_ITERS iterations bit-for-bit.
 
-    `persist_each_round=True` is the bounded-plan iteration mode:
-    edges/outdeg are persisted once and each iteration's ranks are
-    localCheckpoint'ed, so plan depth stays O(1) in `iters` (the
-    default lazy unroll grows one join+agg layer per iteration;
-    tests/test_fixpoint.py pins the bounded depth). Measured
-    crossover at sf0.1/local[32]: lazy 3.6 s vs persisted 6.4 s at
-    iters=5 — the single fused plan wins while the unroll is
-    shallow (linear here, unlike cluster_labels' doubling), so lazy
-    stays the default; persist before raising iters past ~20, where
-    per-action re-analysis of the stack and O(iters) recomputation
-    of the edge relation overtake the per-round materialization.
-    (Also measured: .cache() on edges/outdeg inside the LAZY plan is
-    ~2x WORSE at sf0.1 — 3.8 -> 8.3 s warm — the single plan already
-    reuses the edge exchange, and InMemoryRelation scans cost more
-    than the re-run. Don't add it back.)
-
-    Re-measured r17 (VERDICT r16 item 4) on this tree, interleaved
-    min-of-4 in one session, all variants value-identical: lazy
-    4.11 s; ranks-only localCheckpoint(eager=False) every 2nd
-    iteration 7.31 s; the same plus lazily checkpointed edges/outdeg
-    6.19 s; persist_each_round=True 7.21 s. Every checkpoint boundary
-    splits the single plan into segments that can no longer share the
-    edges Exchange (ReusedExchange is per-plan), so each segment
-    re-derives it — the lazy unroll stays the measured default at
-    iters=5."""
+    The plan is one lazy unroll, one join+agg layer per iteration
+    (linear, unlike cluster_labels' doubling). Checkpointing the ranks
+    every round measured slower at iters=5 (sf0.1, interleaved
+    min-of-4: lazy 4.11 s vs 7.21 s): each checkpoint boundary splits
+    the plan into segments that cannot share the edges Exchange
+    (ReusedExchange is per-plan), so each segment re-derives it.
+    .cache() on edges/outdeg inside the lazy plan measured ~2x worse
+    too (3.8 -> 8.3 s warm at sf0.1)."""
     edges = _pagerank_edges(spark, sf_dir)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # graph size as a broadcast singleton (the quality.py scalars
     # pattern) — no driver-side action, the query stays one lazy plan
     nscal = F.broadcast(nodes.agg(F.count("*").alias("n")))
-    if persist_each_round:
-        # reused every round: compute the edge relation once, not
-        # iters times (lineage behind them is also cut from the loop)
-        edges = edges.localCheckpoint()
-        outdeg = outdeg.localCheckpoint()
     ranks = nodes.crossJoin(nscal).selectExpr(
         "node", f"{PR_SCALE} div n AS r")
     for _ in range(iters):
@@ -564,8 +541,6 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str,
                 "node",
                 f"(15 * {PR_SCALE}) div ({PR_D_DEN} * n) + csum AS r")
         )
-        if persist_each_round:
-            ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("r").cast("long").alias("rank_fp"))
 
 

@@ -25,7 +25,7 @@ generalizes that "build a set, collapse duplicates" move.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
@@ -360,47 +360,57 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sig_long(_minhash_sig(spark, sf_dir))
 
 
-def _bucket_pairs(bands: DataFrame, cap: int | None = None) -> DataFrame:
-    """Expand each LSH bucket into its doc pairs WITHOUT a self-join:
-    one groupBy collects the bucket's (sorted) doc list, then
-    posexplode + slice emits the upper triangle. A self-join here
-    computes the whole signature pipeline twice (Spark can't reuse
-    the exchange once one side broadcasts — measured 4 parquet scans);
-    this shape computes it once and adds a single shuffle on the
-    bucket key. With `cap`, over-cap buckets are dropped with a
-    window count BEFORE collect_list (the banded_hamming_pairs r7
-    discipline): a degenerate bucket's rows never enter an array, so
-    no reducer ever materializes a bucket-sized list — the window
-    and the groupBy share the bucket-key exchange, so the guard
-    costs no extra shuffle."""
-    w = Window.partitionBy("band", "band_key")
+def bucket_pairs(rows: DataFrame, keys: list[str], item: Column,
+                 cap: int | None) -> DataFrame:
+    """(x, y) rows: the upper triangle of every bucket of `rows` that
+    shares `keys`, over the bucket's `item` values sorted ascending,
+    so x < y. The one pair expander of the near-dup family (LSH and
+    simhash bands, winnowing fingerprints, media fingerprint bands);
+    each caller applies its own verify step to the pairs.
+
+    No self-join: one groupBy collects the bucket's sorted list and
+    posexplode + slice emits the triangle, so the signature pipeline
+    upstream runs once (a bucket-key self-join computed it twice —
+    Spark can't reuse the exchange once one side broadcasts; measured
+    4 parquet scans, and 4.1 s vs 3.1 s for simhash at sf0.1).
+
+    Cap before collect: a window count on `keys` keeps buckets of
+    2..`cap` members (`cap=None`: any size from 2 up, for the uncapped
+    recall anchors) BEFORE collect_list. A bucket of B members emits
+    B(B-1)/2 pairs, so one boilerplate bucket at corpus scale goes
+    quadratic; with the guard its rows never enter an array and no
+    reducer materializes a bucket-sized list. The window and the
+    groupBy hash-partition on the same key, so the guard costs no
+    extra exchange (tests/test_plans.py pins the Exchange counts)."""
     cond = F.col("_bn") >= 2
     if cap is not None:
         cond = cond & (F.col("_bn") <= cap)
-    pre = (bands.withColumn("_bn", F.count("*").over(w))
+    pre = (rows.withColumn("_bn", F.count("*").over(Window.partitionBy(*keys)))
            .where(cond).drop("_bn"))
-    b = pre.groupBy("band", "band_key").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds"))
+    b = pre.groupBy(*keys).agg(F.sort_array(F.collect_list(item)).alias("ds"))
     return (
-        b
-        .select(F.posexplode("ds").alias("i", "d1"), "ds")
-        .select(
-            "d1",
-            F.explode(
-                F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))
-            ).alias("d2"),
-        )
-        .distinct()
+        b.select(F.posexplode("ds").alias("i", "x"), "ds")
+        .select("x", F.explode(
+            F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
     )
+
+
+def _lsh_pairs(bands: DataFrame, cap: int | None) -> DataFrame:
+    """Distinct (d1, d2) doc pairs sharing an LSH bucket of a
+    (doc_id, band, band_key) relation; a pair that collides in k
+    bands surfaces k times before the distinct."""
+    return (bucket_pairs(bands, ["band", "band_key"], F.col("doc_id"), cap)
+            .select(F.col("x").alias("d1"), F.col("y").alias("d2"))
+            .distinct())
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs: 12 permutations, 4 bands x 3 rows;
     docs collide when a band's minhashes all agree. Band keys are
     hashed straight off the wide signature row (no unpivot/regroup
-    round-trip); pair generation is bucket-local (see _bucket_pairs);
+    round-trip); pair generation is bucket-local (see bucket_pairs);
     candidates get exact-verified by ngram_jaccard_pairs downstream."""
-    return _bucket_pairs(_lsh_bands(spark, sf_dir))
+    return _lsh_pairs(_lsh_bands(spark, sf_dir), None)
 
 
 # Max docs per LSH bucket before the bucket is declared degenerate
@@ -445,9 +455,9 @@ def dedup_minhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs are dropped BEFORE the self-join — the quadratic blowup never
     materializes; the docs in a dropped bucket still pair through
     their other bands, and exact duplicates are dedup_exact's job.
-    The cap is the collected bucket array's length — it rides the
-    same single shuffle pair generation already needs."""
-    return _bucket_pairs(_lsh_bands(spark, sf_dir), LSH_BUCKET_CAP)
+    The cap is bucket_pairs' window count — it rides the bucket-key
+    shuffle pair generation already needs."""
+    return _lsh_pairs(_lsh_bands(spark, sf_dir), LSH_BUCKET_CAP)
 
 
 def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,7 +502,7 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(N_MINHASH)
     ]
     wide = hashed.groupBy("doc_id").agg(*aggs)
-    cands = _bucket_pairs(_lsh_bands_df(wide), LSH_BUCKET_CAP)
+    cands = _lsh_pairs(_lsh_bands_df(wide), LSH_BUCKET_CAP)
     sizes = sets.select("doc_id", "n_sh")
     a = sh.select(F.col("doc_id").alias("d1"), "shingle")
     b = sh.select(F.col("doc_id").alias("d2"), "shingle")
@@ -509,7 +519,7 @@ def _dup_doc_ids(bands: DataFrame, cap: int | None = None) -> DataFrame:
     """Doc ids that collide with an EARLIER doc (lower doc_id) in some
     LSH bucket — the min-per-bucket probe, NOT pair expansion: a rank
     within the bucket answers "is there an earlier doc here?" in O(B)
-    per bucket, where _bucket_pairs would generate B(B-1)/2 rows for
+    per bucket, where bucket_pairs would generate B(B-1)/2 rows for
     the same verdict. One window over the bucket key (a single
     exchange, signature pipeline computed once — the groupBy+join form
     its streaming twin uses computes the lineage twice; the stream
@@ -524,13 +534,18 @@ def _dup_doc_ids(bands: DataFrame, cap: int | None = None) -> DataFrame:
     cond = F.col("rn") >= 2
     if cap is not None:
         cond = cond & (F.col("rn") <= cap + 1)
-    return ranked.where(cond).select("doc_id").distinct()
+    return ranked.where(cond).select("doc_id")
 
 
-def _flags_from_dups(docs: DataFrame, dups: DataFrame) -> DataFrame:
+def flag_dups(docs: DataFrame, dup_ids: DataFrame) -> DataFrame:
+    """(doc_id, dup) for every doc of `docs`: dup iff its doc_id is in
+    `dup_ids` (repeats allowed — the distinct is taken here). The one
+    flag join of the arrival-order verdicts: the LSH and pHash batch
+    anchors and their streaming epochs."""
     return (
         docs.select("doc_id")
-        .join(dups.withColumn("dup", F.lit(True)), "doc_id", "left")
+        .join(dup_ids.distinct().withColumn("dup", F.lit(True)),
+              "doc_id", "left")
         .fillna(False, subset=["dup"])
     )
 
@@ -546,7 +561,7 @@ def neardup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle here value-checks the relation itself."""
     docs = tables.load(spark, sf_dir, "documents")
     dups = _dup_doc_ids(_lsh_bands(spark, sf_dir))
-    return _flags_from_dups(docs, dups)
+    return flag_dups(docs, dups)
 
 
 def neardup_flags_capped_df(docs: DataFrame,
@@ -556,7 +571,7 @@ def neardup_flags_capped_df(docs: DataFrame,
     inert. tests/test_streaming.py proves the capped streaming flags
     equal this relation under doc_id-ordered arrival."""
     dups = _dup_doc_ids(_lsh_bands_df(_minhash_sig_df(docs)), cap)
-    return _flags_from_dups(docs, dups)
+    return flag_dups(docs, dups)
 
 
 def neardup_flags_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,7 +594,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sets are too large to re-intersect; ngram_jaccard_pairs
     is the exact twin to calibrate against."""
     wide = _minhash_sig(spark, sf_dir)
-    pairs = _bucket_pairs(_lsh_bands(spark, sf_dir))
+    pairs = _lsh_pairs(_lsh_bands(spark, sf_dir), None)
     a = wide.select(F.col("doc_id").alias("d1"),
                     *[F.col(f"mh{i}").alias(f"a{i}")
                       for i in range(N_MINHASH)])
@@ -669,18 +684,11 @@ HAMMING_MAX = 8
 SIMHASH_BUCKET_CAP = 8
 
 
-def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
+def _simhash_pairs(sig: DataFrame, cap: int | None) -> DataFrame:
     """Banded simhash near-dup pairs over a (doc_id, simhash)
-    signature table. Pair generation is bucket-local (collect the
-    bucket, posexplode the upper triangle) like _bucket_pairs — a
-    band_key SELF-JOIN computed the entire simhash pipeline twice
-    (measured 4.1 s vs 3.1 s at sf0.1); this shape computes it once.
-    sort_array on the (doc_id, simhash) structs orders by doc_id, so
-    d1 < d2 falls out of the triangle. With `cap`, over-cap buckets
-    are dropped with a window count BEFORE collect_list (the
-    banded_hamming_pairs discipline — no reducer materializes a
-    degenerate bucket's array; window and groupBy share the
-    band_key exchange)."""
+    signature table: bucket_pairs on the band key (sort_array on the
+    (doc_id, simhash) structs orders by doc_id, so d1 < d2 falls out
+    of the triangle), then the exact hamming filter."""
     bands = sig.select(
         "doc_id",
         "simhash",
@@ -695,28 +703,10 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
             ])
         ).alias("band_key"),
     )
-    wb = Window.partitionBy("band_key")
-    cond = F.col("_bn") >= 2
-    if cap is not None:
-        cond = cond & (F.col("_bn") <= cap)
-    pre = (bands.withColumn("_bn", F.count("*").over(wb))
-           .where(cond).drop("_bn"))
-    buckets = pre.groupBy("band_key").agg(
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "simhash"))).alias("ds"))
-    cands = (
-        buckets
-        .select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select(
-            "x",
-            F.explode(
-                F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))
-            ).alias("y"),
-        )
-        .select(
-            F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"),
-            F.col("x.simhash").alias("s1"), F.col("y.simhash").alias("s2"),
-        )
+    cands = bucket_pairs(bands, ["band_key"],
+                         F.struct("doc_id", "simhash"), cap).select(
+        F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"),
+        F.col("x.simhash").alias("s1"), F.col("y.simhash").alias("s2"),
     )
     # hamming via codegen bit arithmetic, not an interpreted per-char
     # lambda (64 zip_with evals per candidate pair dominated the
@@ -753,7 +743,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     |docs| x bands; the hamming check runs on candidates only. See
     _simhash_pairs for the plan shape; the capped sibling is the
     production form at corpus scale."""
-    return _simhash_pairs(simhash(spark, sf_dir))
+    return _simhash_pairs(simhash(spark, sf_dir), None)
 
 
 def simhash_neardup_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,9 +751,8 @@ def simhash_neardup_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than SIMHASH_BUCKET_CAP docs are degenerate (boilerplate/
     near-identical text concentrating on one band value — the sf0.1
     fixture already grows a 291-doc bucket) and are dropped BEFORE
-    any pair exists, exactly the dedup_minhash_pairs_capped
-    discipline. Docs in a dropped bucket still pair through their
-    other three bands."""
+    any pair exists (bucket_pairs' cap). Docs in a dropped bucket
+    still pair through their other three bands."""
     return _simhash_pairs(simhash(spark, sf_dir), SIMHASH_BUCKET_CAP)
 
 
@@ -852,8 +841,8 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
 
 
 # fps held by more docs than this are boilerplate and dropped before
-# pair expansion (same discipline as LSH_BUCKET_CAP); pairs must then
-# share at least WINNOW_MIN_SHARED distinct fingerprints.
+# pair expansion (bucket_pairs' cap); pairs must then share at least
+# WINNOW_MIN_SHARED distinct fingerprints.
 WINNOW_FP_CAP = 8
 WINNOW_MIN_SHARED = 3
 
@@ -862,30 +851,13 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs sharing >= WINNOW_MIN_SHARED distinct winnowed
     fingerprints — the MOSS overlap report. Fingerprints held by more
     than WINNOW_FP_CAP docs are dropped as boilerplate BEFORE any pair
-    exists — enforced with a window count BEFORE collect_list (the
-    banded_hamming_pairs discipline: a boilerplate fingerprint's rows
-    never enter an array; window and groupBy share the fp
-    exchange)."""
+    exists (bucket_pairs on the fingerprint)."""
     fps = winnow_fingerprints(spark, sf_dir).select(
         "doc_id", "fp").distinct()
-    wf = Window.partitionBy("fp")
-    pre = (fps.withColumn("_bn", F.count("*").over(wf))
-           .where((F.col("_bn") >= 2) & (F.col("_bn") <= WINNOW_FP_CAP))
-           .drop("_bn"))
-    buckets = pre.groupBy("fp").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    pairs = (
-        buckets
-        .select(F.posexplode("ds").alias("i", "d1"), "ds")
-        .select(
-            "d1",
-            F.explode(
-                F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))
-            ).alias("d2"),
-        )
-    )
+    pairs = bucket_pairs(fps, ["fp"], F.col("doc_id"), WINNOW_FP_CAP)
     return (
-        pairs.groupBy("d1", "d2")
+        pairs.select(F.col("x").alias("d1"), F.col("y").alias("d2"))
+        .groupBy("d1", "d2")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= WINNOW_MIN_SHARED)
     )
@@ -1183,8 +1155,7 @@ CLUSTER_MAX_ROUNDS = 49
 
 
 def cluster_labels(spark: SparkSession, sf_dir: str,
-                   pairs: DataFrame | None = None,
-                   persist_each_round: bool = True) -> DataFrame:
+                   pairs: DataFrame | None = None) -> DataFrame:
     """(doc_id, label): connected-component label (minimum reachable
     doc_id — the keeper) over the near-dup graph. The default edge
     source is neardup_edges (the capped-LSH-verified production
@@ -1203,18 +1174,15 @@ def cluster_labels(spark: SparkSession, sf_dir: str,
     only; all data work is shuffled joins/aggregates. Singletons are
     stitched back at the end with one left join (label = own id).
 
-    `persist_each_round=True` (the DEFAULT — it is both safer and
-    measured faster, 1.27 s vs 1.76 s at sf0.1): each round's labels
-    are localCheckpoint'ed (materialized + lineage truncated), so
-    the logical plan stays O(1) deep no matter how many rounds run.
-    Without it the plan tree DOUBLES per round — `labels` is
-    referenced twice (neighbor join + min combine) — and a
-    9-round-diameter graph OOM'ed the JVM at plan-STRING generation
-    before any data moved (tests/test_fixpoint.py). The per-round
-    `count()` action is inherent either way — it IS the convergence
-    check — so the checkpoint adds only block-store writes the cache
-    was already paying for. Lazy mode remains available for
-    single-plan inspection on shallow graphs.
+    Each round's labels are localCheckpoint'ed (materialized, lineage
+    truncated), so the logical plan stays O(1) deep however many
+    rounds run. Unrolled lazily the plan tree DOUBLES per round —
+    `labels` is referenced twice (neighbor join + min combine) — and
+    a 9-round-diameter graph OOM'ed the JVM at plan-STRING generation
+    before any data moved; the lazy form was also slower (1.76 s vs
+    1.27 s at sf0.1). The per-round `count()` action IS the
+    convergence check, so the checkpoint adds only block-store writes
+    a cache would pay for too (tests/test_fixpoint.py pins the depth).
     """
     docs = tables.load(spark, sf_dir, "documents").select("doc_id")
     if pairs is None:
@@ -1246,12 +1214,10 @@ def cluster_labels(spark: SparkSession, sf_dir: str,
         .select(F.col("d1").alias("doc_id"), "label")
         .cache()
     )
-    # handle to the round's CACHED frame: unpersist() only removes
-    # entries whose plan sameResults the receiver, so calling it on
-    # the derived select('doc_id','label') was a silent no-op from
-    # round 2 on — one leaked MEMORY_AND_DISK label relation per
-    # round per call until session end (r14 review)
-    prev_cached = labels
+    # unpersist() matches cache entries by plan, so it must be called
+    # on the cached frame itself, not on a select derived from it;
+    # released as soon as the first checkpointed round has read it
+    round1 = labels
     converged = False
     # Diameter bound: label propagation needs O(graph diameter)
     # rounds; near-dup clusters are tiny (2-3) but a pathological
@@ -1276,22 +1242,15 @@ def cluster_labels(spark: SparkSession, sf_dir: str,
                 (F.col("nbr_label") < F.col("label")).alias("chg"),
             )
         )
-        if persist_each_round:
-            # materialize + truncate lineage: the plan below this
-            # point starts from the checkpointed rows, not from
-            # `rounds` stacked joins. No .cache() underneath — reads
-            # go through the checkpoint RDD, so a pre-checkpoint
-            # cache entry would be pure leaked storage (r14 review).
-            new_labels = new_labels.localCheckpoint()
-            new_cached = None
-        else:
-            new_labels = new_labels.cache()
-            new_cached = new_labels
+        # materialize + truncate lineage: the plan below this point
+        # starts from the checkpointed rows, not from stacked joins.
+        # No .cache() underneath — reads go through the checkpoint
+        # RDD, so a cache entry would be pure leaked storage.
+        new_labels = new_labels.localCheckpoint()
         changed = new_labels.where("chg").limit(1).count()
-        # ^ materializes new_labels, so the old round's cache can go
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = new_cached
+        if round1 is not None:
+            round1.unpersist()
+            round1 = None
         labels = new_labels.select("doc_id", "label")
         if changed == 0:
             converged = True

@@ -39,12 +39,13 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from mapreduce_go_spark import tables
+from mapreduce_go_spark.operators.dedup import bucket_pairs, flag_dups
 
 
 def multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1304,39 +1305,13 @@ def banded_hamming_pairs(bands: DataFrame, cap: int,
                          ham_max: int) -> DataFrame:
     """Shared fingerprint-pair machinery (image pHash, audio
     fingerprint, video pHash): (doc_id, band_no, band_val, b0..b3)
-    rows -> bucket-local pair expansion with the degenerate-bucket
-    cap applied BEFORE any pair exists (dedup.py _bucket_pairs
-    discipline: no self-join, the fingerprint pipeline runs ONCE)
-    -> exact hamming via bit_count over the four 16-bit words ->
-    (d1, d2, hamming <= ham_max).
-
-    The cap is enforced by a WINDOW COUNT on the bucket key BEFORE
-    collect_list — over-cap rows never enter the array, so the
-    per-bucket state is bounded by `cap` even for a degenerate
-    bucket (all-black images, silence clips) holding millions of
-    docs; a post-hoc size filter on the collected array would have
-    materialized the whole bucket in one reducer first. The window
-    and the groupBy hash-partition on the same key, so the guard
-    costs no extra exchange."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_no", "band_val")
-    capped = (
-        bands.withColumn("_bn", F.count("*").over(w))
-        .where((F.col("_bn") >= 2) & (F.col("_bn") <= cap))
-        .drop("_bn")
-    )
-    buckets = (
-        capped.groupBy("band_no", "band_val")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("doc_id", "b0", "b1", "b2", "b3"))
-        ).alias("ds"))
-    )
+    rows -> dedup.bucket_pairs on the band bucket, capped at `cap`
+    (a degenerate bucket — all-black images, silence clips — never
+    enters an array) -> exact hamming via bit_count over the four
+    16-bit words -> (d1, d2, hamming <= ham_max)."""
     cand = (
-        buckets
-        .select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select("x", F.explode(
-            F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
+        bucket_pairs(bands, ["band_no", "band_val"],
+                     F.struct("doc_id", "b0", "b1", "b2", "b3"), cap)
         .select(F.col("x.doc_id").alias("d1"),
                 F.col("y.doc_id").alias("d2"),
                 *[F.col(f"x.b{i}").alias(f"a{i}") for i in range(4)],
@@ -1357,8 +1332,8 @@ def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     together perceptually). Pipeline: real PNG round-trip -> 8x8
     integer average-hash -> 4x16-bit LSH bands -> bucket-local pair
     expansion with the degenerate-bucket cap applied BEFORE any pair
-    exists (the dedup.py _bucket_pairs discipline: no self-join, the
-    hash pipeline runs ONCE) -> exact hamming verify via bit_count.
+    exists (dedup.bucket_pairs: no self-join, the hash pipeline runs
+    ONCE) -> exact hamming verify via bit_count.
     At 100 TB this is the linear-shuffle shape: |docs| x 4 band rows
     exchange, pairs only materialize inside under-cap buckets.
     Reads the pre-encoded PNG corpus (media.media_table — the
@@ -1384,24 +1359,17 @@ def phash_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay-idempotence of the streaming twin are proven in
     tests/test_streaming.py.
 
-    Scale shape (the bounded-holder join; the streaming twin,
-    streaming.jobs._phash_epoch, keeps the same at-most-CAP holders
-    per bucket in its index): rank band rows
-    per bucket with a window, keep only rk <= PHASH_BAND_CAP as the
-    HOLDER relation — at most CAP rows per bucket, so the holder
-    side is O(buckets * CAP) regardless of skew — then equi-join
-    every band row (the flag targets) against it on the bucket key.
-    A degenerate bucket of N members costs N * CAP join rows,
-    linear in N; no node ever materializes a bucket-sized array
-    (there is NO collect_list anywhere in this plan — pinned by
-    tests/test_plans.py). The band relation is persisted so the
-    decode+hash kernel runs ONCE and both join sides read the
-    cached rows (InMemoryTableScan x2 in the plan) — band rows are
-    |docs| x 4 small fixed-width rows, MEMORY_AND_DISK spills
-    cleanly at corpus scale; a petabyte run would write them to a
-    temp parquet instead, same shape. Reads the pre-encoded PNG
-    corpus (media.media_table ingest boundary; decode+hash-only
-    kernel)."""
+    Scale shape: rank band rows per bucket with a window; the first
+    PHASH_BAND_CAP are the bucket's holders (the streaming twin,
+    streaming.jobs._phash_epoch, keeps the same holders in its index)
+    and holder_dups probes every band row against them. The band
+    relation is persisted so the decode+hash kernel runs ONCE and
+    both join sides read the cached rows (InMemoryTableScan x2 in the
+    plan) — band rows are |docs| x 4 small fixed-width rows,
+    MEMORY_AND_DISK spills cleanly at corpus scale; a petabyte run
+    would write them to a temp parquet instead, same shape. Reads the
+    pre-encoded PNG corpus (media.media_table ingest boundary;
+    decode+hash-only kernel)."""
     from pyspark.sql import Window
 
     from mapreduce_go_spark import media
@@ -1411,27 +1379,37 @@ def phash_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = imgs.mapInPandas(_phash_band_batches_png,
                              PHASH_BANDS_SCHEMA).persist()
     w = Window.partitionBy("band_no", "band_val").orderBy("doc_id")
-    holders = (
-        bands.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= PHASH_BAND_CAP)
-        .select("band_no", "band_val",
-                F.col("doc_id").alias("h_doc"),
-                *[F.col(f"b{i}").alias(f"h{i}") for i in range(4)])
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
-        for i in range(4))
-    flagged = (
-        bands.join(holders, ["band_no", "band_val"])
+    holders = (bands.withColumn("rk", F.row_number().over(w))
+               .where(F.col("rk") <= PHASH_BAND_CAP))
+    return flag_dups(imgs, holder_dups(bands, holders))
+
+
+def holder_hamming() -> Column:
+    """Hamming distance between a band row's hash (b0..b3) and a
+    holder's (h0..h3)."""
+    return sum(F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
+               for i in range(4))
+
+
+def holder_dups(bands: DataFrame, holders: DataFrame) -> DataFrame:
+    """doc_id of every `bands` row whose bucket (band_no, band_val)
+    holds an EARLIER doc (lower doc_id) of `holders` within
+    PHASH_HAM_MAX — the bounded-holder probe of phash_dup_flags and
+    the in-batch half of its streaming epoch. `holders` are band rows
+    of at most PHASH_BAND_CAP docs per bucket (the bucket's first
+    holders), so the holder side is O(buckets * CAP) whatever the
+    skew: a bucket of N members costs N * CAP join rows, and no node
+    collects a bucket into an array (tests/test_plans.py pins the
+    absent collect_list). Repeats are left to dedup.flag_dups."""
+    h = holders.select("band_no", "band_val",
+                       F.col("doc_id").alias("h_doc"),
+                       *[F.col(f"b{i}").alias(f"h{i}") for i in range(4)])
+    return (
+        bands.join(h, ["band_no", "band_val"])
         .where((F.col("h_doc") < F.col("doc_id"))
-               & (hamming <= PHASH_HAM_MAX))
+               & (holder_hamming() <= PHASH_HAM_MAX))
         .select("doc_id")
-        .distinct()
     )
-    return (imgs.select("doc_id")
-            .join(flagged.withColumn("dup", F.lit(True)),
-                  "doc_id", "left")
-            .fillna(False, subset=["dup"]))
 
 
 def _phash_common_cte() -> str:

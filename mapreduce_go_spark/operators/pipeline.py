@@ -561,8 +561,7 @@ DSIR_TARGET_LANG = "en"  # target distribution: the English slice
 DSIR_KEEP = 100          # documents selected
 
 
-def dsir_importance_sample(spark: SparkSession, sf_dir: str,
-                           checkpoint_per_doc: bool = True) -> DataFrame:
+def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
     document by its hashed-n-gram importance under a target
@@ -594,7 +593,21 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str,
     threshold; the flag is a map-side comparison reproducing the
     rank's (weight DESC, doc_id ASC) tie-break exactly
     (tests/test_plans.py pins the TakeOrderedAndProject + no-Window
-    shape)."""
+    shape).
+
+    The per-doc weights are materialized once (lazy checkpoint — the
+    kth TakeOrdered action computes it): both the K-th-threshold probe
+    and the final flag projection consume them, and under the lazy
+    DAG each re-ran the whole tokenize+score lineage (12 parquet scans
+    in the before-plan). One narrow row per document; measured 2.38 ->
+    1.86 s at sf0.1 (interleaved min-of-4), value-identical."""
+    return _dsir_select(
+        _dsir_per_doc(spark, sf_dir).localCheckpoint(eager=False))
+
+
+def _dsir_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_tokens, logw_micro): each document's DSIR importance
+    on the 1e-6 grid."""
     from mapreduce_go_spark.functions.num import grid
 
     docs = tables.load(spark, sf_dir, "documents")
@@ -635,27 +648,17 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str,
     )
     ratio = (dist.crossJoin(F.broadcast(tot))
              .select("b", logratio.alias("g")))
-    per_doc = (
+    return (
         tb.join(F.broadcast(ratio), "b")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_tokens"),
              F.sum("g").alias("logw_micro"))
     )
-    if checkpoint_per_doc:
-        # r16: materialize the per-doc weights once (lazy checkpoint —
-        # the kth TakeOrdered action below computes it). Both the
-        # K-th-threshold probe and the final flag projection consume
-        # per_doc; under the lazy DAG each re-ran the whole
-        # tokenize+score lineage (12 parquet scans in the before-
-        # plan). One narrow row per document — exactly the guide §8
-        # "decide on the small table" materialization; measured
-        # 2.38 -> 1.86 s at sf0.1 (interleaved min-of-4), value-
-        # identical. The checkpoint replaces the scoring lineage with
-        # a Scan ExistingRDD in the FINAL plan, so the plan pins
-        # (broadcast scoring join, TakeOrdered, no Window) are
-        # asserted on the checkpoint_per_doc=False logical twin in
-        # tests/test_plans.py — same lineage object, same execution.
-        per_doc = per_doc.localCheckpoint(eager=False)
+
+
+def _dsir_select(per_doc: DataFrame) -> DataFrame:
+    """Every doc of `per_doc` flagged `selected` iff it ranks in the
+    top DSIR_KEEP by (weight DESC, doc_id ASC)."""
     kth = (
         per_doc.orderBy(F.col("logw_micro").desc(), "doc_id")
         .limit(DSIR_KEEP)

@@ -1071,13 +1071,13 @@ def embedding_neardup_pairs_blocked(
     recall floor.
 
     100 TB shape: signatures are one narrow pass over the table;
-    candidate pairs are generated bucket-locally (_bucket_pairs — one
-    groupBy + posexplode, NO self-join, so the signature pipeline runs
-    once) with over-cap buckets dropped BEFORE any pair exists; the
+    candidate pairs are generated bucket-locally (dedup.bucket_pairs —
+    one groupBy + posexplode, NO self-join, so the signature pipeline
+    runs once) with over-cap buckets dropped BEFORE any pair exists; the
     exact cosine touches candidate pairs only. Candidate semantics
     (banding union + cap) is part of the query definition and mirrored
     by the DuckDB oracle."""
-    from mapreduce_go_spark.operators.dedup import _bucket_pairs
+    from mapreduce_go_spark.operators.dedup import _lsh_pairs
 
     emb = _with_norm(tables.load(spark, sf_dir, "embeddings"))
     bands = emb.select(
@@ -1085,7 +1085,7 @@ def embedding_neardup_pairs_blocked(
         F.posexplode(_BAND_KEYS_ND(F.col("embedding")))
         .alias("band", "band_key"),
     ).select("doc_id", "band", "band_key")
-    cands = _bucket_pairs(bands, EMB_BUCKET_CAP)
+    cands = _lsh_pairs(bands, EMB_BUCKET_CAP)
     return _neardup(emb, lambda a, b: cands.join(a, "d1").join(b, "d2"))
 
 

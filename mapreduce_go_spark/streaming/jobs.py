@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dsum
-from mapreduce_go_spark.operators.dedup import LSH_BUCKET_CAP
+from mapreduce_go_spark.operators.dedup import LSH_BUCKET_CAP, flag_dups
 from mapreduce_go_spark.operators.streaming_batch import (
     SESSION_GAP, WATERMARK_MS, sliding_plan, tumbling_plan)
 
@@ -793,14 +793,6 @@ def _seen_probe(rows: DataFrame, hist: DataFrame | None, key: str,
             index)
 
 
-def _flag_dups(batch_df: DataFrame, dup_ids: DataFrame) -> DataFrame:
-    """(doc_id, dup) for every doc of the batch."""
-    return (batch_df.select("doc_id")
-            .join(dup_ids.distinct().withColumn("dup", F.lit(True)),
-                  "doc_id", "left")
-            .fillna(False, subset=["dup"]))
-
-
 def _read_latest(spark: SparkSession, index_dir: str) -> DataFrame:
     """The latest committed snapshot; an explicit FileNotFoundError
     when no epoch has committed yet, not an opaque PATH_NOT_FOUND on a
@@ -899,7 +891,7 @@ def _neardup_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str,
         index = _merged(batch_idx, hist, ["band", "band_key"],
                         F.min("first_doc").alias("first_doc"),
                         F.sum("n_docs").alias("n_docs"))
-        flags = _flag_dups(batch, joined.where(cond).select("doc_id"))
+        flags = flag_dups(batch, joined.where(cond).select("doc_id"))
         return index, flags, (bands,)
 
     _epoch_commit(batch_df, epoch_id, out_dir, step, flags_dir)
@@ -1222,7 +1214,7 @@ def _phash_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
     hamming verify. Index size is O(buckets * CAP), not O(docs)."""
     from mapreduce_go_spark.operators.multimodal import (
         PHASH_BAND_CAP, PHASH_BANDS_SCHEMA, PHASH_HAM_MAX,
-        _phash_band_batches)
+        _phash_band_batches, holder_dups, holder_hamming)
 
     def step(batch, hist):
         # persisted: the PNG decode kernel feeds three lineages (the
@@ -1248,28 +1240,20 @@ def _phash_epoch(batch_df: DataFrame, epoch_id: int, index_dir: str,
             .where(F.col("rk") <= PHASH_BAND_CAP)
             .select(*keys, "doc_id", *[f"b{i}" for i in range(4)], "rk")
         )
-        ham = sum(
-            F.bit_count(F.col(f"b{i}").bitwiseXOR(F.col(f"h{i}")))
-            for i in range(4))
-        holder_hashes = [F.col(f"b{i}").alias(f"h{i}") for i in range(4)]
-        # in-batch priors: the bounded-holder join of phash_dup_flags,
-        # at most CAP holder rows per bucket whatever its size
-        dups = (
-            bands.join(new_holders.select(
-                *keys, F.col("doc_id").alias("h_doc"), *holder_hashes),
-                keys)
-            .where((F.col("h_doc") < F.col("doc_id"))
-                   & (ham <= PHASH_HAM_MAX))
-            .select("doc_id")
-        )
+        # in-batch priors: the batch anchor's bounded-holder probe
+        dups = holder_dups(bands, new_holders)
         if hist is not None:
+            # stored holders arrived in earlier epochs, so every one
+            # is prior whatever its doc_id
+            stored = hist.select(*keys, *[F.col(f"b{i}").alias(f"h{i}")
+                                          for i in range(4)])
             dups = dups.union(
-                bands.join(hist.select(*keys, *holder_hashes), keys)
-                .where(ham <= PHASH_HAM_MAX)
+                bands.join(stored, keys)
+                .where(holder_hamming() <= PHASH_HAM_MAX)
                 .select("doc_id"))
         index = (new_holders if hist is None
                  else hist.unionByName(new_holders))
-        return index, _flag_dups(batch, dups), (bands,)
+        return index, flag_dups(batch, dups), (bands,)
 
     _epoch_commit(batch_df, epoch_id, index_dir, step, flags_dir)
 

@@ -96,34 +96,15 @@ def test_embedding_bucket_cap_exercised(spark, sf_dir):
     """EMB_BUCKET_CAP must actually drop >=1 over-cap bucket on the
     fixtures — otherwise the capped code path is vacuously green (the
     same discipline dedup's LSH_BUCKET_CAP calibration follows)."""
-    from mapreduce_go_spark.operators.dedup import _bucket_pairs
     from mapreduce_go_spark.operators import similarity as sim
     from mapreduce_go_spark import tables
     from pyspark.sql import functions as F
 
-    emb = sim._with_norm(tables.load(spark, sf_dir, "embeddings"))
-
-    def band_key(band):
-        bits = [
-            F.when(
-                sim._dot_dec(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(v))
-                              for v in sim._HP_ND[band * sim.ND_BITS + b]]),
-                ) > 0, "1").otherwise("0")
-            for b in range(sim.ND_BITS)
-        ]
-        return F.concat(*bits)
-
+    # the band keys embedding_neardup_pairs_blocked itself buckets on
+    emb = tables.load(spark, sf_dir, "embeddings")
     bands = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.explode(F.array(*[
-            F.struct(F.lit(band).alias("band"),
-                     band_key(band).alias("band_key"))
-            for band in range(sim.ND_BANDS)
-        ])).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"),
-             F.col("bk.band_key").alias("band_key"))
+        F.posexplode(sim._BAND_KEYS_ND(F.col("embedding")))
+        .alias("band", "band_key"))
     over = (bands.groupBy("band", "band_key").count()
             .where(F.col("count") > sim.EMB_BUCKET_CAP).count())
     assert over >= 1, "cap never exercised on fixtures — recalibrate"

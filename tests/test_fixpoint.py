@@ -1,10 +1,10 @@
-"""Persisted-iteration mode for the fixpoint plans (pagerank,
-cluster_labels): localCheckpoint per round must keep the logical plan
-O(1) deep as iteration count grows — the production mode before
-anyone raises PR_ITERS / cluster rounds at 100x — while returning the
-exact same rows as the lazy unroll."""
+"""cluster_labels' per-round localCheckpoint keeps the logical plan
+O(1) deep however many label-propagation rounds run — the lazy unroll
+referenced `labels` twice per round, so its plan tree doubled every
+round and a 9-round chain OOM'ed the JVM at plan-string generation —
+and the labels it returns are exact."""
 
-from mapreduce_go_spark.operators import advanced, dedup
+from mapreduce_go_spark.operators import dedup
 
 
 def _njoins(df) -> int:
@@ -13,49 +13,19 @@ def _njoins(df) -> int:
     return df._jdf.queryExecution().analyzed().toString().count("Join")
 
 
-def test_pagerank_persisted_plan_depth_bounded(spark, sf_dir):
-    lazy2 = advanced.pagerank_fixed(spark, sf_dir, iters=2)
-    lazy4 = advanced.pagerank_fixed(spark, sf_dir, iters=4)
-    assert _njoins(lazy4) > _njoins(lazy2)  # lazy unroll grows
-    p2 = advanced.pagerank_fixed(spark, sf_dir, iters=2,
-                                 persist_each_round=True)
-    p4 = advanced.pagerank_fixed(spark, sf_dir, iters=4,
-                                 persist_each_round=True)
-    assert _njoins(p2) == _njoins(p4) == 0  # O(1) in iters
-    # same exact integers as the lazy unroll
-    assert sorted(map(tuple, p2.collect())) == \
-        sorted(map(tuple, lazy2.collect()))
-
-
 def test_cluster_labels_persisted_plan_depth(spark, sf_dir):
-    """The lazy unroll references `labels` TWICE per round (neighbor
-    join + min combine), so its plan tree DOUBLES every round — a
-    first run of this test with a 10-chain (9 rounds, 2^9 subtree
-    copies) OOM'ed the JVM at plan-string generation. The lazy side
-    therefore uses a 4-round chain (enough to show the stacking);
-    only persisted mode gets the deep chain."""
-    # lazy vs persisted on a shallow chain: same rows, shallower plan
-    pairs4 = spark.createDataFrame(
-        [(i, i + 1) for i in range(4)], "d1 long, d2 long")
-    lazy = dedup.cluster_labels(spark, sf_dir, pairs=pairs4,
-                                persist_each_round=False)
-    pers = dedup.cluster_labels(spark, sf_dir, pairs=pairs4,
-                                persist_each_round=True)
-    n_lazy, n_pers = _njoins(lazy), _njoins(pers)
-    assert n_pers <= 2, n_pers          # final singleton stitch only
-    assert n_lazy > n_pers, (n_lazy, n_pers)
-    assert sorted(map(tuple, pers.collect())) == \
-        sorted(map(tuple, lazy.collect()))
-
-    # the deep chain the lazy unroll cannot survive: persisted mode
-    # stays O(1) deep through 9 propagation rounds
-    pairs10 = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "d1 long, d2 long")
-    deep = dedup.cluster_labels(spark, sf_dir, pairs=pairs10,
-                                persist_each_round=True)
-    assert _njoins(deep) <= 2
-    labels = dict(sorted(map(tuple, deep.collect())))
-    assert all(labels[i] == 0 for i in range(10))
+    """A 4-round chain and a 9-round chain both end in a plan holding
+    only the final singleton stitch, and every chain node gets the
+    chain's minimum as its label."""
+    for n_edges in (4, 9):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_edges)], "d1 long, d2 long")
+        labels_df = dedup.cluster_labels(spark, sf_dir, pairs=pairs)
+        assert _njoins(labels_df) <= 2, n_edges
+        labels = dict(map(tuple, labels_df.collect()))
+        assert all(labels[i] == 0 for i in range(n_edges + 1)), n_edges
+        # documents off the chain are singletons labelled by their id
+        assert all(v == k for k, v in labels.items() if k > n_edges)
 
 
 def test_cluster_labels_leaves_no_cache_behind(spark, sf_dir):

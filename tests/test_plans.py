@@ -195,20 +195,24 @@ def test_banded_hamming_pairs_two_exchanges(spark, sf_dir):
 
 
 def test_dedup_bucket_caps_precede_collect(spark, sf_dir):
-    """r8: every capped bucket-pair pipeline (minhash, simhash,
-    winnowing) enforces its cap with a window count BEFORE
-    collect_list — a degenerate bucket's rows never enter an array —
-    and the guard shares the bucket-key exchange: the plans carry a
-    Window node and exactly the same 4 shuffle exchanges the
-    unguarded r7 plans had (measured before/after)."""
+    """Every capped bucket-pair pipeline (minhash, simhash, winnowing,
+    embedding LSH, image pHash) runs dedup.bucket_pairs, whose cap is
+    a window count BEFORE collect_list — a degenerate bucket's rows
+    never enter an array — and the guard shares the bucket-key
+    exchange: each plan carries a Window node and exactly the Exchange
+    count it had before the expander was shared (a window on its own
+    partitioning would add one)."""
     from mapreduce_go_spark.operators import dedup
+    from mapreduce_go_spark.operators import multimodal as mm
 
-    for fn in (dedup.dedup_minhash_pairs_capped,
-               dedup.simhash_neardup_pairs_capped,
-               dedup.winnow_overlap_pairs):
+    for fn, want in ((dedup.dedup_minhash_pairs_capped, 4),
+                     (dedup.simhash_neardup_pairs_capped, 4),
+                     (dedup.winnow_overlap_pairs, 4),
+                     (similarity.embedding_neardup_pairs_blocked, 2),
+                     (mm.image_phash_pairs, 2)):
         p = plan_of(fn(spark, sf_dir))
         n = len(re.findall(r"^\(\d+\) Exchange\b", p, re.M))
-        assert n == 4, (fn.__name__, n, p)
+        assert n == want, (fn.__name__, n, p)
         assert "Window" in p, (fn.__name__, p)
 
 
@@ -622,18 +626,17 @@ def test_dsir_selection_avoids_global_window(spark, sf_dir):
     join against the 128-row ratio relation must be broadcast."""
     from mapreduce_go_spark.operators import pipeline as pl
 
-    # the un-checkpointed logical twin: the shipped default
-    # localCheckpoints per_doc (r16), which replaces everything below
-    # it with a Scan ExistingRDD in the final plan — same lineage,
-    # same execution, but the nodes pinned here would be invisible
-    p = plan_of(pl.dsir_importance_sample(spark, sf_dir,
-                                          checkpoint_per_doc=False))
+    # the query localCheckpoints the per-doc weights, which replaces
+    # the scoring lineage with a Scan ExistingRDD in its final plan;
+    # the same two stages composed without the checkpoint show the
+    # nodes pinned here
+    p = plan_of(pl._dsir_select(pl._dsir_per_doc(spark, sf_dir)))
     assert "BroadcastHashJoin" in p, p
     assert "TakeOrderedAndProject" in p, p
     assert "Window" not in p, p
     assert "CartesianProduct" not in p, p
-    # and the shipped default DOES checkpoint (the per-doc relation
-    # appears as an RDD scan exactly once)
+    # and the query DOES checkpoint (the per-doc relation appears as
+    # an RDD scan exactly once)
     pc = plan_of(pl.dsir_importance_sample(spark, sf_dir))
     assert "ExistingRDD" in pc, pc
     assert "Window" not in pc, pc
