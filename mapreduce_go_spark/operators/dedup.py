@@ -107,8 +107,8 @@ def _shingles(docs: DataFrame) -> DataFrame:
 def _shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, ss, n_sh): each document's SORTED distinct shingle
     array plus its size — the single-relation base the multi-consumer
-    dedup queries derive everything from (r16 optimization, guide
-    §2.3/§2.4): `sort_array(collect_set(...))` dedupes while it
+    dedup queries derive everything from (guide §2.3/§2.4):
+    `sort_array(collect_set(...))` dedupes while it
     groups, so the separate `.distinct()` exchange disappears; the
     per-doc size rides the row for free (no second groupBy over the
     shingle stream); and re-deriving the (doc_id, shingle) stream is
@@ -149,13 +149,13 @@ def _exact_jaccard_tail(inter: DataFrame, sizes: DataFrame) -> DataFrame:
     threshold D*inter >= N*(union) in int64 — NOT the rounded double
     (a rounding-promoted J in [t - 5e-7, t) passed the dround >= t
     test but is outside the PPJoin filter lemmas, so the plain and
-    prefix forms could diverge on such a pair; r14 review). One copy:
+    prefix forms could diverge on such a pair). One copy:
     ngram_jaccard_pairs and dedup_verified_pairs (the production
     path) both run it, so a jaccard/threshold change lands once.
 
     No broadcast hint on sizes: one row PER DOCUMENT — corpus-sized,
     a forced broadcast would OOM the driver at the very scale this is
-    the production path for; AQE broadcasts while it fits (r10)."""
+    the production path for; AQE broadcasts while it fits."""
     sa = sizes.select(F.col("doc_id").alias("d1"),
                       F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("d2"),
@@ -198,18 +198,18 @@ def _ppjoin_candidates(sets: DataFrame) -> DataFrame:
     (d1, d2) with d1 < d2. ONE copy — the registered query's verify
     join and the Zipf-regime candidate measurements (tests/test_zipf
     .py) both consume it, so the measured candidate counts are always
-    counts of the shipped plan (r13 review). r16: consumes the sets
-    relation instead of a (doc_id, shingle) stream — the per-doc size
-    is already on the row (the old per-consumer `sizes` groupBy and
-    its join are gone), and the shingle stream is an in-row explode of
-    the array (guide §2.3: aggregate once, re-derive narrow)."""
+    counts of the shipped plan. It consumes the sets relation, not a
+    (doc_id, shingle) stream: the per-doc size is already on the row
+    (no per-consumer `sizes` groupBy and join), and the shingle
+    stream is an in-row explode of the array (guide §2.3: aggregate
+    once, re-derive narrow)."""
     sh = sets.select("doc_id", "n_sh", F.explode("ss").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     wp = Window.partitionBy("doc_id").orderBy("df", "shingle")
     N, D = JACCARD_T_NUM, JACCARD_T_DEN
     # integer-exact ceil(t*n) = (N*n + D-1) div D — the double form
     # F.ceil(t * n) can land one ULP above an exact integer for a
-    # non-dyadic t and shorten the prefix by one (ADVICE r12).
+    # non-dyadic t and shorten the prefix by one.
     prefix = (
         sh.join(dfreq, "shingle")
         .withColumn("pos", F.row_number().over(wp))
@@ -288,7 +288,7 @@ def ngram_jaccard_pairs_prefix(spark: SparkSession,
     measured alongside the plain form in SCALE.md."""
     docs = tables.load(spark, sf_dir, "documents")
     # ONE materialized shingle-set relation drives the whole query
-    # (r16 optimization, guide §2.4/§8 "move heavy bytes once"): the
+    # (guide §2.4/§8 "move heavy bytes once"): the
     # prefix index references it twice (d1/d2 sides of the inverted-
     # index join), the verify tail twice more — under the lazy DAG
     # each reference re-ran the full scan+explode+aggregate lineage
@@ -473,8 +473,8 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standalone self-join cannot occur. ngram_jaccard_pairs remains
     registered as the fixture-scale recall oracle for this pipeline.
 
-    r16 optimization (guide §2.3/§2.4): everything derives from ONE
-    `_shingle_sets` relation — the MinHash signature (min over an
+    Everything derives from ONE `_shingle_sets` relation (guide
+    §2.3/§2.4) — the MinHash signature (min over an
     affine permutation is multiplicity-invariant, so hashing the
     DISTINCT per-doc shingles from the set array gives bit-identical
     mh_i to the old multiplicity stream; pinned in
@@ -774,13 +774,13 @@ def neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a plain window MIN computes it identically in Spark and DuckDB:
 # c(i) = h8(i) * 2^31 + (2^31 - 1 - i), h8 < 2^32 -> c <= 2^63 - 1
 # (fits int64 EXACTLY; both decodes are integer div/mod, never the
-# double path); decode pos/fp back out of the winning value. r14
-# review: the old 2^20 width silently CORRUPTED fingerprints for
-# documents >= 2^20 chars (a 1.1 MB web page) — position borrowed
-# into h8, decoding to fp-1 and garbage pos with no error. 2^31
-# supports 2 GiB documents (the engine's own string ceiling), and
-# selection is IDENTICAL for any in-range doc (h8 still dominates,
-# same tie-break), so fp/pos values are unchanged. K calibration: 5-char grams are
+# double path); decode pos/fp back out of the winning value. A
+# 2^20 position width would silently CORRUPT fingerprints for
+# documents >= 2^20 chars (a 1.1 MB web page) — the position would
+# borrow into h8, decoding to fp-1 and garbage pos with no error. 2^31
+# supports 2 GiB documents (the engine's own string ceiling); the
+# width never changes selection for an in-range doc (h8 dominates,
+# same tie-break). K calibration: 5-char grams are
 # corpus-common in natural text (winnowing's min-selection then picks
 # the same globally-small hashes everywhere — measured: every doc
 # pair shared <= 2 under-cap fps); 10-char grams are discriminative
@@ -900,7 +900,7 @@ def cdc_chunks_df(docs: DataFrame, with_text: bool = False) -> DataFrame:
     `with_text=True` adds the chunk_text column (the span itself) for
     consumers that featurize chunks, e.g. chunk_retrieval_topk.
 
-    Boundary derivation is IN-ROW (r16): a higher-order filter over
+    Boundary derivation is IN-ROW: a higher-order filter over
     the position sequence evaluates the same md5 %-test per K-gram
     and yields the ascending boundary array directly. The previous
     shape exploded one row per text POSITION — each carrying the
@@ -1111,8 +1111,8 @@ def strip_dup_spans_df(docs: DataFrame) -> DataFrame:
     Every input doc gets an output row: a doc with no letter tokens
     (digits/punctuation-only, empty text) emits (0, 0, '') instead of
     silently vanishing — a consumer rebuilding the corpus by joining
-    clean_text must not lose documents (review r10 finding; same
-    left-join-back fix dup_span_stats already carries)."""
+    clean_text must not lose documents (the same left join back
+    dup_span_stats carries)."""
     tok = _span_tokens(docs)
     flagged = tok.join(_dup_window_counts(tok), "whash", "left").select(
         "doc_id", "p", "tok",
@@ -1188,8 +1188,8 @@ def cluster_labels(spark: SparkSession, sf_dir: str,
     if pairs is None:
         pairs = neardup_edges(spark, sf_dir)
     pairs = pairs.select("d1", "d2")
-    # undirected edge list, both directions — EAGERLY materialized
-    # (r17): with a lazy .cache(), the first action (iteration 1's
+    # undirected edge list, both directions — EAGERLY materialized:
+    # with a lazy .cache(), the first action (iteration 1's
     # checkpoint) contains the edge pipeline in TWO branches (the
     # round-1 labels aggregate and the neighbor join) and the
     # not-yet-populated cache lets both branches recompute the whole
@@ -1224,7 +1224,7 @@ def cluster_labels(spark: SparkSession, sf_dir: str,
     # chain is not impossible, and returning non-converged labels
     # would mean silently split clusters / wrong keepers. So the
     # bound FAILS LOUD on exhaustion instead of returning wrong
-    # answers (review r10 finding: a 22-doc chain exceeds 20 hops).
+    # answers (a 22-doc chain exceeds 20 hops).
     for _ in range(CLUSTER_MAX_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges.d2 == labels.doc_id)
@@ -1476,9 +1476,9 @@ _VERIFIED_PAIRS_CTES = f""",
 
 # Recursive connected-component labels over the PRODUCTION near-dup
 # graph (capped-LSH verified pairs, = neardup_edges) — shared by the
-# dedup_clusters oracle and pipeline.corpus_clean. Until r4 this CTE
-# (and the Spark side) clustered over the standalone quadratic
-# shingle self-join; both sides now feed on the verified pipeline.
+# dedup_clusters oracle and pipeline.corpus_clean; both engines
+# cluster the verified pairs, never the quadratic shingle
+# self-join.
 LABELS_CTE_SQL = _MINHASH_SQL.replace(
     "WITH toks", "WITH RECURSIVE toks") + _VERIFIED_PAIRS_CTES + """,
     edges AS (
