@@ -8,17 +8,16 @@ unfilter, all five filter types — decode_png_pixels), GIF (extension
 skip -> genuine LZW decompression -> palette mapping —
 decode_gif_pixels), and BMP (raw pixel array, bottom-up rows, stride
 padding); JPEG gets a genuine segment-walking header parse here, and
-— since r5 — a full from-scratch BASELINE CODEC in functions/jpeg.py
+a full from-scratch BASELINE CODEC in functions/jpeg.py
 (DCT + Annex K quant/Huffman tables + byte stuffing), exercised by
 jpeg_pixel_roundtrip / jpeg_resize below, so all FOUR formats now
 have true pixel paths. All header parsing is validated against
 committed genuine image files in tests/fixtures/. mean_luma is a
-TRUE pixel/sample mean for ALL FOUR formats since r14 (VERDICT r13
-item 6): the synthesized corpus's JPEG quarter is codec-real
-(make_media_payload encodes through functions/jpeg.py) and
-decode_image runs the REAL entropy decode for single-component
-baseline payloads — the last byte-prefix luma stand-in is deleted.
-Since r16 MULTI-component JPEGs decode too (baseline interleaved
+TRUE pixel/sample mean for ALL FOUR formats: the synthesized
+corpus's JPEG quarter is codec-real (make_media_payload encodes
+through functions/jpeg.py) and decode_image runs the REAL entropy
+decode for single-component baseline payloads.
+MULTI-component JPEGs decode too (baseline interleaved
 4:2:0/4:2:2/4:4:4 and progressive spectral selection — the committed
 color fixture's shape); only coding processes outside that envelope
 (successive approximation, arithmetic) keep an honest NULL luma.
@@ -462,7 +461,7 @@ def decode_gif_indices(
                 if palette.shape[0] != size:
                     # the global-table path guards exactly this; a
                     # short LOCAL table silently shrank the palette
-                    # and could map indices to wrong RGB (r14 review)
+                    # and could map indices to wrong RGB
                     raise ValueError("truncated GIF color table")
                 off += 3 * size
             if palette is None:
@@ -531,8 +530,8 @@ def decode_bmp_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     comp = struct.unpack("<I", payload[30:34])[0]
     # 8-bpp is PALETTED (the color table is mandatory): returning its
     # index bytes as samples reports palette-INDEX luma — silently
-    # wrong metadata; the docstring always promised ValueError for
-    # paletted layouts (r14 review)
+    # wrong metadata; the docstring promises ValueError for
+    # paletted layouts
     if comp != 0 or bpp not in (24, 32) or h == 0 or w <= 0:
         raise ValueError("unsupported BMP pixel layout")
     channels = bpp // 8
@@ -609,7 +608,7 @@ def make_jpeg(width: int, height: int, body: bytes = b"") -> bytes:
 
 
 # (JPEG has no fixed body offset — decode_image derives it from the
-# segment walk. Since r14 make_jpeg is a TEST HELPER only: the
+# segment walk. make_jpeg is a TEST HELPER only: the
 # synthesized corpus's JPEG rows are real codec output — see
 # make_media_payload — so no oracle depends on this layout anymore.)
 
@@ -626,13 +625,13 @@ def decode_image(payload: bytes) -> dict:
     IDAT inflate + unfilter, GIF via real LZW + palette mapping, BMP
     via the raw bottom-up pixel array, and JPEG via the from-scratch
     entropy decoders (functions/jpeg: decode_gray for the
-    single-component corpus since r14; decode_luma for
-    multi-component baseline/progressive files since r16, the
+    single-component corpus; decode_luma for multi-component
+    baseline/progressive files, the
     committed color fixture included — luma is the decoded Y-plane
     mean). Multi-component files OUTSIDE the codec's envelope
     (successive approximation, arithmetic coding, restart intervals,
-    corrupt entropy) keep header metadata with an honest NULL luma;
-    the retired byte-prefix summary stays gone."""
+    corrupt entropy) keep header metadata with an honest NULL luma,
+    never a byte-prefix summary."""
     if payload is None or len(payload) < 16:
         raise ValueError("truncated payload")
     if payload[:8] == PNG_MAGIC:
@@ -700,24 +699,22 @@ def decode_image(payload: bytes) -> dict:
         if nf == 1:
             # single-component baseline: a REAL entropy decode
             # (functions/jpeg.py Huffman + dequant + IDCT), so
-            # mean_luma is the true mean of the decoded pixels —
-            # r14 deletes the 64-byte-prefix stand-in (the whole
-            # synthesized corpus is single-component since the
-            # make_media_payload codec migration).
+            # mean_luma is the true mean of the decoded pixels (the
+            # whole synthesized corpus is single-component:
+            # make_media_payload encodes through the codec).
             from mapreduce_go_spark.functions import jpeg as _jpeg_codec
 
             dec = _jpeg_codec.decode_gray(payload)
             luma = float(int(dec.sum(dtype="uint64")) / dec.size)
         else:
-            # multi-component: REAL entropy decode through the r16
+            # multi-component: REAL entropy decode through the
             # color extension (baseline interleaved 4:4:4/4:2:2/4:2:0
             # and progressive spectral selection — the committed color
             # fixture's exact shape). mean_luma is the true mean of
             # the decoded Y plane. Files outside the supported
             # envelope (successive approximation, arithmetic coding,
             # restart intervals) or with a corrupt entropy stream
-            # keep the honest NULL — metadata still parses, exactly
-            # the pre-r16 posture for everything we cannot decode.
+            # keep the honest NULL — metadata still parses.
             from mapreduce_go_spark.functions import jpeg as _jpeg_codec
 
             try:
@@ -770,9 +767,9 @@ def make_media_payload(doc_id: int, body: bytes) -> bytes:
         return make_gif(w, h, body)
     if fmt == 2:
         return make_bmp(w, h, body)
-    # fmt == 3: a REAL baseline JPEG through the from-scratch codec —
-    # r14 retires the make_jpeg byte-layout stand-in from the corpus
-    # (VERDICT r13 item 6). Dims follow the codec-exercise formula
+    # fmt == 3: a REAL baseline JPEG through the from-scratch codec,
+    # not the make_jpeg byte-layout stand-in. Dims follow the
+    # codec-exercise formula
     # (_jpeg_gray_pixels: 8..63 px sides) so the per-doc DCT work
     # stays bounded at sf0.1; make_jpeg itself survives only as the
     # segment-walk test helper.
@@ -801,7 +798,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas -> real decode (see decode_image) -> typed features
     incl. a NULL-featured 'corrupt' error path. Payloads come from the
     pre-encoded mixed-format corpus (media.media_table('img') — the
-    ingest boundary, r14: the kernel is decode-only, exactly what a
+    ingest boundary: the kernel is decode-only, exactly what a
     production job pays on an ingested corpus), and every output field
     is value-checked against the DuckDB oracle — the JPEG quarter
     against a codec-twin VALUES list, the rest closed-form."""
@@ -829,8 +826,8 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F.length (CHARS), not octet_length: the frame content below is
     # substring (char addressing), so the count and the cuts must use
     # the same unit — mixed units disagree on any multi-byte UTF-8
-    # text (r14 review; the all-ASCII fixture hid it, and the DuckDB
-    # oracle is char-based too)
+    # text (the all-ASCII fixture hides it; the DuckDB oracle is
+    # char-based too)
     nb = F.length("text")
     n_frames = F.when(
         nb >= FRAME_BYTES,
@@ -856,10 +853,9 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (r6: the format-agnostic byte-decimation stand-in `media_resize` /
-# `resize_payload` is retired — all four synthesized formats now have
-# REAL pixel paths: resample_png_half, resample_gif_half,
-# resample_bmp_half and the baseline-JPEG codec roundtrip/resize.)
+# (All four synthesized formats have REAL pixel paths:
+# resample_png_half, resample_gif_half, resample_bmp_half and the
+# baseline-JPEG codec roundtrip/resize.)
 
 
 # --- real PNG pixel resize --------------------------------------------------
@@ -944,10 +940,10 @@ def png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole synthesized corpus resizes at true pixel level."""
     from mapreduce_go_spark import media
 
-    # read the pre-encoded corpus (media_table('img') — the r14
-    # ingest boundary): the kernel is decode+resample+re-encode only,
-    # exactly what a production job pays; the old form re-SYNTHESIZED
-    # the source container per run (r14 review)
+    # read the pre-encoded corpus (media_table('img') — the ingest
+    # boundary): the kernel is decode+resample+re-encode only,
+    # exactly what a production job pays, not a per-run
+    # re-synthesis of the source container
     imgs = media.media_table(spark, sf_dir, "img").where(
         (F.col("doc_id") % 4 == 0)
         & (F.col("doc_id") % CORRUPT_EVERY != 0))
@@ -991,18 +987,18 @@ def _bmp_resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 
 def bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D20 REAL pixel-level resize for the BMP quarter of the
-    synthesized media corpus (r6 — completes pixel-real across all
-    four formats): parse the uncompressed pixel array, nearest-
+    synthesized media corpus (completes pixel-real across all four
+    formats): parse the uncompressed pixel array, nearest-
     neighbor 2:1 PIXEL resample (3-byte pixels move together),
     re-encode a real bottom-up padded BMP. The oracle value-checks
     geometry, the closed-form padded-row container size, and the
     sha256 of the exact resampled sample bytes."""
     from mapreduce_go_spark import media
 
-    # read the pre-encoded corpus (media_table('img') — the r14
-    # ingest boundary): the kernel is decode+resample+re-encode only,
-    # exactly what a production job pays; the old form re-SYNTHESIZED
-    # the source container per run (r14 review)
+    # read the pre-encoded corpus (media_table('img') — the ingest
+    # boundary): the kernel is decode+resample+re-encode only,
+    # exactly what a production job pays, not a per-run
+    # re-synthesis of the source container
     imgs = media.media_table(spark, sf_dir, "img").where(
         (F.col("doc_id") % 4 == 2)
         & (F.col("doc_id") % CORRUPT_EVERY != 0))
@@ -1019,10 +1015,10 @@ def gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact resampled index bytes."""
     from mapreduce_go_spark import media
 
-    # read the pre-encoded corpus (media_table('img') — the r14
-    # ingest boundary): the kernel is decode+resample+re-encode only,
-    # exactly what a production job pays; the old form re-SYNTHESIZED
-    # the source container per run (r14 review)
+    # read the pre-encoded corpus (media_table('img') — the ingest
+    # boundary): the kernel is decode+resample+re-encode only,
+    # exactly what a production job pays, not a per-run
+    # re-synthesis of the source container
     imgs = media.media_table(spark, sf_dir, "img").where(
         (F.col("doc_id") % 4 == 1)
         & (F.col("doc_id") % CORRUPT_EVERY != 0))
@@ -1235,7 +1231,6 @@ def _phash_bands_from_png(png: bytes) -> list[int] | None:
         # this guard an RGB or off-size raster raised a ValueError
         # from np.add.at OUTSIDE the except above and killed the
         # whole job, and a smaller raster silently hashed garbage
-        # (review r10)
         return None
     pix = np.asarray(arr, dtype=np.int64)
     cr = (np.arange(h) * 8) // h
@@ -1253,8 +1248,8 @@ def _pack_bands(bits) -> list[int]:
     """Pack a 64-bit fingerprint bit vector into the four 16-bit band
     values banded_hamming_pairs and the SQL oracles agree on (band k
     = bits k*16..k*16+15, weight 2^i within the band). The ONE copy
-    of the band-layout contract all three modalities share (review
-    r10: it was triplicated verbatim across image/audio/video)."""
+    of the band-layout contract all three modalities share
+    (image/audio/video)."""
     import numpy as np
 
     return [
@@ -1615,7 +1610,7 @@ ORACLES = {
                sha256(pix) AS pix_sha256
         FROM dims d JOIN buf USING (doc_id)
     """,
-    # media_features is a LAZY oracle since r14 (the JPEG quarter is
+    # media_features is a LAZY oracle (the JPEG quarter is
     # codec-real) — see _media_features_oracle_sql below.
     # Every output of the real PNG resample is value-checked: dims by
     # the ceil-halving formula, container size by the stored-deflate
@@ -1730,9 +1725,9 @@ ORACLES["jpeg_resize"] = f"""
 # whole cycles + prefix remainder — exact integer sum, one double
 # division, identical in both engines) and the closed-form container
 # sizes. Corrupt rows (doc_id % CORRUPT_EVERY = 0) have NULL
-# features. The JPEG quarter left this SQL in r14 — it is codec-real
-# now, so the lazy builder below appends it as a VALUES list computed
-# by the Spark-free codec twin.
+# features. The JPEG quarter is not in this SQL — it is codec-real,
+# so the lazy builder below appends it as a VALUES list computed by
+# the Spark-free codec twin.
 _MEDIA_FEATURES_STATIC_SQL = f"""
         WITH m AS (
             SELECT doc_id, text,
@@ -1777,7 +1772,7 @@ _MEDIA_FEATURES_STATIC_SQL = f"""
 
 
 def _media_features_oracle_sql(sf_dir: str) -> str:
-    """media_features oracle (LAZY since r14, VERDICT r13 item 6):
+    """media_features oracle (LAZY):
     the closed-form SQL for PNG/GIF/BMP/corrupt rows UNION ALL a
     VALUES list for the codec-real JPEG quarter, computed by the
     Spark-free twin — per doc: the same _jpeg_gray_pixels raster,
