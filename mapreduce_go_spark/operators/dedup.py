@@ -362,11 +362,12 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bucket_pairs(rows: DataFrame, keys: list[str], item: Column,
                  cap: int | None) -> DataFrame:
-    """(x, y) rows: the upper triangle of every bucket of `rows` that
-    shares `keys`, over the bucket's `item` values sorted ascending,
-    so x < y. The one pair expander of the near-dup family (LSH and
-    simhash bands, winnowing fingerprints, media fingerprint bands);
-    each caller applies its own verify step to the pairs.
+    """(d1, d2) rows: the upper triangle of every bucket of `rows`
+    that shares `keys`, over the bucket's `item` values sorted
+    ascending, so d1 < d2. The one pair expander of the near-dup
+    family (LSH and simhash bands, winnowing fingerprints, media
+    fingerprint bands); each caller applies its own verify step to
+    the pairs (struct items are read back as d1.<field>).
 
     No self-join: one groupBy collects the bucket's sorted list and
     posexplode + slice emits the triangle, so the signature pipeline
@@ -389,9 +390,9 @@ def bucket_pairs(rows: DataFrame, keys: list[str], item: Column,
            .where(cond).drop("_bn"))
     b = pre.groupBy(*keys).agg(F.sort_array(F.collect_list(item)).alias("ds"))
     return (
-        b.select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select("x", F.explode(
-            F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("y"))
+        b.select(F.posexplode("ds").alias("i", "d1"), "ds")
+        .select("d1", F.explode(
+            F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("d2"))
     )
 
 
@@ -399,9 +400,8 @@ def _lsh_pairs(bands: DataFrame, cap: int | None) -> DataFrame:
     """Distinct (d1, d2) doc pairs sharing an LSH bucket of a
     (doc_id, band, band_key) relation; a pair that collides in k
     bands surfaces k times before the distinct."""
-    return (bucket_pairs(bands, ["band", "band_key"], F.col("doc_id"), cap)
-            .select(F.col("x").alias("d1"), F.col("y").alias("d2"))
-            .distinct())
+    return bucket_pairs(bands, ["band", "band_key"], F.col("doc_id"),
+                        cap).distinct()
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,8 +705,8 @@ def _simhash_pairs(sig: DataFrame, cap: int | None) -> DataFrame:
     )
     cands = bucket_pairs(bands, ["band_key"],
                          F.struct("doc_id", "simhash"), cap).select(
-        F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"),
-        F.col("x.simhash").alias("s1"), F.col("y.simhash").alias("s2"),
+        F.col("d1.doc_id").alias("d1"), F.col("d2.doc_id").alias("d2"),
+        F.col("d1.simhash").alias("s1"), F.col("d2.simhash").alias("s2"),
     )
     # hamming via codegen bit arithmetic, not an interpreted per-char
     # lambda (64 zip_with evals per candidate pair dominated the
@@ -856,8 +856,7 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "fp").distinct()
     pairs = bucket_pairs(fps, ["fp"], F.col("doc_id"), WINNOW_FP_CAP)
     return (
-        pairs.select(F.col("x").alias("d1"), F.col("y").alias("d2"))
-        .groupBy("d1", "d2")
+        pairs.groupBy("d1", "d2")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= WINNOW_MIN_SHARED)
     )

@@ -1307,10 +1307,10 @@ def banded_hamming_pairs(bands: DataFrame, cap: int,
     cand = (
         bucket_pairs(bands, ["band_no", "band_val"],
                      F.struct("doc_id", "b0", "b1", "b2", "b3"), cap)
-        .select(F.col("x.doc_id").alias("d1"),
-                F.col("y.doc_id").alias("d2"),
-                *[F.col(f"x.b{i}").alias(f"a{i}") for i in range(4)],
-                *[F.col(f"y.b{i}").alias(f"c{i}") for i in range(4)])
+        .select(F.col("d1.doc_id").alias("d1"),
+                F.col("d2.doc_id").alias("d2"),
+                *[F.col(f"d1.b{i}").alias(f"a{i}") for i in range(4)],
+                *[F.col(f"d2.b{i}").alias(f"c{i}") for i in range(4)])
         .distinct()
     )
     hamming = sum(
