@@ -517,7 +517,8 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dup_doc_ids(bands: DataFrame, cap: int | None = None) -> DataFrame:
     """Doc ids that collide with an EARLIER doc (lower doc_id) in some
-    LSH bucket — the min-per-bucket probe, NOT pair expansion: a rank
+    LSH bucket, once per such bucket (flag_dups takes the distinct) —
+    the min-per-bucket probe, NOT pair expansion: a rank
     within the bucket answers "is there an earlier doc here?" in O(B)
     per bucket, where bucket_pairs would generate B(B-1)/2 rows for
     the same verdict. One window over the bucket key (a single
