@@ -58,7 +58,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K.3.1 — standard DC luminance Huffman spec (BITS, HUFFVAL).
 DC_BITS = (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
@@ -668,18 +667,6 @@ def _rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
     cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
     cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
     return np.clip(np.floor(np.stack([y, cb, cr], axis=-1) + 0.5),
-                   0, 255).astype(np.uint8)
-
-
-def ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    """Inverse JFIF transform, same deterministic rounding."""
-    y = ycc[..., 0].astype(np.float64)
-    cb = ycc[..., 1].astype(np.float64) - 128.0
-    cr = ycc[..., 2].astype(np.float64) - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    return np.clip(np.floor(np.stack([r, g, b], axis=-1) + 0.5),
                    0, 255).astype(np.uint8)
 
 

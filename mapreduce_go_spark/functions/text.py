@@ -3,18 +3,24 @@
 Token semantics follow the reference wordcount plugin: a token is a
 maximal run of letters, case-sensitive, empty tokens dropped
 (/root/reference/mrapps/wc.go:21-34 — `unicode.IsLetter` split via
-`strings.FieldsFunc`). The fixture corpus is ASCII, so `[a-zA-Z]`
-equals the Go `unicode.IsLetter` behavior on this data; the pattern is
-kept ASCII so the Spark (Java regex) and DuckDB (RE2) oracles agree on
-every input byte-for-byte.
+`strings.FieldsFunc`). This module is the one place that rule lives,
+in two shapes: `token_rows`, one row per token, for pipelines that
+shuffle on the token; and `token_array`, the tokens as one in-row
+array, for mapper-only per-document stats. Both drop the `""` fields
+a split leaves at separator edges, so no caller filters them.
 
-All helpers return Column expressions — they stay inside whole-stage
-codegen; no Python UDFs in the tokenize path.
+The fixture corpus is ASCII, so `[a-zA-Z]` equals the Go
+`unicode.IsLetter` behavior on this data; the pattern is kept ASCII so
+the Spark (Java regex) and DuckDB (RE2) oracles agree on every input
+byte-for-byte.
+
+All helpers return Column expressions or DataFrames — they stay inside
+whole-stage codegen; no Python UDFs in the tokenize path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Split on non-letter runs; ASCII-pinned for cross-engine determinism.
@@ -37,21 +43,23 @@ NON_LETTER_RE = "[^a-zA-Z]+"
 UNICODE_NON_LETTER_RE = r"[^\p{L}]+"
 
 
-def tokens(text, pattern: str = NON_LETTER_RE) -> Column:
-    """Array of letter-run tokens (may contain '' at the edges)."""
-    return F.split(text, pattern)
+def token_rows(df: DataFrame, *keep, text="text", alias: str = "tok",
+               pattern: str = NON_LETTER_RE) -> DataFrame:
+    """One row per token of `text`, beside the `keep` columns."""
+    fields = F.split(text, pattern)
+    return (df.select(*keep, F.explode(fields).alias(alias))
+            .where(F.col(alias) != ""))
 
 
-def explode_tokens(text, alias: str = "word",
-                   pattern: str = NON_LETTER_RE) -> Column:
-    """Explode into one row per token; caller filters `alias != ''`."""
-    return F.explode(tokens(text, pattern)).alias(alias)
+def token_array(text, pattern: str = NON_LETTER_RE) -> Column:
+    """The tokens of `text` as an array, in order."""
+    return F.filter(F.split(text, pattern), lambda w: w != F.lit(""))
 
 
 def token_count(text) -> Column:
-    """Number of non-empty tokens, without exploding (scales better:
-    one pass per row, no shuffle)."""
-    return F.size(F.filter(tokens(text), lambda w: w != F.lit("")))
+    """Number of tokens, without exploding (one pass per row, no
+    shuffle)."""
+    return F.size(token_array(text))
 
 
 # The whitespace class for fingerprint normalization, EXPLICIT on

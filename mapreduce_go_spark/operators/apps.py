@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.text import (NON_LETTER_RE,
                                                UNICODE_NON_LETTER_RE,
-                                               explode_tokens)
+                                               token_rows)
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,8 +35,7 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables.load(spark, sf_dir, "documents")
     return (
-        docs.select(explode_tokens("text"))
-        .where(F.col("word") != "")
+        token_rows(docs, alias="word")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
@@ -55,8 +54,7 @@ def wordcount_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables.load(spark, sf_dir, "documents")
     return (
-        docs.select(explode_tokens("text", pattern=UNICODE_NON_LETTER_RE))
-        .where(F.col("word") != "")
+        token_rows(docs, alias="word", pattern=UNICODE_NON_LETTER_RE)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
@@ -72,8 +70,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables.load(spark, sf_dir, "documents")
     word_doc = (
-        docs.select(F.col("source").alias("doc"), explode_tokens("text"))
-        .where(F.col("word") != "")
+        token_rows(docs, F.col("source").alias("doc"), alias="word")
         .distinct()
     )
     return word_doc.groupBy("word").agg(
@@ -104,8 +101,7 @@ def indexer_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables.load(spark, sf_dir, "documents")
     word_doc = (
-        docs.select("doc_id", explode_tokens("text"))
-        .where(F.col("word") != "")
+        token_rows(docs, "doc_id", alias="word")
         .distinct()
     )
     eligible = (

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql, grid
-from mapreduce_go_spark.functions.text import NON_LETTER_RE
+from mapreduce_go_spark.functions.text import NON_LETTER_RE, token_rows
 from mapreduce_go_spark.operators.quality import (
     DECON_EVAL_MOD,
     DECON_N,
@@ -528,7 +528,7 @@ def _probe_oracle_lazy() -> str | None:
 
     import duckdb
 
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         con = duckdb.connect()
         con.execute(
@@ -721,12 +721,7 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     .grid parity proof), so the per-doc SUM is exact int64
     arithmetic — no double accumulation anywhere."""
     docs = tables.load(spark, sf_dir, "documents")
-    tok = (
-        tables.spread(docs)
-        .select("doc_id",
-                F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(tables.spread(docs), "doc_id")
     # r16: the tf posting relation feeds three lineages (unigram
     # counts, the corpus total via counts, the scoring join's probe
     # side) — lazily materialized once instead of re-tokenizing the

@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql
-from mapreduce_go_spark.functions.text import FP_WS_SQL, NON_LETTER_RE, fingerprint
+from mapreduce_go_spark.functions.text import (FP_WS_SQL, NON_LETTER_RE,
+                                               fingerprint, token_rows)
 
 N_MINHASH = 12          # permutations
 LSH_BANDS = 4           # bands -> candidate if all rows in any band agree
@@ -638,11 +639,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layouts the scan parallelizes by itself
     docs = tables.load(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), NON_LETTER_RE)).alias("tok"),
-        )
-        .where(F.col("tok") != "")
+        token_rows(docs, "doc_id")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
         .withColumn("h", F.md5("tok"))

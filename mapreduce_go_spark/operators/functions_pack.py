@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql
-from mapreduce_go_spark.functions.text import NON_LETTER_RE
+from mapreduce_go_spark.functions.text import NON_LETTER_RE, token_rows
 
 TFIDF_TOP_K = 3
 
@@ -109,13 +109,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts while it fits (the r10 tpch/dedup lesson)."""
     docs = tables.load(spark, sf_dir, "documents")
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
-    tok = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split("text", NON_LETTER_RE)).alias("tok"),
-        )
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs, "doc_id")
     tf = tok.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     df = tf.groupBy("tok").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(

@@ -416,9 +416,7 @@ def _kmeans_oracle_lazy() -> str | None:
     with the same grid distance and aggregates sizes. Built at
     oracle-collection time from TEST_SF_DIR; any failure degrades
     kmeans_clusters back to the rows-only check."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         C, sizes = _kmeans_twin(sf_dir)
     except Exception:

@@ -1821,9 +1821,7 @@ def _media_features_oracle_sql(sf_dir: str) -> str:
 
 
 def _media_features_oracle_lazy() -> str | None:
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _media_features_oracle_sql(sf_dir)
     except Exception:

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.text import (
-    FP_WS, FP_WS_SQL, NON_LETTER_RE, token_count)
+    FP_WS, FP_WS_SQL, NON_LETTER_RE, token_count, token_rows)
 
 SAMPLE_PCT = 20
 TRAIN_PCT = 90
@@ -339,12 +339,7 @@ def chunk_vec_sums(docs: DataFrame) -> DataFrame:
 
     ch = cdc_chunks_df(docs, with_text=True).select(
         "doc_id", "chunk_no", "chunk_text")
-    tok = (
-        ch.select(
-            "doc_id", "chunk_no",
-            F.explode(F.split("chunk_text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(ch, "doc_id", "chunk_no", text="chunk_text")
     cells = tok.select(
         "doc_id", "chunk_no",
         fh_bucket(F.col("tok")).alias("bucket"),
@@ -611,12 +606,7 @@ def _dsir_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_go_spark.functions.num import grid
 
     docs = tables.load(spark, sf_dir, "documents")
-    tok = (
-        tables.spread(docs)
-        .select("doc_id", "lang",
-                F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(tables.spread(docs), "doc_id", "lang")
     bucket = (
         F.conv(F.substring(
             F.md5(F.concat(F.lit("dsir:"), F.col("tok"))), 1, 8), 16, 10)

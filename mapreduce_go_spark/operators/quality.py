@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql
-from mapreduce_go_spark.functions.text import NON_LETTER_RE
+from mapreduce_go_spark.functions.text import (NON_LETTER_RE, token_array,
+                                               token_count, token_rows)
 from mapreduce_go_spark.workspace import session_parquet
 
 # ---------------------------------------------------------------- #
@@ -58,11 +59,8 @@ REP_TOP_2GRAM_MAX = 0.09
 
 
 def _toks(col: Column) -> Column:
-    """Non-empty letter-run tokens, capped at REP_TOKEN_CAP."""
-    return F.slice(
-        F.filter(F.split(col, NON_LETTER_RE), lambda w: w != F.lit("")),
-        1, REP_TOKEN_CAP,
-    )
+    """The tokens of `col`, capped at REP_TOKEN_CAP."""
+    return F.slice(token_array(col), 1, REP_TOKEN_CAP)
 
 
 def _grams(ts: Column, n: int) -> Column:
@@ -314,11 +312,7 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the (N - df + 0.5)/(df + 0.5) idf. Same audited plan shape:
     one token shuffle for tf, broadcast df + corpus scalars."""
     docs = tables.load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            "doc_id", F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs, "doc_id")
     # r16: tf feeds three lineages (doc lengths, document frequency,
     # the scoring join) — lazily materialized once instead of
     # re-tokenizing the corpus per consumer (this is the posting-list
@@ -461,8 +455,6 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream and shuffling a sliver); document length comes from
     the no-explode token_count (mapper-only), and df/avgdl/N are
     broadcast scalars."""
-    from mapreduce_go_spark.functions.text import token_count
-
     docs = tables.load(spark, sf_dir, "documents")
     tok = (
         docs.select(
@@ -564,11 +556,7 @@ def cms_token_sketch(docs: DataFrame) -> DataFrame:
     the corpus equals the sketch of the whole (CMS's defining
     property), so the streaming twin's epoch merge and the batch
     query share this exact computation."""
-    tok = (
-        docs.select(
-            F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs)
     cells = tok.select(
         F.posexplode(
             F.array(*[_cms_bucket(F.col("tok"), r)
@@ -609,11 +597,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-deterministic cross-engine, so the oracle checks exact cell
     values — plus the no-underestimate guarantee vs exact counts."""
     docs = tables.load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs)
     # ONE scan+explode: the sketch and the exact probe counts both
     # derive from the same per-token count relation (its shuffle is
     # reused across the two consumers) — as independent lineages the
@@ -692,11 +676,7 @@ def feature_hash_embed_df(docs: DataFrame) -> DataFrame:
     comma-joined string for the driver canonicalizer; this df-level
     form keeps the raw array so vector ops compose on it
     (tests/test_quality.py runs it through the knn shape)."""
-    tok = (
-        docs.select(
-            "doc_id", F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs, "doc_id")
     bucket = fh_bucket(F.col("tok"))
     sign = fh_sign(F.col("tok"))
     # ONE shuffle, all codegen: FH_DIM conditional sums per doc (the
@@ -776,11 +756,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, candidates are a vocab-bounded fraction, and the
     exact pass counts only their occurrences."""
     docs = tables.load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    tok = token_rows(docs)
     # ONE scan+explode+shuffle: this query already derives the full
     # vocabulary for the candidate screen, and a groupBy(tok).count()
     # costs the SAME shuffle as the old .distinct() (map-side combine
@@ -817,12 +793,7 @@ def hll_tokens(docs: DataFrame,
     count derives them from the same relation instead of exploding
     the corpus twice (ADVICE r10: hll_distinct_by_source scanned and
     exploded documents twice per run)."""
-    return (
-        docs.select(
-            *group_cols,
-            F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-    )
+    return token_rows(docs, *group_cols)
 
 
 def _hll_bucket_rho(tok: DataFrame,

@@ -793,7 +793,7 @@ def _lex_probe_frames(spark: SparkSession, sf_dir: str
     hybrid_rrf_topk at sf0.1), the same 3-consumer trade as
     dedup_verified_pairs. Memoized per (session, fixture) — see
     _LEX_FRAMES_MEMO."""
-    from mapreduce_go_spark.functions.text import NON_LETTER_RE
+    from mapreduce_go_spark.functions.text import token_rows
 
     import os
 
@@ -805,9 +805,7 @@ def _lex_probe_frames(spark: SparkSession, sf_dir: str
 
     docs = tables.load(spark, sf_dir, "documents")
     tsets = (
-        docs.select("doc_id",
-                    F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
+        token_rows(docs, "doc_id")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("tok")).alias("ts"))
         .withColumn("sz", F.size("ts"))
@@ -2181,9 +2179,7 @@ def _pq_oracle_lazy() -> str | None:
     oracles gets matching centroids; absent or unreadable fixtures
     (any exception, not just missing files) degrade the entry to the
     rows-only check instead of breaking registry import."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _pq_oracle_sql(sf_dir)
     except Exception:
@@ -2345,9 +2341,7 @@ def _ivf_pq_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_pq_topk — same contract as
     _ivf_hamming_oracle_lazy (twin centroids + PQ codebooks trained at
     oracle-collection time from TEST_SF_DIR; failure -> rows-only)."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _ivf_pq_oracle_sql(sf_dir)
     except Exception:
@@ -2413,9 +2407,7 @@ def _ivf_hamming_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_hamming_topk — same contract as
     _ivf_trained_oracle_lazy (twin centroids trained at
     oracle-collection time from TEST_SF_DIR; failure -> rows-only)."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _ivf_hamming_oracle_sql(sf_dir)
     except Exception:
@@ -2425,9 +2417,7 @@ def _ivf_hamming_oracle_lazy() -> str | None:
 def _hybrid_ann_oracle_lazy() -> str | None:
     """LAZY oracle for hybrid_rrf_ann_topk (lazy since r14: the
     IVF-Hamming dense pool embeds trained centroids)."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _hybrid_ann_oracle_sql(sf_dir)
     except Exception:
@@ -2492,9 +2482,7 @@ def _ivf_trained_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_trained_topk — same contract as
     _pq_oracle_lazy (centroid literals trained at oracle-collection
     time from TEST_SF_DIR; any failure degrades to rows-only)."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _ivf_trained_oracle_sql(sf_dir)
     except Exception:
@@ -2504,9 +2492,7 @@ def _ivf_trained_oracle_lazy() -> str | None:
 def _ivf_sampled_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_sampled_topk — the trained-IVF oracle
     with the xxhash64 training subsample folded into the twin."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         return _ivf_trained_oracle_sql(sf_dir,
                                        sample_frac=IVF_SAMPLE_FRAC)
@@ -2523,10 +2509,7 @@ _SUB_THUNK_MEMO: dict[tuple[str, str], str | None] = {}
 
 def _memo_thunk(name, thunk):
     def run() -> str | None:
-        import os
-
-        key = (name, os.environ.get("TEST_SF_DIR",
-                                    "/root/testdata/sf0.01"))
+        key = (name, tables.oracle_sf_dir())
         if key not in _SUB_THUNK_MEMO:
             sql = thunk()
             if sql is None:
@@ -2550,8 +2533,6 @@ def _recall_oracle_lazy() -> str | None:
     evaluations, so without this the IVF k-means twin would train
     TWICE per collection (r13 review). Any sub-thunk failure
     degrades the dashboard to rows-only."""
-    import os
-
     oracles = dict(ORACLES)
     try:
         for name, thunk in (
@@ -2576,7 +2557,7 @@ def _recall_oracle_lazy() -> str | None:
     # centroid-affinity CTE chain, the trained family from the
     # twin-centroid ranking — so a Spark-side probe-width regression
     # (the recall/cost knob) hash-mismatches this seat.
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         from mapreduce_go_spark.operators.kmeans import _kmeans_twin
 

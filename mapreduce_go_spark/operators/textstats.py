@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from mapreduce_go_spark import tables
 from mapreduce_go_spark.functions.num import dround, dround_sql
 from mapreduce_go_spark.functions.text import (
-    FP_WS, FP_WS_CHARS, FP_WS_SQL, NON_LETTER_RE, fingerprint)
+    FP_WS, FP_WS_CHARS, FP_WS_SQL, NON_LETTER_RE, fingerprint, token_array)
 
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
 
@@ -42,15 +42,11 @@ ROLL_MOD = 2147483647  # 2^31 - 1
 ROLL_BASE = 31
 
 
-def _toks(col: Column) -> Column:
-    return F.filter(F.split(col, NON_LETTER_RE), lambda w: w != F.lit(""))
-
-
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token statistics: counts, distinct counts, mean token
     length — one narrow pass, exact integer arithmetic."""
     docs = tables.load(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = token_array(F.col("text"))
     # long seed: an int accumulator ANSI-overflows (aborting the
     # query) on a document with >= 2^31 token chars while the
     # oracle's hugeint list_sum succeeds — the _roll_interpreted
@@ -135,7 +131,7 @@ def _bpe_merge_ranks(spark: SparkSession,
 
     docs = tables.load(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(_toks(F.col("text"))).alias("w"))
+        docs.select(F.explode(token_array(F.col("text"))).alias("w"))
         .groupBy("w").agg(F.count("*").alias("c"))
         .orderBy(F.desc("c"), "w").limit(BPE_VOCAB_CAP)
         .collect()  # allow-bounded-collect: <= BPE_VOCAB_CAP rows
@@ -148,7 +144,7 @@ def bpe_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc REAL BPE tokenization: train merges on the corpus'
     bounded word-frequency table, encode every word with the greedy
     ranked-merge loop, report word/subword counts + fertility. The
-    tokenize/explode stays JVM-side (the same _toks the exact
+    tokenize/explode stays JVM-side (the same token_array the exact
     oracles use); Python sees only (word) -> n_subtokens, computed
     once per distinct word per Arrow batch."""
     from pyspark.sql.functions import pandas_udf
@@ -165,7 +161,7 @@ def bpe_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = tables.load(spark, sf_dir, "documents")
     per_word = docs.select(
-        "doc_id", F.explode(_toks(F.col("text"))).alias("w"))
+        "doc_id", F.explode(token_array(F.col("text"))).alias("w"))
     per_doc = per_word.groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
         F.sum(n_subtokens(F.col("w"))).alias("n_subword_tokens"),
@@ -262,7 +258,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken by fixed language order; 'und' (undetermined) when no
     marker hits at all."""
     docs = tables.load(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = token_array(F.col("text"))
     scored = docs.select(
         "doc_id",
         "lang",
@@ -288,7 +284,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> linear score in [0,1]. The classic cheap pre-filter for
     training-data pipelines."""
     docs = tables.load(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = token_array(F.col("text"))
     n_tok = F.size(toks)
     # NULL ratios (and hence NULL quality, by NULL propagation
     # through the linear blend) for docs the score cannot judge —
@@ -559,14 +555,12 @@ def _bpe_oracle_lazy() -> str | None:
     pinned by tests/test_bpe.py), so the thunk trains the same merges
     from the same word-frequency table (computed IN DuckDB with the
     SQL tokenizer the other textstats oracles already prove
-    equivalent to _toks), encodes every distinct corpus word with the
+    equivalent to token_array), encodes every distinct corpus word with the
     same greedy ranked-merge loop, and embeds the word ->
     n_subtokens map as a VALUES literal. The SQL then re-derives the
     per-doc aggregate relationally. Any failure degrades back to the
     rows-only check."""
-    import os
-
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         import duckdb
 

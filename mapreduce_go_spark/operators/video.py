@@ -384,7 +384,7 @@ def _vphash_oracle_lazy() -> str | None:
 
     import pyarrow.parquet as pq
 
-    sf_dir = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = tables.oracle_sf_dir()
     try:
         ids = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),

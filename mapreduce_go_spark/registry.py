@@ -14,10 +14,11 @@ query keys).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mapreduce_go_spark import tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -132,7 +133,7 @@ def all_oracles() -> dict[str, str]:
         # derived from the fixture data (PQ codebooks, k-means
         # centroids). A thunk returning None degrades that query to
         # the rows-only check; a thunk must not raise.
-        sf = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
+        sf = tables.oracle_sf_dir()
         for name, thunk in getattr(mod, "LAZY_ORACLES", {}).items():
             if name in merged:
                 raise ValueError(

@@ -437,9 +437,7 @@ def _apply_sql_confs(spark: SparkSession, n_shuffle: int) -> None:
     # zscore 0.25 -> 0.29). Batch size is value-invariant for every
     # kernel in this repo (per-row vectorized ops; GROUPED_AGG gets
     # whole groups regardless) — re-verified by the full oracle run.
-    # Env-overridable for cluster tuning without a code change.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1000"))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
     # NOTE: spark.python.sql.dataFrameDebugging.enabled (builder
     # config above) is a STATIC conf — it cannot be applied to an
     # already-active session here (CANNOT_MODIFY_STATIC_CONFIG), so

@@ -19,16 +19,14 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale
-# factor (region/nation are bounded by geography; supplier/part/customer
-# grow with sf but the *broadcastable* set at 100 TB is region+nation).
-SMALL_DIMS = ("region", "nation")
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def oracle_sf_dir() -> str:
+    """The fixture directory oracle thunks read (`$TEST_SF_DIR`, else
+    sf0.01), looked up at call time so a caller can set it first."""
+    return os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
-#: sessions (by applicationId) whose confs are already applied — a
-#: load_all() otherwise re-issued ~80 redundant conf RPCs (r13 review)
+#: sessions (by applicationId) whose confs are already applied
 _CONFED_SESSIONS: set[str] = set()
 
 
@@ -109,10 +107,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = normalize_event_ts(df)
         _LOAD_MEMO[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def spread(df: DataFrame) -> DataFrame:

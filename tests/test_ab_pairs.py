@@ -1,17 +1,11 @@
 """The gain rule of tools/ab_pairs.py on canned paired results: no
 Spark session, no benchmark run."""
 
-import importlib.util
 import json
-import os
 
 import pytest
 
-spec = importlib.util.spec_from_file_location(
-    "ab_pairs", os.path.join(os.path.dirname(__file__), "..", "tools",
-                             "ab_pairs.py"))
-ab_pairs = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(ab_pairs)
+from tools import ab_pairs
 
 PARENT = [5.4, 5.5, 5.3, 5.6, 5.5, 5.4, 5.7, 5.5, 5.6, 5.4]
 

@@ -116,6 +116,7 @@ def test_spark_query_matches_driver_recomputation(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapreduce_go_spark import tables
+    from mapreduce_go_spark.functions.text import token_array
     from mapreduce_go_spark.operators import textstats
 
     got = {r.doc_id: (r.n_words, r.n_subword_tokens)
@@ -124,7 +125,7 @@ def test_spark_query_matches_driver_recomputation(spark, sf_dir):
     ranks = textstats._bpe_merge_ranks(spark, sf_dir)
     docs = tables.load(spark, sf_dir, "documents")
     rows = docs.select(
-        "doc_id", textstats._toks(F.col("text")).alias("ts")).collect()
+        "doc_id", token_array(F.col("text")).alias("ts")).collect()
     for r in rows:
         n_sub = sum(len(bpe.encode_word(w, ranks)) for w in r.ts)
         assert got[r.doc_id] == (len(r.ts), n_sub), r.doc_id

@@ -1,12 +1,6 @@
 """tools/loc.py's blank / code / prose split on a fixed source string."""
 
-import importlib.util
-import os
-
-spec = importlib.util.spec_from_file_location(
-    "loc", os.path.join(os.path.dirname(__file__), "..", "tools", "loc.py"))
-loc = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(loc)
+from tools import loc
 
 SRC = '''"""Module docstring,
 over two lines."""

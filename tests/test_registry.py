@@ -83,15 +83,7 @@ def test_driver_window_is_curated():
     # window). The curated family list now lives in tools/rotation.py
     # (FAMILIES — one source of truth); this test asserts the shipped
     # window actually spans it.
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "rotation.py"))
-    rotation = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rotation)
+    from tools import rotation
     for fam in rotation.FAMILIES:
         assert any(rotation.in_family(n, fam)
                    for n in names[:50]), fam
@@ -115,15 +107,7 @@ def test_driver_window_matches_rotation_tool():
     window was generated from; the staleness assertion below bounds
     the lag to that one structural round, so a genuinely stale window
     (two or more rounds behind) still fails."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "rotation.py"))
-    rotation = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rotation)
+    from tools import rotation
 
     # staleness bound: the stamp may lag the newest on-disk
     # CORRECTNESS round by at most the one structural round

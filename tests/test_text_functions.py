@@ -18,9 +18,10 @@ this fails loudly instead of silently skewing a 100 TB corpus.
 import duckdb
 import pytest
 
+from mapreduce_go_spark import runner
 from mapreduce_go_spark.functions.text import (NON_LETTER_RE,
                                                UNICODE_NON_LETTER_RE,
-                                               explode_tokens)
+                                               token_rows)
 from pyspark.sql import functions as F
 
 # Each row exercises a distinct tokenizer hazard; comments give the
@@ -42,6 +43,11 @@ ROWS = [
     (13, "naïve café naïve 😀 café"),                  # combining-free accents
                                                        # + emoji separator
     (14, "Ａｂｃ Ａｂｃ ｄｅｆ"),                        # fullwidth Latin (L*)
+    (15, ""),                                          # empty text
+    (16, " ,.;!? -- "),                                # separators only
+    (17, "...edge words, edge!!"),                     # leading/trailing
+                                                       # separators
+    (18, "12345 678"),                                 # digits only
 ]
 
 
@@ -49,8 +55,7 @@ def _spark_counts(spark, pattern):
     df = spark.createDataFrame(ROWS, ["doc_id", "text"])
     return {
         (r.word, r.cnt)
-        for r in df.select(explode_tokens("text", pattern=pattern))
-        .where(F.col("word") != "")
+        for r in token_rows(df, alias="word", pattern=pattern)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .collect()
@@ -79,6 +84,10 @@ def test_tokenizer_cross_engine_parity_non_ascii(spark, pattern):
     s, d = _spark_counts(spark, pattern), _duck_counts(pattern)
     assert s == d, {"spark_only": sorted(s - d)[:10],
                     "duck_only": sorted(d - s)[:10]}
+    if pattern == NON_LETTER_RE:
+        seq = runner.run_sequential([(str(i), t) for i, t in ROWS],
+                                    runner.wc_map, runner.wc_reduce)
+        assert s == {(w, int(c)) for w, c in seq}
 
 
 def test_unicode_letter_semantics(spark):

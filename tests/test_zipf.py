@@ -9,41 +9,24 @@ test corpus is Zipf-distributed) and (a) verify the operators stay
 CORRECT there, (b) MEASURE the selectivity wins the 100 TB arguments
 rest on. Numbers recorded in SCALE.md (r13)."""
 
-import importlib.util
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_go_spark.functions.text import NON_LETTER_RE
-
-
-def _load_zipf_tool():
-    spec = importlib.util.spec_from_file_location(
-        "zipf_fixture",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "zipf_fixture.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from mapreduce_go_spark.functions.text import token_rows
+from tools import zipf_fixture
 
 
 @pytest.fixture(scope="module")
 def zipf_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("zipf_corpus")
-    return _load_zipf_tool().build(str(d))
+    return zipf_fixture.build(str(d))
 
 
 def _toks(spark, zipf_dir):
     from mapreduce_go_spark import tables
 
     docs = tables.load(spark, zipf_dir, "documents")
-    return (
-        docs.select("doc_id",
-                    F.explode(F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != "")
-        .distinct()
-    )
+    return token_rows(docs, "doc_id").distinct()
 
 
 def test_zipf_vocabulary_is_realistic(spark, zipf_dir):
@@ -141,9 +124,7 @@ def test_bm25_search_filter_is_a_sliver_under_zipf(spark, zipf_dir):
     assert all(r.score > 0 for r in out)
 
     docs = tables.load(spark, zipf_dir, "documents")
-    tok = (docs.select(F.explode(
-        F.split("text", NON_LETTER_RE)).alias("tok"))
-        .where(F.col("tok") != ""))
+    tok = token_rows(docs)
     total = tok.count()
     matched = tok.where(F.col("tok").isin(*SEARCH_TERMS)).count()
     assert matched > 0

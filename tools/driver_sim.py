@@ -24,25 +24,17 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.01")
-
 
 def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    import importlib.util
-
-    from mapreduce_go_spark import registry
+    from mapreduce_go_spark import registry, tables
     from tests.helpers import compare
+    # WINDOW: the authoritative seat count the registry test checks
+    from tools.rotation import WINDOW as window
 
-    # tools/ is not a package: load rotation by path for its WINDOW
-    # (the authoritative seat count the registry test checks against)
-    spec = importlib.util.spec_from_file_location(
-        "rotation", os.path.join(REPO, "tools", "rotation.py"))
-    rotation = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rotation)
-    window = rotation.WINDOW
+    sf_dir = tables.oracle_sf_dir()
 
     spark = (SparkSession.builder.master(
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
@@ -51,7 +43,7 @@ def main() -> int:
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{SF_DIR}/{t}.parquet'")
+                    f"'{sf_dir}/{t}.parquet'")
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()
@@ -63,7 +55,7 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = queries[name](spark, SF_DIR)
+            sdf = queries[name](spark, sf_dir)
             if name not in oracles:
                 n = sdf.count()
                 if not n:
