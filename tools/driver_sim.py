@@ -31,8 +31,7 @@ def main() -> int:
 
     from mapreduce_go_spark import registry, tables
     from tests.helpers import compare
-    # WINDOW: the authoritative seat count the registry test checks
-    from tools.rotation import WINDOW as window
+    from tools import rotation
 
     sf_dir = tables.oracle_sf_dir()
 
@@ -47,7 +46,9 @@ def main() -> int:
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()
-    names = list(queries)[:window]
+    # rotation.WINDOW: the authoritative seat count the registry test
+    # checks against
+    names = list(queries)[:rotation.WINDOW]
     if len(sys.argv) > 1 and sys.argv[1]:
         names = [n for n in sys.argv[1].split(",") if n]
 
