@@ -36,10 +36,13 @@ def register_udfs(spark: SparkSession) -> list[str]:
     of the reference's plugin registry, reachable from spark.sql).
     These are thin SQL-expression wrappers — they stay JVM-side and
     codegen-able, not Python UDFs."""
-    spark.sql("""
+    # The token rule of functions.text (NON_LETTER_RE, "" dropped).
+    from mapreduce_go_spark.functions.text import FP_WS, NON_LETTER_RE
+
+    spark.sql(f"""
         CREATE OR REPLACE TEMPORARY FUNCTION mrgs_tokens(t STRING)
         RETURNS ARRAY<STRING>
-        RETURN filter(split(t, '[^a-zA-Z]+'), x -> x != '')
+        RETURN filter(split(t, '{NON_LETTER_RE}'), x -> x != '')
     """)
     spark.sql("""
         CREATE OR REPLACE TEMPORARY FUNCTION mrgs_token_count(t STRING)
@@ -47,8 +50,6 @@ def register_udfs(spark: SparkSession) -> list[str]:
     """)
     # Same explicit whitespace class as functions.text.fingerprint
     # (FP_WS) — bare \s+ would make the SQL twin diverge on \x0B.
-    from mapreduce_go_spark.functions.text import FP_WS
-
     spark.sql(f"""
         CREATE OR REPLACE TEMPORARY FUNCTION mrgs_fingerprint(t STRING)
         RETURNS STRING

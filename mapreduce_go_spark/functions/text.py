@@ -51,9 +51,9 @@ def token_rows(df: DataFrame, *keep, text="text", alias: str = "tok",
             .where(F.col(alias) != ""))
 
 
-def token_array(text, pattern: str = NON_LETTER_RE) -> Column:
+def token_array(text) -> Column:
     """The tokens of `text` as an array, in order."""
-    return F.filter(F.split(text, pattern), lambda w: w != F.lit(""))
+    return F.filter(F.split(text, NON_LETTER_RE), lambda w: w != F.lit(""))
 
 
 def token_count(text) -> Column:
