@@ -67,7 +67,7 @@ def _assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     vectorized kernel (simd.make_centroid_assign) — identical values
     to the interpreted array_min(_dist_array_sql).i form (pinned in
     tests/test_simd.py), without the k x dim expression-tree walk per
-    row that dominated the trained-IVF scan at 10x (r11)."""
+    row that dominated the trained-IVF scan at 10x."""
     from mapreduce_go_spark.functions.simd import make_centroid_assign
 
     assign = make_centroid_assign(centroids)
@@ -82,7 +82,7 @@ def _assign_interpreted(emb: DataFrame,
     explicitly: the bare array_min form happens to return 0 for a
     NULL embedding (all-NULL distances tie-break to index 0), which
     is an accident, not a semantic — both forms now null-propagate
-    like every sibling kernel (ADVICE r11)."""
+    like every sibling kernel."""
     best = (f"CASE WHEN embedding IS NULL THEN NULL "
             f"ELSE array_min({_dist_array_sql(centroids)}).i END")
     return emb.selectExpr("*", f"{best} as cluster")
@@ -111,13 +111,12 @@ def _update(centroids: list[list[float]], sums_rows: dict,
 #   2. an on-disk JSON artifact under the WORKSPACE ROOT (not
 #      session_scratch, which is wiped at exit) — so a FRESH process
 #      (the driver bench, a new notebook) loads the codebook instead
-#      of re-running Lloyd's 4-job driver loop (VERDICT r11: driver
-#      measured 4.53 s vs the builder's warm 1.01 s for exactly this
-#      reason).
+#      of re-running Lloyd's 4-job driver loop (a fresh process
+#      measured 4.53 s vs a warm 1.01 s for exactly this reason).
 # Both tiers key on the full training configuration PLUS a content
 # key (mtime_ns:size of embeddings.parquet), so regenerating the
 # fixture in place — even within one interpreter — invalidates the
-# entry instead of serving stale centroids (ADVICE r11). Deterministic
+# entry instead of serving stale centroids. Deterministic
 # training makes the cache semantics-free: any rerun produces the
 # identical codebook (the _kmeans_twin bit-equality), and floats are
 # stored as float.hex() so the disk round-trip is bit-exact.
@@ -166,7 +165,7 @@ def _codebook_disk_load(path: str, cache_key: tuple):
         with open(path, encoding="utf-8") as f:
             doc = json.load(f)
         # valid JSON whose top level is not an object must hit the
-        # None-on-corruption contract, not AttributeError (r16 review)
+        # None-on-corruption contract, not AttributeError
         if not isinstance(doc, dict):
             return None
         if doc.get("key") != [str(p) for p in cache_key]:
@@ -201,7 +200,7 @@ def _codebook_disk_store(path: str, cache_key: tuple,
         os.replace(tmp, path)
     except OSError:
         # swallowed per contract, but don't leave the mkstemp file
-        # behind in the never-wiped codebooks dir (r16 review)
+        # behind in the never-wiped codebooks dir
         if tmp is not None:
             try:
                 os.unlink(tmp)
@@ -253,8 +252,8 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str,
     emb = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     # NULL embeddings carry no training signal and would crash the
-    # seed collect / silently vanish from the grid sums (r16 review —
-    # the PQ/IVF NULL-symmetry class); the twin filters identically
+    # seed collect / silently vanish from the grid sums (the PQ/IVF
+    # NULL-symmetry class); the twin filters identically
     emb = emb.where(F.col("embedding").isNotNull())
     if sample_frac is not None:
         emb = emb.where(
@@ -294,7 +293,7 @@ def kmeans_fit(spark: SparkSession, sf_dir: str,
     emb = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     # NULL embeddings are excluded symmetrically with the oracle's
-    # d IS NOT NULL assignment guard (r16 review): _assign would
+    # d IS NOT NULL assignment guard: _assign would
     # null-propagate them into a cluster-NULL group the oracle
     # cannot derive
     emb = emb.where(F.col("embedding").isNotNull())
@@ -304,7 +303,7 @@ def kmeans_fit(spark: SparkSession, sf_dir: str,
 
     # numpy pairwise sum, the IDENTICAL IEEE sequence the oracle's
     # (C[ci] ** 2).sum() runs — a Python left-fold can differ by an
-    # ulp and flip the 6dp round at a midpoint (r16 review)
+    # ulp and flip the 6dp round at a midpoint
     norms = [
         (ci, round(float((np.asarray(c, dtype=np.float64) ** 2)
                          .sum() ** 0.5), 6))
@@ -321,8 +320,8 @@ def kmeans_fit(spark: SparkSession, sf_dir: str,
 #: (training config + embeddings content key): five oracle builders
 #: share the trained twin per collection (trained/sampled/hamming/
 #: hybrid + the dashboard's probe counts), and re-reading + retraining
-#: per builder is exactly the duplicated work the r13 memo fix
-#: removed at the SQL layer (r14 review).
+#: per builder is exactly the duplicated work the oracle-thunk memo
+#: (similarity._SUB_THUNK_MEMO) removes at the SQL layer.
 _TWIN_CACHE: dict[tuple, tuple] = {}
 
 
@@ -367,8 +366,8 @@ def _kmeans_twin(sf_dir: str, k: int = K, iterations: int = ITERATIONS,
     ids = ids[order]
     rows = t.take(order).column("embedding").to_pylist()
     # mirror the Spark side's embedding IS NOT NULL training filter
-    # (r16 review: a None row makes np.asarray raise and silently
-    # degraded the oracle to rows-only)
+    # (a None row makes np.asarray raise, which would silently
+    # degrade the oracle to rows-only)
     valid = np.asarray([r is not None for r in rows])
     ids = ids[valid]
     X = np.asarray([r for r in rows if r is not None],
