@@ -261,7 +261,7 @@ def make_centroid_assign(centroids: list[list[float]]):
     vector — the dominant cost of the trained-IVF serving scan at
     10x, measured r11).
 
-    Exactness: identical arithmetic to kmeans._kmeans_twin's assign —
+    Exactness: identical arithmetic to kmeans._grid_assign —
     per-element _grid((x-c)^2 * 1e12) summed as exact int64
     (_grid_sum's overflow guard raises rather than wrapping), numpy
     first-argmin == the SQL struct-order (d, i) tie-break == the

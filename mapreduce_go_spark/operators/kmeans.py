@@ -1,29 +1,36 @@
-"""Distributed k-means over the embeddings table — iterative Lloyd's,
-now FULLY differentially checked (it used to be the rows-only
-category): every engine-visible quantity is computed on the 1e-12
-integer grid (the functions/simd.py rounding-parity discipline), so
-assignment argmins are exact int64 comparisons and the driver-side
-centroid updates are bit-identical to a Spark-free NumPy twin
-(`_kmeans_twin`). The lazy DuckDB oracle embeds the twin's final
-centroids as literals and recomputes the assignment + sizes in SQL —
-a full value-level differential, not a hash pin.
+"""k-means over the embeddings table: fixed-iteration Lloyd's on the
+exact 1e-12 integer grid (the functions/simd.py rounding-parity
+discipline), so assignment argmins are exact int64 comparisons and
+centroid updates are the same float64 sequence on every side.
+
+Two trainers run that one arithmetic:
+- kmeans_centroids, the Spark loop behind kmeans_fit: each iteration
+  is one assignment pass + one partial-aggregated groupBy, and only
+  k*dim grid-sum longs cross the driver per iteration. The reference
+  could express one iteration as a map (assign, needs the centroids
+  in every mapper — its analog of a broadcast) + reduce
+  (re-average); the driver loop is the chained-jobs idiom (SURVEY
+  §2.4 D14), and Spark collapses each iteration to one stage pair.
+- _lloyd, its Spark-free NumPy twin. kmeans_fit's lazy DuckDB oracle
+  embeds the twin's centroids over the whole table
+  (_kmeans_twin) as literals and recomputes the assignment + sizes
+  in SQL — a value-level differential, not a hash pin. ivf_codebook
+  trains the trained-IVF coarse quantizer with it on a bounded
+  sample (embedding_sample: the lowest TRAIN_CAP ids, the PQ
+  codebooks' sample too), the standard index-build shape, so
+  building an IVF query runs no training job and the query and its
+  oracle inline one codebook.
 
 Deterministic by construction: centroids initialize from the k lowest
 vec_ids, iterations are fixed-count, distances break ties by centroid
-index (array_min struct order / ORDER BY d, i / numpy first-argmin).
-Each iteration is one assignment pass + one partial-aggregated groupBy;
-only k*dim grid-sum longs cross the driver per iteration — the
-canonical scalable k-means shape (the per-iteration driver round-trip
-is inherent to synchronous Lloyd's: at production scale the loop cost
-is ITERATIONS small jobs, each all-to-driver traffic O(k * dim)).
-
-The reference could express one iteration as a map (assign, needs the
-centroids in every mapper — its analog of a broadcast) + reduce
-(re-average); the driver loop is the chained-jobs idiom (SURVEY §2.4
-D14). Spark collapses each iteration to one stage pair.
+index (array_min struct order / ORDER BY d, i / numpy first-argmin),
+and an empty cluster keeps its centroid. tests/test_kmeans.py pins
+the two trainers bit-identical.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -102,10 +109,9 @@ def _update(centroids: list[list[float]], sums_rows: dict,
     ]
 
 
-# Trained codebooks are CURATED ARTIFACTS, not per-query work: a
-# production IVF trains once and serves every query after (the
-# FAISS deployment shape — and the bucketed-layout amortization
-# discipline applied to model state). Two cache tiers:
+# kmeans_centroids' codebooks are CURATED ARTIFACTS, not per-query
+# work: trained once, served to every query after (the bucketed-layout
+# amortization discipline applied to model state). Two cache tiers:
 #   1. _CODEBOOK_CACHE — per-process dict, saves the py4j round-trips
 #      inside one session;
 #   2. an on-disk JSON artifact under the WORKSPACE ROOT (not
@@ -223,19 +229,15 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str,
                      ) -> list[list[float]]:
     """Train fixed-iteration Lloyd's over the embeddings table and
     return the k final centroids as plain float64 lists — the
-    codebook consumers inline as literals (kmeans_fit's sizes query,
-    similarity.ann_ivf_trained_topk's coarse quantizer). Bit-identical
-    to _kmeans_twin's NumPy centroids by the grid discipline, so a
-    LAZY oracle can embed the twin's centroids and reproduce any
-    downstream computation exactly. Cached per training config — in
-    process and on disk (see _CODEBOOK_CACHE).
+    codebook kmeans_fit's sizes query inlines as literals.
+    Bit-identical to _lloyd's NumPy centroids on the same rows by the
+    grid discipline, so a LAZY oracle can embed the twin's centroids
+    and reproduce any downstream computation exactly. Cached per
+    training config — in process and on disk (see _CODEBOOK_CACHE).
 
-    sample_frac: the 100 TB path (SCALE.md) — train on a deterministic
-    xxhash64(vec_id) subsample instead of every row (k-means centroid
-    quality needs a representative sample, not the population; FAISS
-    trains IVF codebooks on ~256 vectors/centroid). Assignment of the
-    FULL table to the returned centroids is unchanged. None = train on
-    everything (the differentially-checked registry path)."""
+    sample_frac: train on a deterministic xxhash64(vec_id) subsample
+    instead of every row; assignment of the FULL table to the
+    returned centroids is unchanged. None = train on everything."""
     import os
 
     ck = (os.path.abspath(sf_dir), k, iterations,
@@ -316,69 +318,90 @@ def kmeans_fit(spark: SparkSession, sf_dir: str,
     ).withColumn("centroid_norm", F.element_at(norm_map, F.col("cluster")))
 
 
-#: Memo for _kmeans_twin results, keyed like _CODEBOOK_CACHE
-#: (training config + embeddings content key): five oracle builders
-#: share the trained twin per collection (trained/sampled/hamming/
-#: hybrid + the dashboard's probe counts), and re-reading + retraining
-#: per builder is exactly the duplicated work the oracle-thunk memo
-#: (similarity._SUB_THUNK_MEMO) removes at the SQL layer.
-_TWIN_CACHE: dict[tuple, tuple] = {}
+#: Row bound of the training sample both ANN codebooks share: the
+#: trained-IVF coarse quantizer (8 cells x 256 vectors per centroid,
+#: the FAISS rule of thumb) and the PQ sub-codebooks
+#: (similarity._pq_codebooks). A constant, so training holds
+#: O(TRAIN_CAP * dim) floats on the driver at any corpus size.
+TRAIN_CAP = 2048
 
 
-def _kmeans_twin(sf_dir: str, k: int = K, iterations: int = ITERATIONS,
-                 sample_frac: float | None = None):
-    """Spark-free NumPy twin of kmeans_fit (memoized per training
-    config + fixture content key — see _TWIN_CACHE): same init, same grid
-    distances (simd._grid — bit-identical rounding to Spark round()
-    and DuckDB round()), same int64 sums (associative, so partial vs
-    single-level totals agree), same float64 centroid updates.
-    Returns (centroids, sizes) after `iterations` rounds + final
-    assignment. Reads the whole embeddings table — appropriate here:
-    this builds the ORACLE (DuckDB reads every row too), it is not a
-    production path.
+def embedding_sample(sf_dir: str, cap: int | None,
+                     sample_frac: float | None = None) -> np.ndarray:
+    """(n, dim) float64: the non-NULL embeddings of the lowest `cap`
+    vec_ids (None = every id) among those the optional
+    pmod(xxhash64(vec_id)) sample_frac mask keeps, in vec_id order.
 
-    sample_frac mirrors kmeans_centroids' deterministic
-    xxhash64(vec_id) training subsample bit-for-bit (the pure-Python
-    XXH64 twin in functions/xxhash.py, Spark parity pinned in
-    tests/test_xxhash.py): init and every Lloyd's round see only the
-    sampled rows, exactly like the Spark loop, so a LAZY oracle can
-    embed sampled-trained centroids too. `sizes` are then over the
-    TRAINING subset (the only set this twin's training saw); codebook
-    consumers (ann_ivf_sampled_topk's oracle) use only the centroids."""
+    Spark-free, and the one reader of training input: the PQ and IVF
+    codebooks train on it, and the NumPy twin reads the whole table
+    through it. Pass 1 reads only the vec_id column (8 bytes/row) and
+    picks the `cap` lowest ids; pass 2 reads embeddings through a
+    vec_id range pushed into the parquet scan, so ~`cap` embedding
+    rows are materialized. A NULL embedding carries no training
+    signal (the Spark loop drops it too) and is dropped before the
+    cap: each NULL in the range costs one more, smaller, range pass.
+    float32 widens exactly like Spark's row collector."""
     import os
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from mapreduce_go_spark.functions.simd import _grid, _grid_sum
     from mapreduce_go_spark.functions.xxhash import sample_mask
 
-    ck = (os.path.abspath(sf_dir), k, iterations,
-          "full" if sample_frac is None else repr(float(sample_frac)),
-          _embeddings_content_key(sf_dir))
-    cached = _TWIN_CACHE.get(ck)
-    if cached is not None:
-        C, sizes = cached
-        return C.copy(), dict(sizes)
-    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
-                      columns=["vec_id", "embedding"])
-    ids = t.column("vec_id").to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    rows = t.take(order).column("embedding").to_pylist()
-    # mirror the Spark side's embedding IS NOT NULL training filter
-    # (a None row makes np.asarray raise, which would silently
-    # degrade the oracle to rows-only)
-    valid = np.asarray([r is not None for r in rows])
-    ids = ids[valid]
-    X = np.asarray([r for r in rows if r is not None],
-                   dtype=np.float64)
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    ids = np.sort(pq.read_table(path, columns=["vec_id"])
+                  .column("vec_id").to_numpy(), kind="stable")
     if sample_frac is not None:
-        keep = np.asarray(sample_mask(ids, sample_frac, _SAMPLE_MOD))
-        X = X[keep]
-        if X.shape[0] < k:
-            raise ValueError(
-                f"kmeans twin: need >= {k} training vectors, sample "
-                f"has {X.shape[0]} (sample_frac={sample_frac})")
+        ids = ids[np.asarray(sample_mask(ids, sample_frac, _SAMPLE_MOD),
+                             dtype=bool)]
+    want = len(ids) if cap is None else cap
+    parts, n, lo = [], 0, 0
+    while n < want and lo < len(ids):
+        hi = min(lo + want - n, len(ids))
+        t = pq.read_table(path, columns=["vec_id", "embedding"],
+                          filters=[("vec_id", ">=", int(ids[lo])),
+                                   ("vec_id", "<=", int(ids[hi - 1]))])
+        t = t.filter(pc.and_(
+            pc.is_in(t["vec_id"], value_set=pa.array(ids[lo:hi])),
+            pc.is_valid(t["embedding"])))
+        parts.append(t)
+        n += t.num_rows
+        lo = hi
+    if not parts:
+        return np.empty((0, 0), dtype=np.float64)
+    t = pa.concat_tables(parts)
+    order = np.argsort(t.column("vec_id").to_numpy(), kind="stable")
+    return np.asarray(
+        t.take(order[:want]).column("embedding").to_pylist(),
+        dtype=np.float64)
+
+
+def _grid_assign(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid by the exact int64 grid
+    distance; numpy's first argmin is the struct/ORDER BY (d, i)
+    tie-break of the Spark and DuckDB sides."""
+    from mapreduce_go_spark.functions.simd import _grid_sum
+
+    d = _grid_sum(((X[:, None, :] - C[None, :, :]) ** 2) * _SCALE,
+                  axis=-1)
+    return d.argmin(1)
+
+
+def _lloyd(X: np.ndarray, k: int, iterations: int) -> np.ndarray:
+    """Fixed-iteration Lloyd's on the rows of X (vec_id order): the
+    same init (first k rows), grid distances (simd._grid, bit-identical
+    rounding to Spark round() and DuckDB round()), int64 grid sums
+    (associative, so partial vs single-level totals agree) and float64
+    updates as kmeans_centroids' Spark loop, so both return
+    bit-identical (k, dim) centroids on the same rows. An empty
+    cluster keeps its centroid."""
+    from mapreduce_go_spark.functions.simd import _grid
+
+    if X.shape[0] < k:
+        raise ValueError(
+            f"kmeans: need >= {k} training vectors, sample has "
+            f"{X.shape[0]}")
     C = X[:k].copy()
     XG = _grid(X * _SCALE)  # per-element grid image, summed per cluster
     # group-sum overflow guard (the _grid_sum bound, checked once for
@@ -390,23 +413,46 @@ def _kmeans_twin(sf_dir: str, k: int = K, iterations: int = ITERATIONS,
         raise ValueError(
             f"kmeans grid sums may overflow int64 (n={XG.shape[0]}, "
             f"max|grid|={_mx}): rescale _SCALE")
-
-    def assign(C):
-        d = _grid_sum(((X[:, None, :] - C[None, :, :]) ** 2) * _SCALE,
-                      axis=-1)
-        return d.argmin(1)  # first-min tie-break == struct/ORDER BY d,i
-
     for _ in range(iterations):
-        a = assign(C)
+        a = _grid_assign(X, C)
         for ci in range(k):
             m = a == ci
             if m.any():
                 C[ci] = XG[m].sum(0) / _SCALE / int(m.sum())
-    a = assign(C)
-    sizes = {ci: int((a == ci).sum()) for ci in range(k)
-             if (a == ci).any()}
-    _TWIN_CACHE[ck] = (C.copy(), dict(sizes))
-    return C, sizes
+    return C
+
+
+def ivf_codebook(sf_dir: str, k: int,
+                 sample_frac: float | None = None) -> np.ndarray:
+    """The trained-IVF coarse quantizer: (k, dim) read-only centroids
+    from ITERATIONS Lloyd's rounds on embedding_sample(TRAIN_CAP) —
+    Spark-free, so building an IVF query runs no training job, and the
+    query and its DuckDB oracle inline one codebook. Memoized per
+    process on the embeddings content key, like the PQ codebooks.
+    Equal to kmeans_centroids(k, sample_frac) whenever the sample
+    holds every non-NULL row, as at every fixture scale."""
+    return _ivf_codebook_cached(sf_dir, k, sample_frac,
+                                _embeddings_content_key(sf_dir))
+
+
+@lru_cache(maxsize=8)
+def _ivf_codebook_cached(sf_dir: str, k: int, sample_frac: float | None,
+                         _content_key: str) -> np.ndarray:
+    C = _lloyd(embedding_sample(sf_dir, TRAIN_CAP, sample_frac), k,
+               ITERATIONS)
+    C.setflags(write=False)  # shared by every caller
+    return C
+
+
+def _kmeans_twin(sf_dir: str, k: int = K, iterations: int = ITERATIONS):
+    """Spark-free NumPy twin of kmeans_fit over the whole table:
+    (centroids, sizes) after `iterations` _lloyd rounds + the final
+    assignment. Reads every non-NULL row — it builds the ORACLE
+    (DuckDB reads every row too), it is not a production path."""
+    X = embedding_sample(sf_dir, None)
+    C = _lloyd(X, k, iterations)
+    counts = np.bincount(_grid_assign(X, C), minlength=k)
+    return C, {ci: int(n) for ci, n in enumerate(counts) if n}
 
 
 def _kmeans_oracle_lazy() -> str | None:

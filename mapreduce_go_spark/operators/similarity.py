@@ -303,13 +303,13 @@ def _trained_probe(spark: SparkSession, sf_dir: str, nprobe: int,
     """(q_id, cluster): each query's `nprobe` nearest trained-IVF
     cells by exact grid distance (array_sort over (d, i) structs —
     all-integer, so the probe list is bit-identical cross-engine).
-    The codebook comes from the shared artifact cache, so this trains
-    at most once per fixture and codebook."""
+    The codebook is kmeans.ivf_codebook: trained in NumPy on the
+    bounded sample, at most once per process and codebook, with no
+    Spark job."""
     from mapreduce_go_spark.operators.kmeans import (
-        _dist_array_sql, kmeans_centroids)
+        _dist_array_sql, ivf_codebook)
 
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
-                                 sample_frac=sample_frac)
+    centroids = ivf_codebook(sf_dir, IVF_TRAINED_K, sample_frac)
     return tables.load(spark, sf_dir, "embeddings").where(
         f"vec_id < {N_QUERIES}").selectExpr(
         "vec_id as q_id",
@@ -322,11 +322,9 @@ def _gen_trained(spark: SparkSession, sf_dir: str, share=_inline,
                  sample_frac: float | None = None) -> _Cand:
     """Probe: the IVF_TRAINED_NPROBE trained cells nearest each query,
     over every vector's nearest-centroid assignment."""
-    from mapreduce_go_spark.operators.kmeans import (
-        _assign, kmeans_centroids)
+    from mapreduce_go_spark.operators.kmeans import _assign, ivf_codebook
 
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K,
-                                 sample_frac=sample_frac)
+    centroids = ivf_codebook(sf_dir, IVF_TRAINED_K, sample_frac)
     emb = tables.load(spark, sf_dir, "embeddings")
     probe = share(f"ivf_trained_{sample_frac}", lambda: _trained_probe(
         spark, sf_dir, IVF_TRAINED_NPROBE, sample_frac))
@@ -348,49 +346,49 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str,
     the family: ann_ivf_topk / ann_ivf_nprobe take their cells from
     the fixture `label` column; here the cells come from k-means
     centroids trained on the embeddings themselves
-    (kmeans.kmeans_centroids — Lloyd's on the exact 1e-12 integer
-    grid), which is what FAISS-style IVF actually deploys.
+    (kmeans.ivf_codebook — Lloyd's on the exact 1e-12 integer grid,
+    over a bounded sample), which is what FAISS-style IVF actually
+    deploys.
 
-    Pipeline: (1) train k=IVF_TRAINED_K centroids (driver loop,
-    O(k*dim) traffic per iteration); (2) assign every vector to its
+    Pipeline: (1) train k=IVF_TRAINED_K centroids (NumPy, driver-side,
+    no Spark job); (2) assign every vector to its
     nearest centroid by exact int64 grid distance (kmeans._assign —
     ties to the lowest index); (3) per query, probe the
     IVF_TRAINED_NPROBE nearest centroids by the SAME grid distance
     (_trained_probe); (4) exact grid-cosine top-k among candidates in
     the probed cells.
 
-    Exactness: centroids are bit-identical to the NumPy twin
-    (_kmeans_twin) by the kmeans grid discipline, so the LAZY oracle
-    embeds the twin's centroids as literals and re-derives assignment,
-    probe ranking and cosine in SQL — a full value-level differential
-    despite the data-derived codebook.
+    Exactness: the query and its LAZY oracle inline the same
+    Spark-free codebook (equal bit for bit to kmeans_centroids' Spark
+    loop on the same rows, pinned in tests/test_kmeans.py); the oracle
+    re-derives assignment, probe ranking and cosine in SQL — a full
+    value-level differential despite the data-derived codebook.
 
-    100 TB shape: training cost is ITERATIONS small jobs (at real
-    scale pass sample_frac to train on a deterministic xxhash64(vec_id)
-    subsample — the scan per iteration shrinks by 1/frac while
-    assignment of the full table is unchanged; recall floor vs full
-    training pinned in tests/test_approx.py); the trained codebook is
-    a persistent on-disk artifact (kmeans._codebook_disk_store), so
-    fresh processes load it instead of retraining; assignment is one
-    narrow map pass; the probe list is N_QUERIES*nprobe rows
-    broadcast; the candidate scan joins on the cell id."""
+    100 TB shape: training reads kmeans.TRAIN_CAP embedding rows
+    through a vec_id range pushed into the parquet scan (the PQ
+    codebooks' sample), so its cost does not grow with the corpus;
+    sample_frac draws those rows from a deterministic xxhash64(vec_id)
+    subsample instead (recall floor vs full training pinned in
+    tests/test_approx.py); assignment of the full table is one narrow
+    map pass; the probe list is N_QUERIES*nprobe rows broadcast; the
+    candidate scan joins on the cell id."""
     return _rerank(_gen_trained(spark, sf_dir, sample_frac=sample_frac))
 
 
 def ann_ivf_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_ivf_trained_topk on the 100 TB training path (SCALE.md):
     the coarse-quantizer codebook is trained on a deterministic
-    xxhash64(vec_id) half-sample instead of every row — FAISS-style
-    IVF trains on ~256 vectors/centroid, not the corpus — while
+    xxhash64(vec_id) half-sample: kmeans.ivf_codebook keeps the
+    lowest kmeans.TRAIN_CAP ids among the sampled ones, while
     ASSIGNMENT of the full table and the probe/score stages are
-    unchanged. Each Lloyd's iteration scans 1/frac less data.
+    unchanged.
 
-    Still a full value-level differential: the sampling predicate has
-    a pure-Python XXH64 twin (functions/xxhash.py, Spark parity
-    pinned bit-for-bit), so the NumPy training twin reproduces the
-    sampled codebook exactly and the LAZY oracle embeds it as
-    literals. Recall floor vs full training is pinned in
-    tests/test_approx.py."""
+    Still a full value-level differential: the sampling predicate is
+    the pure-Python XXH64 twin of Spark's xxhash64
+    (functions/xxhash.py, parity pinned bit-for-bit), so the codebook
+    equals kmeans_centroids(sample_frac=...)'s Spark loop, and the
+    LAZY oracle embeds the same codebook as literals. Recall floor vs
+    full training is pinned in tests/test_approx.py."""
     return ann_ivf_trained_topk(spark, sf_dir,
                                 sample_frac=IVF_SAMPLE_FRAC)
 
@@ -489,9 +487,9 @@ def _ivf_layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     of exactly this layout as the composed hybrid's dominant residual,
     so fixture queries price only what deployments pay per query."""
     from mapreduce_go_spark.operators.kmeans import (
-        _assign, _embeddings_content_key, kmeans_centroids)
+        _assign, _embeddings_content_key, ivf_codebook)
 
-    centroids = kmeans_centroids(spark, sf_dir, k=IVF_TRAINED_K)
+    centroids = ivf_codebook(sf_dir, IVF_TRAINED_K)
 
     def build(path: str) -> None:
         enc = _pq_encode_udf(_pq_codebooks(sf_dir))
@@ -542,10 +540,10 @@ def ann_ivf_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BQ_COARSE_C per query.
 
     Exactness: cell assignment and probe ranking are exact int64 grid
-    comparisons (the kmeans discipline — centroids bit-identical to
-    the NumPy twin), sign bits and Hamming are integers, tie-breaks
+    comparisons (the kmeans discipline — one Spark-free codebook for
+    query and oracle), sign bits and Hamming are integers, tie-breaks
     on (hamming, c_id), re-rank is the shared _topk — so the LAZY
-    oracle embeds the twin's centroids and re-derives every stage
+    oracle embeds the same centroids and re-derives every stage
     value-exactly (_ivf_hamming_oracle_sql)."""
     return _rerank(_gen_ivf_hamming(spark, sf_dir))
 
@@ -1153,7 +1151,6 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_M = 8          # subspaces (64-dim -> 8 sub-vectors of 8 dims)
 PQ_K = 16         # centroids per sub-codebook (4-bit codes)
 PQ_ITERS = 5      # fixed Lloyd iterations per sub-codebook
-PQ_TRAIN_CAP = 2048   # deterministic training sample row bound
 PQ_RERANK = 100   # ADC shortlist size re-ranked with exact cosine
 
 
@@ -1171,36 +1168,23 @@ def _pq_codebooks(sf_dir: str):
 
 @lru_cache(maxsize=4)
 def _pq_codebooks_cached(sf_dir: str, _content_key: str):
-    """Train M sub-codebooks with numpy Lloyd iterations on a bounded
-    deterministic sample (lowest PQ_TRAIN_CAP vec_ids, L2-normalized).
+    """Train M sub-codebooks with numpy Lloyd iterations on the
+    bounded training sample the IVF codebook shares
+    (kmeans.embedding_sample: the non-NULL embeddings of the lowest
+    kmeans.TRAIN_CAP vec_ids), L2-normalized.
 
-    Spark-free (pyarrow read of the sample): the SAME function builds
-    the codebook literals for the DuckDB oracle, so both engines score
-    against bitwise-identical centroids by construction. Bounded
-    driver traffic in two passes: pass 1 reads ONLY the vec_id column
-    (8 bytes/row) to find the PQ_TRAIN_CAP-th smallest id, pass 2
-    reads embeddings with a vec_id <= threshold predicate pushed into
-    the parquet scan — so only ~PQ_TRAIN_CAP embedding rows are ever
-    materialized, O(PQ_TRAIN_CAP * dim) floats, a fixed constant
-    independent of corpus size (faiss trains PQ the same way: a
-    bounded sample, never the corpus). Deterministic: sample choice,
-    init (first K sample rows per subspace), iteration count and
-    argmin tie-break (numpy takes the first minimum) are all fixed."""
-    import os
+    Spark-free: the SAME function builds the codebook literals for the
+    DuckDB oracle, so both engines score against bitwise-identical
+    centroids by construction. O(TRAIN_CAP * dim) floats on the
+    driver, a fixed constant independent of corpus size (faiss trains
+    PQ the same way: a bounded sample, never the corpus).
+    Deterministic: sample choice, init (first K sample rows per
+    subspace), iteration count and argmin tie-break (numpy takes the
+    first minimum) are all fixed."""
+    from mapreduce_go_spark.operators.kmeans import (
+        TRAIN_CAP, embedding_sample)
 
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    all_ids = pq.read_table(path, columns=["vec_id"]).column(
-        "vec_id").to_numpy()
-    thr = int(np.sort(all_ids, kind="stable")[
-        min(PQ_TRAIN_CAP, len(all_ids)) - 1])
-    t = pq.read_table(path, columns=["vec_id", "embedding"],
-                      filters=[("vec_id", "<=", thr)])
-    ids = t.column("vec_id").to_numpy()
-    order = np.argsort(ids, kind="stable")[:PQ_TRAIN_CAP]
-    X = np.asarray(t.take(order).column("embedding").to_pylist(),
-                   dtype=np.float64)
+    X = embedding_sample(sf_dir, TRAIN_CAP)
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     X = np.where(norms > 0, X / np.where(norms == 0, 1, norms), X)
     dim = X.shape[1]
@@ -2190,7 +2174,7 @@ def _ivf_rank_ctes(C) -> str:
     """The cb/elems0/dists/ranked CTE block shared by every
     trained-IVF-family oracle (trained, sampled, IVF-Hamming, the
     ANN-densed hybrid, and the dashboard's probe counts): centroid
-    literals from the NumPy twin + exact 1e-12 grid distances of
+    literals (kmeans.ivf_codebook) + exact 1e-12 grid distances of
     every vector to every centroid + the per-vector centroid ranking
     (ORDER BY d, i — the struct-order tie-break). No leading WITH, no
     leading comma — callers splice it."""
@@ -2307,9 +2291,9 @@ def _ivf_pq_oracle_sql(sf_dir: str) -> str:
     against the QUERY's sub-distance table — exactly the LUT gather),
     the (ad, c_id) shortlist, then the shared exact-cosine re-rank
     tail."""
-    from mapreduce_go_spark.operators.kmeans import _kmeans_twin
+    from mapreduce_go_spark.operators.kmeans import ivf_codebook
 
-    C, _sizes = _kmeans_twin(sf_dir, k=IVF_TRAINED_K)
+    C = ivf_codebook(sf_dir, IVF_TRAINED_K)
     CB = _pq_codebooks(sf_dir)
     return (_NORMS_SQL + "," + _ivf_rank_ctes(C) + f""",
     assign AS (SELECT vec_id, i AS cluster FROM ranked WHERE rn = 1),
@@ -2339,7 +2323,7 @@ def _ivf_pq_oracle_sql(sf_dir: str) -> str:
 
 def _ivf_pq_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_pq_topk — same contract as
-    _ivf_hamming_oracle_lazy (twin centroids + PQ codebooks trained at
+    _ivf_hamming_oracle_lazy (IVF + PQ codebooks trained at
     oracle-collection time from TEST_SF_DIR; failure -> rows-only)."""
     sf_dir = tables.oracle_sf_dir()
     try:
@@ -2350,12 +2334,12 @@ def _ivf_pq_oracle_lazy() -> str | None:
 
 def _ivf_hamming_oracle_sql(sf_dir: str) -> str:
     """DuckDB twin of ann_ivf_hamming_topk: the trained-centroid
-    ranking block (_ivf_rank_ctes — twin centroids as literals), the
+    ranking block (_ivf_rank_ctes — codebook centroids as literals), the
     assign/probe/Hamming/candidate block (_ivf_ham_cand_ctes), then
     the shared exact-cosine re-rank tail."""
-    from mapreduce_go_spark.operators.kmeans import _kmeans_twin
+    from mapreduce_go_spark.operators.kmeans import ivf_codebook
 
-    C, _sizes = _kmeans_twin(sf_dir, k=IVF_TRAINED_K)
+    C = ivf_codebook(sf_dir, IVF_TRAINED_K)
     return (_NORMS_SQL + "," + _ivf_rank_ctes(C)
             + _ivf_ham_cand_ctes("") + _CAND_RERANK_TAIL)
 
@@ -2366,9 +2350,9 @@ def _hybrid_ann_oracle_sql(sf_dir: str) -> str:
     feeds the exact candidate cosine ranked to the RRF_POOL dense
     pool, then the shared lexical/fusion tail (_RRF_LEX_FUSE_SQL —
     which owns the bare `cand` name, hence the prefix)."""
-    from mapreduce_go_spark.operators.kmeans import _kmeans_twin
+    from mapreduce_go_spark.operators.kmeans import ivf_codebook
 
-    C, _sizes = _kmeans_twin(sf_dir, k=IVF_TRAINED_K)
+    C = ivf_codebook(sf_dir, IVF_TRAINED_K)
     return (_NORMS_SQL + "," + _ivf_rank_ctes(C)
             + _ivf_ham_cand_ctes("b") + f""",
     bpairs AS (
@@ -2405,7 +2389,7 @@ def _hybrid_ann_oracle_sql(sf_dir: str) -> str:
 
 def _ivf_hamming_oracle_lazy() -> str | None:
     """LAZY oracle for ann_ivf_hamming_topk — same contract as
-    _ivf_trained_oracle_lazy (twin centroids trained at
+    _ivf_trained_oracle_lazy (IVF codebook trained at
     oracle-collection time from TEST_SF_DIR; failure -> rows-only)."""
     sf_dir = tables.oracle_sf_dir()
     try:
@@ -2427,17 +2411,15 @@ def _hybrid_ann_oracle_lazy() -> str | None:
 def _ivf_trained_oracle_sql(sf_dir: str,
                             sample_frac: float | None = None) -> str:
     """DuckDB twin of ann_ivf_trained_topk (and, with sample_frac, of
-    ann_ivf_sampled_topk): embeds the NumPy twin's centroids
-    (bit-identical to the Spark training loop by the kmeans grid
-    discipline; the sampled form also reproduces the xxhash64
-    training subsample via the pure-Python XXH64 twin) as literals,
+    ann_ivf_sampled_topk): embeds the query's own Spark-free
+    codebook (kmeans.ivf_codebook; the sampled form draws its sample
+    through the pure-Python XXH64 twin) as literals,
     re-derives the exact-grid assignment, the per-query nprobe cell
     ranking (ORDER BY d, i — the struct-order tie-break), and the
     shared product-grid cosine top-k."""
-    from mapreduce_go_spark.operators.kmeans import _kmeans_twin
+    from mapreduce_go_spark.operators.kmeans import ivf_codebook
 
-    C, _sizes = _kmeans_twin(sf_dir, k=IVF_TRAINED_K,
-                             sample_frac=sample_frac)
+    C = ivf_codebook(sf_dir, IVF_TRAINED_K, sample_frac)
     return _NORMS_SQL + "," + _ivf_rank_ctes(C) + f""",
     assign AS (SELECT vec_id, i AS cluster FROM ranked WHERE rn = 1),
     probed AS (
@@ -2502,8 +2484,8 @@ def _ivf_sampled_oracle_lazy() -> str | None:
 
 #: Per-(name, sf) memo for the artifact-backed thunks: the recall
 #: dashboard composes their SQL AND registry.all_oracles() evaluates
-#: each individually, so without a shared memo the heavy twins (IVF
-#: k-means training) would run twice per process (r13 review).
+#: each individually, so without a shared memo each oracle's SQL
+#: (codebook literals included) would be built twice per process.
 _SUB_THUNK_MEMO: dict[tuple[str, str], str | None] = {}
 
 
@@ -2530,8 +2512,8 @@ def _recall_oracle_lazy() -> str | None:
     joined/aggregated exactly like the Spark plan. The three
     artifact-backed variants' thunks are memoized per (name, sf)
     module-side — registry._LAZY_MEMO only covers its own top-level
-    evaluations, so without this the IVF k-means twin would train
-    TWICE per collection (r13 review). Any sub-thunk failure
+    evaluations, so without this each sub-oracle's SQL would be built
+    TWICE per collection. Any sub-thunk failure
     degrades the dashboard to rows-only."""
     oracles = dict(ORACLES)
     try:
@@ -2559,7 +2541,7 @@ def _recall_oracle_lazy() -> str | None:
     # (the recall/cost knob) hash-mismatches this seat.
     sf_dir = tables.oracle_sf_dir()
     try:
-        from mapreduce_go_spark.operators.kmeans import _kmeans_twin
+        from mapreduce_go_spark.operators.kmeans import ivf_codebook
 
         probe_rows = [
             f"SELECT 'ann_ivf_topk' AS variant, cast(count(*) AS bigint)"
@@ -2575,8 +2557,7 @@ def _recall_oracle_lazy() -> str | None:
                  IVF_TRAINED_NPROBE),
                 ("ann_ivf_hamming_topk", None, IVF_HAM_NPROBE),
                 ("ann_ivf_pq_topk", None, IVF_PQ_NPROBE)):
-            C, _sizes = _kmeans_twin(sf_dir, k=IVF_TRAINED_K,
-                                     sample_frac=frac)
+            C = ivf_codebook(sf_dir, IVF_TRAINED_K, frac)
             probe_rows.append(
                 f"SELECT '{vname}', cast(count(*) AS bigint)"
                 f" FROM (WITH {_ivf_rank_ctes(C).lstrip()}"

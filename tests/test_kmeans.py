@@ -6,8 +6,11 @@ tie rule) — and the grid arithmetic must not distort the semantics
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 
 from mapreduce_go_spark.operators import kmeans
+from mapreduce_go_spark.operators.similarity import (
+    IVF_SAMPLE_FRAC, IVF_TRAINED_K)
 
 
 def _round_half_away(p):
@@ -126,3 +129,100 @@ def test_codebook_sampled_training_is_distinct_and_deterministic(
     os.remove(kmeans._codebook_disk_path(ck))
     s2 = kmeans.kmeans_centroids(spark, sf_dir, sample_frac=0.5)
     assert s1 == s2
+
+
+def _write_embeddings(path, ids, X, null_ids=()):
+    """An embeddings.parquet with the fixture schema; rows whose id is
+    in `null_ids` get a NULL embedding."""
+    import pyarrow as pa
+
+    emb = [None if i in null_ids else [float(v) for v in x]
+           for i, x in zip(ids, X)]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array(emb, pa.list_(pa.float32())),
+        "label": pa.array([0] * len(ids), pa.int32()),
+    }), f"{path}/embeddings.parquet")
+
+
+def test_codebooks_train_past_a_null_embedding(tmp_path):
+    """A NULL embedding among the lowest TRAIN_CAP ids is dropped from
+    the shared training sample: the PQ codebooks (which used to raise
+    'inhomogeneous shape' on it) and the IVF codebook both train on
+    exactly the non-NULL rows — the same codebooks as on a file that
+    never held the NULL row."""
+    from mapreduce_go_spark.operators import similarity
+
+    rng = np.random.default_rng(3)
+    ids = list(range(300))
+    X = rng.standard_normal((300, 64)).astype(np.float32)
+    with_null, without = tmp_path / "with_null", tmp_path / "without"
+    with_null.mkdir()
+    without.mkdir()
+    _write_embeddings(with_null, ids, X, null_ids={5})
+    _write_embeddings(without, ids[:5] + ids[6:], np.delete(X, 5, 0))
+
+    assert (similarity._pq_codebooks(str(with_null))
+            == similarity._pq_codebooks(str(without))).all()
+    sample = kmeans.embedding_sample(str(with_null), kmeans.TRAIN_CAP)
+    assert sample.shape == (299, 64)
+    assert (sample == kmeans.embedding_sample(
+        str(without), kmeans.TRAIN_CAP)).all()
+    assert (kmeans.ivf_codebook(str(with_null), 8)
+            == kmeans.ivf_codebook(str(without), 8)).all()
+
+
+@pytest.mark.parametrize("sample_frac", [None, IVF_SAMPLE_FRAC])
+@pytest.mark.parametrize("k", [kmeans.K, IVF_TRAINED_K])
+def test_ivf_codebook_equals_spark_loop(spark, sf_dir, k, sample_frac):
+    """The Spark-free IVF trainer and kmeans_centroids' Spark Lloyd
+    loop return bit-identical centroids whenever the sample holds every
+    row (500 <= TRAIN_CAP at sf0.01), so moving the IVF queries to the
+    trainer changes no plan literal and no oracle."""
+    spark_c = np.asarray(kmeans.kmeans_centroids(
+        spark, sf_dir, k=k, sample_frac=sample_frac))
+    C = kmeans.ivf_codebook(sf_dir, k, sample_frac)
+    assert C.shape == spark_c.shape
+    assert (C == spark_c).all()
+
+
+def test_ivf_codebook_trains_on_the_lowest_cap_ids(spark, sf_dir,
+                                                   tmp_path, monkeypatch):
+    """With TRAIN_CAP below the table size the trainer equals the
+    Spark Lloyd loop run on a table of only the lowest TRAIN_CAP ids
+    — and differs from full training, so a trainer that ignored the
+    cap would fail here."""
+    cap = 40
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet").sort_by("vec_id")
+    pq.write_table(t.slice(0, cap), f"{tmp_path}/embeddings.parquet")
+    monkeypatch.setattr(kmeans, "TRAIN_CAP", cap)
+    kmeans._ivf_codebook_cached.cache_clear()
+    try:
+        C = kmeans.ivf_codebook(sf_dir, 8)
+    finally:
+        kmeans._ivf_codebook_cached.cache_clear()
+    want = np.asarray(kmeans.kmeans_centroids(spark, str(tmp_path), k=8))
+    assert (C == want).all()
+    full = np.asarray(kmeans.kmeans_centroids(spark, sf_dir, k=8))
+    assert not (C == full).all()
+
+
+def test_no_ivf_query_runs_the_spark_lloyd_loop(spark, sf_dir,
+                                                monkeypatch):
+    """Building every trained-IVF query, from a cold codebook cache,
+    never calls kmeans_centroids: the coarse quantizer is trained
+    Spark-free (ivf_codebook), so no training job runs at construct
+    time."""
+    from mapreduce_go_spark.operators import similarity
+
+    def spark_loop(*a, **kw):
+        raise AssertionError("an IVF query ran the Spark Lloyd loop")
+
+    monkeypatch.setattr(kmeans, "kmeans_centroids", spark_loop)
+    kmeans._ivf_codebook_cached.cache_clear()
+    for build in (similarity.ann_ivf_trained_topk,
+                  similarity.ann_ivf_sampled_topk,
+                  similarity.ann_ivf_hamming_topk,
+                  similarity.ann_ivf_pq_topk,
+                  similarity.ann_recall_dashboard):
+        assert build(spark, sf_dir).columns

@@ -140,9 +140,8 @@ def test_no_eager_actions_in_operators():
     adds a full extra scan per invocation). Allowlist: the iterative
     fixpoint loops (kmeans centroids, dedup label propagation), plus
     individual lines carrying the explicit `allow-bounded-collect`
-    marker (PQ codebook training: one PQ_TRAIN_CAP-row sample + the
-    N_QUERIES query vectors) — driver traffic O(k) or O(constant),
-    never O(data)."""
+    marker (a capped BPE vocabulary, a row of scalars) — driver
+    traffic O(k) or O(constant), never O(data)."""
     import pathlib
 
     allowed = {"kmeans.py", "dedup.py"}
