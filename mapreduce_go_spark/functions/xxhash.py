@@ -1,10 +1,11 @@
 """Pure-Python XXH64 twin of Spark's `xxhash64` for BIGINT columns.
 
 Spark's deterministic-sampling predicate
-``pmod(xxhash64(vec_id), M) < frac * M`` (kmeans.kmeans_centroids,
-the 100 TB sampled-training path) is cheap JVM-side but has no DuckDB
-analog, so a LAZY oracle that must reproduce the SAMPLE — not just the
-downstream math — needs a Spark-free twin of the hash itself. XXH64
+``pmod(xxhash64(vec_id), M) < frac * M`` (kmeans.kmeans_centroids'
+sampled training) is cheap JVM-side but has no DuckDB analog, so the
+Spark-free trainer (kmeans.embedding_sample) that must reproduce the
+SAMPLE — not just the downstream math — needs a twin of the hash
+itself. XXH64
 is a public, fully-specified algorithm (Yann Collet,
 https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md);
 Spark hashes a LongType column as the 8-byte little-endian value with
